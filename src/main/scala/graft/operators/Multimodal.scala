@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Multimodal columns (SURVEY.md M6): image/audio/video as opaque
@@ -16,10 +16,6 @@ import org.apache.spark.sql.functions._
   * sampler would on 100 TB of video.
   */
 object Multimodal {
-
-  /** Typed media container: opaque payload + declared metadata. */
-  def mediaStruct(data: Column, mime: Column): Column =
-    struct(data.as("data"), mime.as("mime"))
 
   /** Cheap container-level features — no decode required: byte size,
     * leading-bytes header (magic number), content id.

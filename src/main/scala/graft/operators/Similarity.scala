@@ -258,15 +258,6 @@ object Similarity {
   def autoNlist(n: Long, floorK: Int = 1): Int =
     math.max(floorK, math.floor(math.sqrt(n.toDouble) / 4 + 0.5).toInt)
 
-  /** [[ivfTopK]] with the [[autoNlist]] default path: callers that
-    * don't pin nlist get the corpus-sized sqrt(n) index instead of a
-    * fixed constant that stops scaling. The count is one column-pruned
-    * scan job (bounded driver state: a single long).
-    */
-  def ivfTopKAuto(queries: DataFrame, corpus: DataFrame, k: Int,
-      nprobe: Int = 4): DataFrame =
-    ivfTopK(queries, corpus, k, autoNlist(corpus.count(), k), nprobe)
-
   /** [[ivfSelfTopK]] over [[kmeansCentroids]] trained at the
     * [[autoNlist]] size — the auto-sized kNN-graph candidate route.
     * `corpus` should arrive STAGED (training, both candidate legs, and
@@ -278,12 +269,6 @@ object Similarity {
     ivfSelfTopK(corpus, Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters),
       "ivf_auto_centroids"), k, nprobe)
   }
-
-  /** [[ivfPqTopK]] with the [[autoNlist]] coarse-list default path. */
-  def ivfPqTopKAuto(queries: DataFrame, corpus: DataFrame, dims: Int,
-      nprobe: Int, m: Int, ksub: Int, iters: Int, topK: Int): DataFrame =
-    ivfPqTopK(queries, corpus, dims, autoNlist(corpus.count(), topK),
-      nprobe, m, ksub, iters, topK)
 
   /** Distributed k-means (Lloyd) over an embedding column — the
     * centroid-training step the IVF index calls for at production scale

@@ -67,8 +67,8 @@ object StreamingQueries {
     val p = Paths.get("/tmp/graft-stream-out",
       dir.replaceAll("[^A-Za-z0-9.]", "_"), name)
     if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
+      scala.util.Using.resource(Files.walk(p))(
+        _.sorted(Comparator.reverseOrder[java.nio.file.Path]()).forEach(f => Files.delete(f)))
     Files.createDirectories(p.getParent)
     p.toString
   }
@@ -76,9 +76,8 @@ object StreamingQueries {
   /** Stage each `parts(i)` as one single-file micro-batch source under a
     * fresh directory — explicit names AND strictly increasing mtimes so
     * the file source replays b0 < b1 < … regardless of its (mtime, path)
-    * tie rules. This is the replay fixture every multi-batch maintainer
-    * query drives `readStream.option("maxFilesPerTrigger", 1)` from; the
-    * whole staging runs inside [[graft.BenchMeters.fixture]] so the
+    * tie rules. This is the fixture [[replay]] drives its stream from;
+    * the whole staging runs inside [[graft.BenchMeters.fixture]] so the
     * bench stamps fixture time separately from measured maintenance.
     */
   private def stageBatchFiles(dir: String, name: String, parts: Seq[DataFrame]): String =
@@ -89,59 +88,94 @@ object StreamingQueries {
       Files.createDirectories(Paths.get(srcDir))
       // Stage the per-batch files CONCURRENTLY (guide §2.6 — overlap
       // independent jobs): each part is an independent single-file
-      // write to its own tmp dir, so submitting them from a small
-      // thread pool lets the next write's tasks back-fill the tail of
-      // the previous one instead of serializing three mostly-idle
-      // jobs. Move + mtime stamping stay per-future (each touches only
-      // its own b<i>.parquet); the staged REPLAY ORDER is carried by
-      // the deterministic mtimes, not by staging completion order.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val staged = parts.zipWithIndex.map { case (df, b) =>
-        Future {
-          val tmp = freshDir(dir, s"${name}_tmp$b")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = Files.list(Paths.get(tmp))
-            .filter(p => p.toString.endsWith(".parquet")).findFirst().get()
-          val dst = Paths.get(srcDir, s"b$b.parquet")
-          Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + b * 60000L))
-        }
-      }
-      staged.foreach(f => Await.result(f, Duration.Inf))
+      // write to its own tmp dir, so overlapping them lets the next
+      // write's tasks back-fill the tail of the previous one instead of
+      // serializing three mostly-idle jobs. Move + mtime stamping stay
+      // per-leg (each touches only its own b<i>.parquet); the staged
+      // REPLAY ORDER is carried by the deterministic mtimes, not by
+      // staging completion order.
+      overlap(parts.zipWithIndex.map[() => Unit] { case (df, b) => () =>
+        val tmp = freshDir(dir, s"${name}_tmp$b")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
+        val part = scala.util.Using.resource(Files.list(Paths.get(tmp)))(
+          _.filter(p => p.toString.endsWith(".parquet")).findFirst().get())
+        val dst = Paths.get(srcDir, s"b$b.parquet")
+        Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
+        Files.setLastModifiedTime(dst, FileTime.fromMillis(1700000000000L + b * 60000L))
+      }: _*)
       srcDir
     }
+
+  /** Replay `parts` through `body` as a file-source stream, batch by
+    * batch — the one statement of the versioned-state discipline every
+    * multi-batch maintainer here follows (operator state restored from
+    * consistent snapshots, Carbone et al., VLDB 2017; here the snapshots
+    * are immutable [[graft.streaming.VersionedStore]] versions).
+    *
+    * Contract: part b is staged as the single file of batch b
+    * ([[stageBatchFiles]]) and read back with the staged frame's own
+    * schema, `maxFilesPerTrigger=1`, under `Trigger.AvailableNow`, so
+    * `body(batch, b)` runs once per part, in part order. A store the
+    * body keeps reads version b−1 and writes version b
+    * ([[graft.streaming.VersionedStore.prior]] / `write`); the returned
+    * last batch id, `parts.size - 1`, names the final version. The id
+    * is checked against the last batch the body actually saw, so a
+    * replay that skipped or split a part fails HERE instead of later as
+    * a read of a missing store version. A body that throws fails the
+    * stream and this call.
+    */
+  private[queries] def replay(dir: String, name: String, parts: Seq[DataFrame])(
+      body: (DataFrame, Long) => Unit): Long = {
+    val srcDir = stageBatchFiles(dir, name, parts)
+    val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
+    parts.head.sparkSession.readStream.schema(parts.head.schema)
+      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId)
+        seen.set(batchId)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    val last = parts.size - 1L
+    if (seen.get != last) throw new IllegalStateException(
+      s"replay '$name' staged ${parts.size} parts, but its body last saw batch " +
+        s"${seen.get}; part b must replay as batch b")
+    last
+  }
 
   /** Run independent per-batch store actions CONCURRENTLY (guide §2.6;
     * r14 opt): a foreachBatch body that appends a result AND merges a
     * store pays two sequential jobs whose tails leave the executor idle —
-    * submitting them from futures lets the second job's tasks back-fill
-    * the first's stragglers, so the batch's wall tracks the slower job,
-    * not the sum. ONLY for actions with no mutual dependence (different
-    * output paths/stores; shared INPUT frames are safe — concurrent first
+    * overlapping them lets the second job's tasks back-fill the first's
+    * stragglers, so the batch's wall tracks the slower job, not the sum.
+    * ONLY for actions with no mutual dependence (different output
+    * paths/stores; shared INPUT frames are safe — concurrent first
     * consumers of a lazy checkpoint compute each block once under the
-    * block manager's lock). Failures propagate (Await rethrows).
+    * block manager's lock). The legs run on their own pool, one thread
+    * per leg, and EVERY leg finishes before the first failure (in leg
+    * order) is rethrown — so when the caller sees the error, no leg is
+    * still writing into a store directory.
     */
-  private def inParallel(tasks: (() => Unit)*): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    tasks.map(t => Future(t())).foreach(f => Await.result(f, Duration.Inf))
+  private[queries] def overlap(tasks: (() => Unit)*): Unit = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    val pool = Executors.newFixedThreadPool(math.max(1, tasks.size))
+    try {
+      val legs = tasks.map(t => pool.submit(new Callable[Unit] { def call(): Unit = t() }))
+      val failures = legs.flatMap { leg =>
+        try { leg.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
   }
 
-  /** The last batch id a [[stageBatchFiles]] directory will replay —
-    * derived from the ACTUAL staged file count, never hard-coded: with
-    * `maxFilesPerTrigger=1` under AvailableNow the file source assigns
-    * batch ids 0..nFiles-1, and a literal `2L` silently skips the
-    * end-of-stream flush (and reads a missing store version) the moment
-    * a split changes shape (r7 advice).
+  /** The arrival-order-free 3-way split: batch b holds the rows whose
+    * `key` is ≡ b (mod 3).
     */
-  private def lastBatchId(srcDir: String): Long = {
-    import java.nio.file.{Files, Paths}
-    Files.list(Paths.get(srcDir))
-      .filter(p => p.toString.endsWith(".parquet")).count() - 1
-  }
+  private def modSplit(df: DataFrame, key: String): Seq[DataFrame] =
+    (0 until 3).map(b => df.filter(col(key) % 3 === b))
 
   /** Split `df` into `n` COMPLETE, time-ordered batches by date
     * boundaries derived from the actual min/max of `dcol` — a total
@@ -1217,13 +1251,11 @@ object StreamingQueries {
   def streamCurate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
     val splits = freshDir(dir, "curate_src")
-    Tables.documents(s, dir).select("doc_id", "source", "text")
-      .repartitionByRange(3, col("doc_id"))
+    val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
+    docs.repartitionByRange(3, col("doc_id"))
       .write.mode("overwrite").parquet(splits)
     val store = freshDir(dir, "curate_store")
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("source", StringType), StructField("text", StringType))))
+    val batches = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1") // one batch per range split
       .parquet(splits)
     val q = batches.writeStream
@@ -1276,12 +1308,9 @@ object StreamingQueries {
     * multiplier = len(event_type) + (event_id mod 3).
     */
   def streamRules(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val srcDir = stageBatchFiles(dir, "rules",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
+    val srcDir = stageBatchFiles(dir, "rules", modSplit(ev, "event_id"))
     // versioned rules snapshots: the "slowly-changing dimension" the
     // pattern refreshes — multiplier drifts by +1 per version
     val rulesDir = freshDir(dir, "rules_dim")
@@ -1297,10 +1326,7 @@ object StreamingQueries {
       ev.filter(lit(false)).withColumn("adj", lit(0.0))
         .write.mode("overwrite").parquet(store)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("event_id", LongType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType))))
+    val batches = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
     val q = graft.streaming.BroadcastState.withBatchRules(
@@ -1335,15 +1361,10 @@ object StreamingQueries {
     * events with id mod 3 ≤ b.
     */
   def streamTimeTravel(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-    val srcDir = stageBatchFiles(dir, "tt",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
+    val srcDir = stageBatchFiles(dir, "tt", modSplit(ev, "event_id"))
     val store = freshDir(dir, "tt_store")
-    val src = s.readStream
-      .schema(StructType(Seq(StructField("event_id", LongType),
-        StructField("user_id", LongType), StructField("value", DoubleType))))
+    val src = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
     val agg = src.groupBy("user_id")
@@ -1379,9 +1400,8 @@ object StreamingQueries {
     * join, Jaccard ≥ 0.9 verify, min-keeper) and is THEN appended —
     * probe-before-append, so a doc can only match strictly earlier
     * batches, which is exactly what the oracle replays (batch id =
-    * doc_id mod 3; match requires db's batch < da's batch). Batch files
-    * carry forced ascending mtimes so the file source replays arrival
-    * order deterministically. The band INDEX is itself persisted — an
+    * doc_id mod 3; match requires db's batch < da's batch). The band
+    * INDEX is itself persisted — an
     * append-only (id, key) store probed via
     * [[graft.operators.Dedup.deltaMinHashKeepersWithIndex]] and
     * appended after, so a batch never recomputes signatures over the
@@ -1389,15 +1409,11 @@ object StreamingQueries {
     * the doc store serves only the verify phase of actual candidates.
     */
   def streamDeltaMinhash(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val recrawl = docs
       .filter(col("doc_id") % 100 === 1 && col("doc_id") % 3 === 1)
       .withColumn("doc_id", col("doc_id") + 1000000L)
     val all = docs.unionByName(recrawl)
-    val srcDir = stageBatchFiles(dir, "dmh",
-      (0 until 3).map(b => all.filter(col("doc_id") % 3 === b)))
     val docStore = freshDir(dir, "dmh_docs")
     val keyStore = freshDir(dir, "dmh_keys")
     val resDir = freshDir(dir, "dmh_res")
@@ -1409,43 +1425,33 @@ object StreamingQueries {
       s.range(0).select(col("id"), col("id").as("keeper"),
         lit(0.0).as("jacc")).write.mode("overwrite").parquet(resDir)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the PERSISTED band index is read, never recomputed — a
-        // batch's probe cost tracks the batch, not the store; the
-        // batch's OWN index is materialized once and serves both the
-        // probe and the store append (one minhash pass per batch).
-        // Appends are coalesced: each batch lands ONE file per store
-        // (the compaction discipline any streaming-ingest store needs —
-        // 32-way tiny appends would strangle the re-reads with file
-        // overhead long before data volume matters)
-        // lazy boundary (r13 opt): the batch index fans out to the probe
-        // and the store append; persist() materializes it inside the
-        // probe write instead of paying a dedicated localCheckpoint job
-        val idx = graft.operators.Dedup.bandIndex(batch).localCheckpoint(eager = false)
-        // the probe result and the two store appends write DISJOINT
-        // directories, and the probe's store reads pinned their file
-        // lists at construction (before any append lands) — overlap the
-        // three jobs so the tiny appends back-fill the probe join's
-        // tail (guide §2.6, r14 opt; probe-before-append semantics are
-        // preserved by the pinned listings)
-        val probe = graft.operators.Dedup.deltaMinHashKeepersWithIndex(
-          s.read.parquet(keyStore), s.read.parquet(docStore), batch,
-          deltaIndex = Some(idx))
-        inParallel(
-          () => probe.coalesce(1).write.mode("append").parquet(resDir),
-          () => idx.coalesce(1).write.mode("append").parquet(keyStore),
-          () => batch.coalesce(1).write.mode("append").parquet(docStore))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "dmh", modSplit(all, "doc_id")) { (batch, _) =>
+      // the PERSISTED band index is read, never recomputed — a
+      // batch's probe cost tracks the batch, not the store; the
+      // batch's OWN index is materialized once and serves both the
+      // probe and the store append (one minhash pass per batch).
+      // Appends are coalesced: each batch lands ONE file per store
+      // (the compaction discipline any streaming-ingest store needs —
+      // 32-way tiny appends would strangle the re-reads with file
+      // overhead long before data volume matters)
+      // lazy boundary (r13 opt): the batch index fans out to the probe
+      // and the store append; persist() materializes it inside the
+      // probe write instead of paying a dedicated localCheckpoint job
+      val idx = graft.operators.Dedup.bandIndex(batch).localCheckpoint(eager = false)
+      // the probe result and the two store appends write DISJOINT
+      // directories, and the probe's store reads pinned their file
+      // lists at construction (before any append lands) — overlap the
+      // three jobs so the tiny appends back-fill the probe join's
+      // tail (guide §2.6, r14 opt; probe-before-append semantics are
+      // preserved by the pinned listings)
+      val probe = graft.operators.Dedup.deltaMinHashKeepersWithIndex(
+        s.read.parquet(keyStore), s.read.parquet(docStore), batch,
+        deltaIndex = Some(idx))
+      overlap(
+        () => probe.coalesce(1).write.mode("append").parquet(resDir),
+        () => idx.coalesce(1).write.mode("append").parquet(keyStore),
+        () => batch.coalesce(1).write.mode("append").parquet(docStore))
+    }
     s.read.parquet(resDir).orderBy("id")
   }
 
@@ -1466,13 +1472,9 @@ object StreamingQueries {
     * (rounded cosine, smaller cid).
     */
   def streamKmeans(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     import graft.functions.GraftFunctions.cosine_double
     val k = 8
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val srcDir = stageBatchFiles(dir, "skm",
-      (0 until 3).map(b => emb.filter(col("vec_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "skm_store"))
     val resBase = freshDir(dir, "skm_res")
     // accumulator seed: vec_id < k enters with unit weight (a prior at
@@ -1481,47 +1483,37 @@ object StreamingQueries {
       .select(col("vec_id").cast("int").as("cid"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("i", "s")))
       .withColumn("n", lit(1L)))
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("embedding", ArrayType(FloatType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val acc = store.prior(batchId)
-        val cent = acc
-          .groupBy("cid")
-          .agg(sort_array(collect_list(struct(col("i"),
-            round(col("s") / col("n"), 6).as("c")))).as("pc"))
-          .select(col("cid"), transform(col("pc"), x => x.getField("c")).as("ce"))
-        val assigned = batch
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-          .join(broadcast(cent))
-          .select(col("vec_id"), col("e"), col("cid"),
-            round(cosine_double(col("e"), col("ce")), 6).as("cd"))
-          .groupBy("vec_id")
-          .agg(expr("max_by(cid, struct(cd, -cid))").as("cid"), first(col("e")).as("e"))
-          .localCheckpoint(eager = false)
-        val deltas = assigned
-          .select(col("cid"), posexplode(col("e")).as(Seq("i", "v")))
-          .groupBy("cid", "i").agg(sum("v").as("ds"), count(lit(1)).as("dn"))
-        // results versioned-OVERWRITE per batchId like the store, so a
-        // foreachBatch retry rewrites the same batch's rows instead of
-        // appending duplicates — the whole job is retry-idempotent; the
-        // two writes share only read-side frames and land on disjoint
-        // paths, so they overlap (guide §2.6, r14 opt)
-        inParallel(
-          () => store.write(batchId, acc.join(deltas, Seq("cid", "i"), "left")
-            .select(col("cid"), col("i"),
-              (col("s") + coalesce(col("ds"), lit(0.0))).as("s"),
-              (col("n") + coalesce(col("dn"), lit(0L))).as("n"))),
-          () => assigned.select(col("vec_id"), lit(batchId).as("bat"), col("cid"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$resBase/b$batchId"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "skm", modSplit(emb, "vec_id")) { (batch, batchId) =>
+      val acc = store.prior(batchId)
+      val cent = acc
+        .groupBy("cid")
+        .agg(sort_array(collect_list(struct(col("i"),
+          round(col("s") / col("n"), 6).as("c")))).as("pc"))
+        .select(col("cid"), transform(col("pc"), x => x.getField("c")).as("ce"))
+      val assigned = batch
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+        .join(broadcast(cent))
+        .select(col("vec_id"), col("e"), col("cid"),
+          round(cosine_double(col("e"), col("ce")), 6).as("cd"))
+        .groupBy("vec_id")
+        .agg(expr("max_by(cid, struct(cd, -cid))").as("cid"), first(col("e")).as("e"))
+        .localCheckpoint(eager = false)
+      val deltas = assigned
+        .select(col("cid"), posexplode(col("e")).as(Seq("i", "v")))
+        .groupBy("cid", "i").agg(sum("v").as("ds"), count(lit(1)).as("dn"))
+      // results versioned-OVERWRITE per batchId like the store, so a
+      // foreachBatch retry rewrites the same batch's rows instead of
+      // appending duplicates — the whole job is retry-idempotent; the
+      // two writes share only read-side frames and land on disjoint
+      // paths, so they overlap (guide §2.6, r14 opt)
+      overlap(
+        () => store.write(batchId, acc.join(deltas, Seq("cid", "i"), "left")
+          .select(col("cid"), col("i"),
+            (col("s") + coalesce(col("ds"), lit(0.0))).as("s"),
+            (col("n") + coalesce(col("dn"), lit(0L))).as("n"))),
+        () => assigned.select(col("vec_id"), lit(batchId).as("bat"), col("cid"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$resBase/b$batchId"))
+    }
     s.read.parquet(s"$resBase/b0", s"$resBase/b1", s"$resBase/b2")
       .select(col("vec_id"), col("bat").cast("long").as("bat"), col("cid").cast("int").as("cid"))
       .orderBy("vec_id")
@@ -1569,36 +1561,23 @@ object StreamingQueries {
     * shared oracle asserts.
     */
   def streamComponents(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts", "event_id")
     val edges = ev
       .select(col("event_id").as("a"), lag("event_id", 1).over(w).as("b"))
       .filter(col("b").isNotNull)
-    val srcDir = stageBatchFiles(dir, "scc",
-      (0 until 3).map(b => edges.filter(col("a") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "scc_store"))
     store.init(s.range(0).select(col("id").as("da"), col("id").as("db")))
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("a", LongType), StructField("b", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // delta-cost maintenance: the batch relabels into root space and
-        // only THAT contracts — history is one rewrite join, never a
-        // re-contraction (Components.incrementalForest)
-        store.write(batchId, graft.operators.Components.incrementalForest(
-          store.prior(batchId),
-          batch.select(col("a").as("da"), col("b").as("db"))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val forest = store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "scc", modSplit(edges, "a")) { (batch, batchId) =>
+      // delta-cost maintenance: the batch relabels into root space and
+      // only THAT contracts — history is one rewrite join, never a
+      // re-contraction (Components.incrementalForest)
+      store.write(batchId, graft.operators.Components.incrementalForest(
+        store.prior(batchId),
+        batch.select(col("a").as("da"), col("b").as("db"))))
+    }
+    val forest = store.version(lastId)
     ev.select(col("event_id").as("id"))
       .join(forest.select(col("da").as("id"), col("db").as("root")), Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("lbl"))
@@ -1622,31 +1601,17 @@ object StreamingQueries {
     * count-merge must be arrival-split-invisible.
     */
   def streamAnomaly(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sano",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)
-        .select(col("event_type"), date_trunc("hour", col("ts")).as("h"))))
+    val parts = modSplit(ev, "event_id")
+      .map(_.select(col("event_type"), date_trunc("hour", col("ts")).as("h")))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sano_store"))
     store.init(s.range(0).select(col("id").cast("string").as("event_type"),
       col("id").cast("timestamp").as("h"), col("id").as("cnt")))
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("h", TimestampType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId)
-          .unionByName(batch.groupBy("event_type", "h").agg(count(lit(1)).as("cnt")))
-          .groupBy("event_type", "h").agg(sum("cnt").as("cnt")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val hc = store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sano", parts) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId,
+        batch.groupBy("event_type", "h").agg(count(lit(1)).as("cnt")), "event_type", "h"))
+    }
+    val hc = store.version(lastId)
       .select(col("event_type"), col("h"), col("cnt").cast("long").as("cnt"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy("h").rowsBetween(-24, -1)
@@ -1679,46 +1644,35 @@ object StreamingQueries {
     * matrix verbatim.
     */
   def streamTransitions(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val srcDir = stageBatchFiles(dir, "str", daySplits(ev, col("ts"), 3))
     val countStore = graft.streaming.VersionedStore(s, freshDir(dir, "str_store_c"))
     val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "str_store_l"))
     countStore.init(s.range(0).select(col("id").cast("string").as("from_type"),
       col("id").cast("string").as("to_type"), col("id").as("n")))
     lastStore.init(ev.limit(0))
-    val batches = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorC = countStore.prior(batchId)
-        val priorL = lastStore.prior(batchId)
-        // prior last-events join the sequence so each boundary pair
-        // counts exactly once; they have no predecessor in this batch
-        val all = batch.unionByName(priorL).localCheckpoint(eager = false)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("ts", "event_id")
-        val trans = all
-          .withColumn("next_type", lead("event_type", 1).over(w))
-          .filter(col("next_type").isNotNull)
-          .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
-          .agg(count(lit(1)).as("n"))
-        inParallel(
-          () => countStore.write(batchId, priorC.unionByName(trans)
-            .groupBy("from_type", "to_type").agg(sum("n").as("n"))),
-          () => lastStore.write(batchId, all
-            .groupBy("user_id")
-            .agg(expr("max_by(struct(ts, event_id, event_type), struct(ts, event_id))").as("m"))
-            .select(col("user_id"), col("m.ts").as("ts"),
-              col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    countStore.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "str", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val priorL = lastStore.prior(batchId)
+      // prior last-events join the sequence so each boundary pair
+      // counts exactly once; they have no predecessor in this batch
+      val all = batch.unionByName(priorL).localCheckpoint(eager = false)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("ts", "event_id")
+      val trans = all
+        .withColumn("next_type", lead("event_type", 1).over(w))
+        .filter(col("next_type").isNotNull)
+        .groupBy(col("event_type").as("from_type"), col("next_type").as("to_type"))
+        .agg(count(lit(1)).as("n"))
+      overlap(
+        () => countStore.write(batchId,
+          countStore.sumMerge(batchId, trans, "from_type", "to_type")),
+        () => lastStore.write(batchId, all
+          .groupBy("user_id")
+          .agg(expr("max_by(struct(ts, event_id, event_type), struct(ts, event_id))").as("m"))
+          .select(col("user_id"), col("m.ts").as("ts"),
+            col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))))
+    }
+    countStore.version(lastId)
       .withColumn("n", col("n").cast("long"))
       .withColumn("p", round(col("n").cast("double")
         / sum("n").over(org.apache.spark.sql.expressions.Window.partitionBy("from_type")), 6))
@@ -1742,40 +1696,30 @@ object StreamingQueries {
   def streamPaths(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val srcDir = stageBatchFiles(dir, "spath", daySplits(ev, col("ts"), 3))
     val countStore = graft.streaming.VersionedStore(s, freshDir(dir, "spath_store_c"))
     val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "spath_store_l"))
     countStore.init(s.range(0).select(col("id").cast("string").as("path"), col("id").as("n")))
     lastStore.init(ev.limit(0))
-    val batches = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorC = countStore.prior(batchId)
-        val priorL = lastStore.prior(batchId)
-        val all = batch.unionByName(priorL).localCheckpoint(eager = false)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("ts", "event_id")
-        val tri = all
-          .withColumn("t2", lead("event_type", 1).over(w))
-          .withColumn("t3", lead("event_type", 2).over(w))
-          .filter(col("t3").isNotNull)
-          .groupBy(concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
-          .agg(count(lit(1)).as("n"))
-        val wDesc = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
-        inParallel(
-          () => countStore.write(batchId, priorC.unionByName(tri)
-            .groupBy("path").agg(sum("n").as("n"))),
-          () => lastStore.write(batchId, all
-            .withColumn("rn", row_number().over(wDesc))
-            .filter(col("rn") <= 2).drop("rn")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    countStore.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "spath", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val priorL = lastStore.prior(batchId)
+      val all = batch.unionByName(priorL).localCheckpoint(eager = false)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("ts", "event_id")
+      val tri = all
+        .withColumn("t2", lead("event_type", 1).over(w))
+        .withColumn("t3", lead("event_type", 2).over(w))
+        .filter(col("t3").isNotNull)
+        .groupBy(concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
+        .agg(count(lit(1)).as("n"))
+      val wDesc = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("ts").desc, col("event_id").desc)
+      overlap(
+        () => countStore.write(batchId, countStore.sumMerge(batchId, tri, "path")),
+        () => lastStore.write(batchId, all
+          .withColumn("rn", row_number().over(wDesc))
+          .filter(col("rn") <= 2).drop("rn")))
+    }
+    countStore.version(lastId)
       .orderBy(col("n").desc, col("path"))
       .limit(25)
       .select(col("path"), col("n").cast("long").as("n"))
@@ -1795,49 +1739,39 @@ object StreamingQueries {
     * funnel verbatim.
     */
   def streamFunnel(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_type"))
       .filter(col("event_type").isin("view", "click", "purchase"))
-    val srcDir = stageBatchFiles(dir, "sfun", daySplits(ev, col("ts"), 3))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sfun_store"))
     store.init(s.range(0).select(col("id").as("user_id"),
       lit(null).cast("timestamp").as("t1"), lit(null).cast("timestamp").as("t2"),
       lit(null).cast("timestamp").as("t3")))
-    val batches = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
     def mergeMin(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       coalesce(least(a, b), a, b)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = store.prior(batchId)
-        val bt = batch.localCheckpoint(eager = false)
-        val pv = bt.filter(col("event_type") === "view")
-          .groupBy("user_id").agg(min("ts").as("bv"))
-        val m1 = prior.join(pv, Seq("user_id"), "full")
-          .select(col("user_id"), mergeMin(col("t1"), col("bv")).as("t1"),
-            col("t2"), col("t3")).localCheckpoint(eager = false)
-        val pc = bt.filter(col("event_type") === "click")
-          .join(m1.filter(col("t1").isNotNull).select("user_id", "t1"), "user_id")
-          .filter(col("ts") > col("t1"))
-          .groupBy("user_id").agg(min("ts").as("bc"))
-        val m2 = m1.join(pc, Seq("user_id"), "left")
-          .select(col("user_id"), col("t1"), mergeMin(col("t2"), col("bc")).as("t2"),
-            col("t3")).localCheckpoint(eager = false)
-        val pp = bt.filter(col("event_type") === "purchase")
-          .join(m2.filter(col("t2").isNotNull).select("user_id", "t2"), "user_id")
-          .filter(col("ts") > col("t2"))
-          .groupBy("user_id").agg(min("ts").as("bp"))
-        store.write(batchId, m2.join(pp, Seq("user_id"), "left")
-          .select(col("user_id"), col("t1"), col("t2"),
-            mergeMin(col("t3"), col("bp")).as("t3")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val st = store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sfun", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val bt = batch.localCheckpoint(eager = false)
+      val pv = bt.filter(col("event_type") === "view")
+        .groupBy("user_id").agg(min("ts").as("bv"))
+      val m1 = prior.join(pv, Seq("user_id"), "full")
+        .select(col("user_id"), mergeMin(col("t1"), col("bv")).as("t1"),
+          col("t2"), col("t3")).localCheckpoint(eager = false)
+      val pc = bt.filter(col("event_type") === "click")
+        .join(m1.filter(col("t1").isNotNull).select("user_id", "t1"), "user_id")
+        .filter(col("ts") > col("t1"))
+        .groupBy("user_id").agg(min("ts").as("bc"))
+      val m2 = m1.join(pc, Seq("user_id"), "left")
+        .select(col("user_id"), col("t1"), mergeMin(col("t2"), col("bc")).as("t2"),
+          col("t3")).localCheckpoint(eager = false)
+      val pp = bt.filter(col("event_type") === "purchase")
+        .join(m2.filter(col("t2").isNotNull).select("user_id", "t2"), "user_id")
+        .filter(col("ts") > col("t2"))
+        .groupBy("user_id").agg(min("ts").as("bp"))
+      store.write(batchId, m2.join(pp, Seq("user_id"), "left")
+        .select(col("user_id"), col("t1"), col("t2"),
+          mergeMin(col("t3"), col("bp")).as("t3")))
+    }
+    val st = store.version(lastId)
     val counts = st.agg(count(col("t1")).as("n"))
       .select(lit(1).as("step"), lit("view").as("name"), col("n"))
       .unionAll(st.agg(count(col("t2")).as("n"))
@@ -1866,52 +1800,39 @@ object StreamingQueries {
     * batch attribution verbatim.
     */
   def streamAttribution(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-    val srcDir = stageBatchFiles(dir, "satt", daySplits(ev, col("ts"), 3))
     val revStore = graft.streaming.VersionedStore(s, freshDir(dir, "satt_store_r"))
     val touchStore = graft.streaming.VersionedStore(s, freshDir(dir, "satt_store_t"))
     revStore.init(s.range(0).select(col("id").cast("string").as("channel"),
       col("id").as("n_purchases"), col("id").cast("double").as("revenue")))
     touchStore.init(ev.limit(0))
-    val batches = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorR = revStore.prior(batchId)
-        val priorT = touchStore.prior(batchId)
-        val all = batch.withColumn("carry", lit(false))
-          .unionByName(priorT.withColumn("carry", lit(true)))
-          .localCheckpoint(eager = false)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("ts", "event_id")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-        val credited = all
-          .withColumn("channel", coalesce(
-            last(when(col("event_type") =!= "purchase", col("event_type")),
-              ignoreNulls = true).over(w),
-            lit("direct")))
-          .filter(!col("carry") && col("event_type") === "purchase")
-          .groupBy("channel")
-          .agg(count(lit(1)).as("n_purchases"), sum("value").as("revenue"))
-        inParallel(
-          () => revStore.write(batchId, priorR.unionByName(credited)
-            .groupBy("channel")
-            .agg(sum("n_purchases").as("n_purchases"), sum("revenue").as("revenue"))),
-          () => touchStore.write(batchId, all
-            .filter(col("event_type") =!= "purchase")
-            .groupBy("user_id")
-            .agg(expr("max_by(struct(ts, event_id, event_type, value), struct(ts, event_id))").as("m"))
-            .select(col("user_id"), col("m.ts").as("ts"), col("m.event_id").as("event_id"),
-              col("m.event_type").as("event_type"), col("m.value").as("value"))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    revStore.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "satt", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val priorT = touchStore.prior(batchId)
+      val all = batch.withColumn("carry", lit(false))
+        .unionByName(priorT.withColumn("carry", lit(true)))
+        .localCheckpoint(eager = false)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("ts", "event_id")
+        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+      val credited = all
+        .withColumn("channel", coalesce(
+          last(when(col("event_type") =!= "purchase", col("event_type")),
+            ignoreNulls = true).over(w),
+          lit("direct")))
+        .filter(!col("carry") && col("event_type") === "purchase")
+        .groupBy("channel")
+        .agg(count(lit(1)).as("n_purchases"), sum("value").as("revenue"))
+      overlap(
+        () => revStore.write(batchId, revStore.sumMerge(batchId, credited, "channel")),
+        () => touchStore.write(batchId, all
+          .filter(col("event_type") =!= "purchase")
+          .groupBy("user_id")
+          .agg(expr("max_by(struct(ts, event_id, event_type, value), struct(ts, event_id))").as("m"))
+          .select(col("user_id"), col("m.ts").as("ts"), col("m.event_id").as("event_id"),
+            col("m.event_type").as("event_type"), col("m.value").as("value"))))
+    }
+    revStore.version(lastId)
       .select(col("channel"), col("n_purchases").cast("long").as("n_purchases"),
         round(col("revenue"), 2).as("revenue"))
       .orderBy("channel")
@@ -1929,41 +1850,31 @@ object StreamingQueries {
     * cohort table; oracle = the batch retention query verbatim.
     */
   def streamRetention(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val days = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val srcDir = stageBatchFiles(dir, "sret", daySplits(days, col("d"), 3))
     val firstStore = graft.streaming.VersionedStore(s, freshDir(dir, "sret_store_f"))
     val pairStore = graft.streaming.VersionedStore(s, freshDir(dir, "sret_store_p"))
     firstStore.init(s.range(0).select(col("id").as("user_id"),
       lit(null).cast("date").as("d0")))
     pairStore.init(s.range(0).select(col("id").as("user_id"), col("id").as("week_offset")))
-    val batches = s.readStream.schema(days.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorF = firstStore.prior(batchId)
-        val priorP = pairStore.prior(batchId)
-        // cohort = stored first day, else the batch's own min (a user's
-        // first-ever sighting, since batches arrive in time order)
-        val firsts = priorF
-          .unionByName(batch.groupBy("user_id").agg(min("d").as("d0")))
-          .groupBy("user_id").agg(min("d0").as("d0"))
-          .localCheckpoint(eager = false)
-        val pairs = batch.join(firsts, "user_id")
-          .select(col("user_id"),
-            expr("datediff(d, d0) div 7").as("week_offset"))
-        inParallel(
-          () => pairStore.write(batchId, priorP.unionByName(pairs).distinct()),
-          () => firstStore.write(batchId, firsts))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    pairStore.version(lastBatchId(srcDir))
-      .join(firstStore.version(lastBatchId(srcDir)), "user_id")
+    val lastId = replay(dir, "sret", daySplits(days, col("d"), 3)) { (batch, batchId) =>
+      val priorF = firstStore.prior(batchId)
+      val priorP = pairStore.prior(batchId)
+      // cohort = stored first day, else the batch's own min (a user's
+      // first-ever sighting, since batches arrive in time order)
+      val firsts = priorF
+        .unionByName(batch.groupBy("user_id").agg(min("d").as("d0")))
+        .groupBy("user_id").agg(min("d0").as("d0"))
+        .localCheckpoint(eager = false)
+      val pairs = batch.join(firsts, "user_id")
+        .select(col("user_id"),
+          expr("datediff(d, d0) div 7").as("week_offset"))
+      overlap(
+        () => pairStore.write(batchId, priorP.unionByName(pairs).distinct()),
+        () => firstStore.write(batchId, firsts))
+    }
+    pairStore.version(lastId)
+      .join(firstStore.version(lastId), "user_id")
       .groupBy(col("d0").cast("string").as("cohort_start"),
         col("week_offset"))
       .agg(count_distinct(col("user_id")).as("n_users"))
@@ -1985,60 +1896,49 @@ object StreamingQueries {
     * batches and the deferred churn emission must be invisible.
     */
   def streamGrowth(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val days = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val srcDir = stageBatchFiles(dir, "sgr", daySplits(days, col("d"), 3))
-    val lastBatch = lastBatchId(srcDir)
+    val splits = daySplits(days, col("d"), 3)
+    val lastBatch = splits.size - 1L
     val countStore = graft.streaming.VersionedStore(s, freshDir(dir, "sgr_store_c"))
     val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "sgr_store_l"))
     countStore.init(s.range(0).select(lit(null).cast("date").as("day"),
       col("id").cast("string").as("state"), col("id").as("n")))
     lastStore.init(days.limit(0))
-    val batches = s.readStream.schema(days.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorC = countStore.prior(batchId)
-        val priorL = lastStore.prior(batchId)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("d")
-        // prior last-day joins the per-user sequence (flagged so it does
-        // not re-classify itself) — each arrival sees its true prev
-        val all = batch.withColumn("carry", lit(false))
-          .unionByName(priorL.withColumn("carry", lit(true)))
-          .localCheckpoint(eager = false)
-        val seq0 = all.withColumn("prev", lag("d", 1).over(w))
-        val states = seq0.filter(!col("carry"))
-          .select(col("d").as("day"),
-            when(col("prev").isNull, "new_users")
-              .when(datediff(col("d"), col("prev")) === 1, "retained")
-              .otherwise("resurrected").as("state"))
-        // churn surfaces at prev+1 the moment an arrival exposes a gap
-        val churnSeen = seq0.filter(!col("carry") && col("prev").isNotNull
-            && datediff(col("d"), col("prev")) > 1)
-          .select(date_add(col("prev"), 1).as("day"), lit("churned").as("state"))
-        val newLast = all.groupBy("user_id").agg(max("d").as("d")).localCheckpoint(eager = false)
-        // end-of-stream flush: every user churns the day after their
-        // final activity (the batch query's `nxt IS NULL` leg)
-        val churnFlush =
-          if (batchId == lastBatch)
-            newLast.select(date_add(col("d"), 1).as("day"), lit("churned").as("state"))
-          else s.range(0).select(lit(null).cast("date").as("day"),
-            col("id").cast("string").as("state"))
-        val delta = states.unionByName(churnSeen).unionByName(churnFlush)
-          .groupBy("day", "state").agg(count(lit(1)).as("n"))
-        inParallel(
-          () => countStore.write(batchId, priorC.unionByName(delta)
-            .groupBy("day", "state").agg(sum("n").as("n"))),
-          () => lastStore.write(batchId, newLast))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    countStore.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sgr", splits) { (batch, batchId) =>
+      val priorL = lastStore.prior(batchId)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("d")
+      // prior last-day joins the per-user sequence (flagged so it does
+      // not re-classify itself) — each arrival sees its true prev
+      val all = batch.withColumn("carry", lit(false))
+        .unionByName(priorL.withColumn("carry", lit(true)))
+        .localCheckpoint(eager = false)
+      val seq0 = all.withColumn("prev", lag("d", 1).over(w))
+      val states = seq0.filter(!col("carry"))
+        .select(col("d").as("day"),
+          when(col("prev").isNull, "new_users")
+            .when(datediff(col("d"), col("prev")) === 1, "retained")
+            .otherwise("resurrected").as("state"))
+      // churn surfaces at prev+1 the moment an arrival exposes a gap
+      val churnSeen = seq0.filter(!col("carry") && col("prev").isNotNull
+          && datediff(col("d"), col("prev")) > 1)
+        .select(date_add(col("prev"), 1).as("day"), lit("churned").as("state"))
+      val newLast = all.groupBy("user_id").agg(max("d").as("d")).localCheckpoint(eager = false)
+      // end-of-stream flush: every user churns the day after their
+      // final activity (the batch query's `nxt IS NULL` leg)
+      val churnFlush =
+        if (batchId == lastBatch)
+          newLast.select(date_add(col("d"), 1).as("day"), lit("churned").as("state"))
+        else s.range(0).select(lit(null).cast("date").as("day"),
+          col("id").cast("string").as("state"))
+      val delta = states.unionByName(churnSeen).unionByName(churnFlush)
+        .groupBy("day", "state").agg(count(lit(1)).as("n"))
+      overlap(
+        () => countStore.write(batchId, countStore.sumMerge(batchId, delta, "day", "state")),
+        () => lastStore.write(batchId, newLast))
+    }
+    countStore.version(lastId)
       .groupBy("day")
       .pivot("state", Seq("new_users", "retained", "resurrected", "churned"))
       .agg(coalesce(sum("n"), lit(0L)))
@@ -2084,8 +1984,6 @@ object StreamingQueries {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val minLen = 40
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "ssub",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val winStore = freshDir(dir, "ssub_wins")
     val dfStore = graft.streaming.VersionedStore(s, freshDir(dir, "ssub_store"))
     dfStore.init(s.range(0).select(col("id").as("h"), col("id").as("c")))
@@ -2093,31 +1991,20 @@ object StreamingQueries {
       s.range(0).select(col("id").as("doc_id"), col("id").cast("int").as("pos"),
         col("id").as("h")).write.mode("overwrite").parquet(winStore)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val hashes = ColumnBridge.column(graft.functions.RollingWindowHashes(
-          ColumnBridge.expression(col("text")), minLen))
-        // increment-only work: the batch's windows, computed once
-        val wins = batch.filter(length(col("text")) >= minLen)
-          .select(col("doc_id"), posexplode(hashes).as(Seq("pos", "h")))
-          .localCheckpoint(eager = false)
-        inParallel(
-          () => wins.coalesce(1).write.mode("append").parquet(winStore),
-          () => dfStore.write(batchId, dfStore.prior(batchId)
-            .unionByName(wins.groupBy("h").agg(count(lit(1)).as("c")))
-            .groupBy("h").agg(sum("c").as("c"))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "ssub", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val hashes = ColumnBridge.column(graft.functions.RollingWindowHashes(
+        ColumnBridge.expression(col("text")), minLen))
+      // increment-only work: the batch's windows, computed once
+      val wins = batch.filter(length(col("text")) >= minLen)
+        .select(col("doc_id"), posexplode(hashes).as(Seq("pos", "h")))
+        .localCheckpoint(eager = false)
+      overlap(
+        () => wins.coalesce(1).write.mode("append").parquet(winStore),
+        () => dfStore.write(batchId,
+          dfStore.sumMerge(batchId, wins.groupBy("h").agg(count(lit(1)).as("c")), "h")))
+    }
     // final read: probe the persisted index against the final hot set
-    val hot = dfStore.version(lastBatchId(srcDir))
+    val hot = dfStore.version(lastId)
       .filter(col("c") >= 2).select("h")
     val dup = s.read.parquet(winStore).join(hot, "h").select("doc_id", "pos")
     val w = org.apache.spark.sql.expressions.Window
@@ -2147,11 +2034,10 @@ object StreamingQueries {
     * fixture that breaks it must fail loudly here, not hash-mismatch
     * downstream.
     */
-  private def requireOffsetMonotone(s: SparkSession, srcDir: String, seqCol: String): Unit =
+  private def requireOffsetMonotone(parts: Seq[DataFrame], seqCol: String): Seq[DataFrame] =
     graft.BenchMeters.fixture {
-      val bounds = (0L to lastBatchId(srcDir)).map { b =>
-        val r = s.read.parquet(s"$srcDir/b$b.parquet")
-          .agg(min(col(seqCol)), max(col(seqCol))).head()
+      val bounds = parts.map { part =>
+        val r = part.agg(min(col(seqCol)), max(col(seqCol))).head()
         (if (r.isNullAt(0)) Long.MinValue else r.getLong(0),
           if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
       }
@@ -2162,6 +2048,7 @@ object StreamingQueries {
               "(per-batch fold + merge no longer equals the one-shot fold)")
         case _ => ()
       }
+      parts
     }
 
   /** Changelog-SOURCE ingestion (ref: StreamTableEnvironment
@@ -2185,28 +2072,15 @@ object StreamingQueries {
         .otherwise(graft.streaming.Changelog.Insert).as("kind"),
       col("event_id").as("seq"), col("user_id"),
       round(col("value"), 2).as("value"), col("ts"))
-    val srcDir = stageBatchFiles(dir, "scdc",
-      daySplits(log, col("ts"), 3).map(_.drop("ts")))
-    requireOffsetMonotone(s, srcDir, "seq")
+    val parts = requireOffsetMonotone(daySplits(log, col("ts"), 3).map(_.drop("ts")), "seq")
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "scdc_store"))
     store.init(s.range(0).select(col("id").as("user_id"),
       col("id").cast("double").as("value")))
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("kind", StringType),
-        StructField("seq", LongType), StructField("user_id", LongType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, graft.streaming.Changelog.foldCdc(
-          store.prior(batchId), batch, "user_id", "seq", "kind"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.version(lastBatchId(srcDir)).orderBy("user_id")
+    val lastId = replay(dir, "scdc", parts) { (batch, batchId) =>
+      store.write(batchId, graft.streaming.Changelog.foldCdc(
+        store.prior(batchId), batch, "user_id", "seq", "kind"))
+    }
+    store.version(lastId).orderBy("user_id")
   }
 
   /** The one-shot fold of the same log: last op per key (by offset),
@@ -2244,9 +2118,7 @@ object StreamingQueries {
         .otherwise(graft.streaming.Changelog.Insert).as("kind"),
       col("event_id").as("seq"), col("user_id"),
       round(col("value"), 2).as("value"), col("ts"))
-    val srcDir = stageBatchFiles(dir, "scag",
-      daySplits(log, col("ts"), 3).map(_.drop("ts")))
-    requireOffsetMonotone(s, srcDir, "seq")
+    val parts = requireOffsetMonotone(daySplits(log, col("ts"), 3).map(_.drop("ts")), "seq")
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "scag_store"))
     store.init(s.range(0).select(col("id").as("user_id"),
       col("id").cast("double").as("value")))
@@ -2256,27 +2128,16 @@ object StreamingQueries {
         col("id").cast("double").as("total"))
         .write.mode("overwrite").parquet(resDir)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("kind", StringType),
-        StructField("seq", LongType), StructField("user_id", LongType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cur = graft.streaming.Changelog.foldCdc(
-          store.prior(batchId), batch, "user_id", "seq", "kind")
-          .localCheckpoint(eager = false)
-        inParallel(
-          () => cur.agg(count(lit(1)).as("n_users"), round(sum("value"), 2).as("total"))
-            .select(lit(batchId).as("batch"), col("n_users"), col("total"))
-            .coalesce(1).write.mode("append").parquet(resDir),
-          () => store.write(batchId, cur))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "scag", parts) { (batch, batchId) =>
+      val cur = graft.streaming.Changelog.foldCdc(
+        store.prior(batchId), batch, "user_id", "seq", "kind")
+        .localCheckpoint(eager = false)
+      overlap(
+        () => cur.agg(count(lit(1)).as("n_users"), round(sum("value"), 2).as("total"))
+          .select(lit(batchId).as("batch"), col("n_users"), col("total"))
+          .coalesce(1).write.mode("append").parquet(resDir),
+        () => store.write(batchId, cur))
+    }
     s.read.parquet(resDir).orderBy("batch")
   }
 
@@ -2315,8 +2176,6 @@ object StreamingQueries {
     */
   def streamRetract(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
-    val srcDir = stageBatchFiles(dir, "srtr",
-      daySplits(ev, col("ts"), 3).map(_.drop("ts")))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "srtr_store"))
     store.init(s.range(0).select(col("id").as("user_id"), col("id").as("cnt")))
     val resDir = freshDir(dir, "srtr_res")
@@ -2325,27 +2184,18 @@ object StreamingQueries {
         col("id").as("user_id"), col("id").as("cnt"))
         .write.mode("overwrite").parquet(resDir)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = store.prior(batchId).localCheckpoint(eager = false)
-        val cur = prior
-          .unionByName(batch.groupBy("user_id").agg(count(lit(1)).as("cnt")))
-          .groupBy("user_id").agg(sum("cnt").as("cnt"))
-          .localCheckpoint(eager = false)
-        inParallel(
-          () => graft.streaming.Changelog.retractDiff(prior, cur, "user_id")
-            .select(lit(batchId).as("batch"), col("kind"), col("user_id"), col("cnt"))
-            .coalesce(1).write.mode("append").parquet(resDir),
-          () => store.write(batchId, cur))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "srtr", daySplits(ev, col("ts"), 3).map(_.drop("ts"))) { (batch, batchId) =>
+      val prior = store.prior(batchId).localCheckpoint(eager = false)
+      val cur = prior
+        .unionByName(batch.groupBy("user_id").agg(count(lit(1)).as("cnt")))
+        .groupBy("user_id").agg(sum("cnt").as("cnt"))
+        .localCheckpoint(eager = false)
+      overlap(
+        () => graft.streaming.Changelog.retractDiff(prior, cur, "user_id")
+          .select(lit(batchId).as("batch"), col("kind"), col("user_id"), col("cnt"))
+          .coalesce(1).write.mode("append").parquet(resDir),
+        () => store.write(batchId, cur))
+    }
     s.read.parquet(resDir).orderBy("batch", "user_id", "kind")
   }
 
@@ -2393,9 +2243,7 @@ object StreamingQueries {
     val ev = Tables.events(s, dir)
       .select(col("event_type"), col("user_id"), col("value"),
         col("event_id").as("seq"), col("ts"))
-    val srcDir = stageBatchFiles(dir, "strn",
-      daySplits(ev, col("ts"), 3).map(_.drop("ts")))
-    requireOffsetMonotone(s, srcDir, "seq")
+    val parts = requireOffsetMonotone(daySplits(ev, col("ts"), 3).map(_.drop("ts")), "seq")
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "strn_store"))
     store.init(s.range(0).select(col("id").cast("string").as("event_type"),
       col("id").as("user_id"), col("id").cast("double").as("score"),
@@ -2406,45 +2254,34 @@ object StreamingQueries {
         col("id").as("rank"), col("id").as("user_id"), col("id").cast("double").as("score"))
         .write.mode("overwrite").parquet(resDir)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("user_id", LongType), StructField("value", DoubleType),
-        StructField("seq", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = store.prior(batchId).localCheckpoint(eager = false)
-        // last value per (type, user): max_by over the offset, merged
-        // against the prior table the same way (associative)
-        val cur = prior
-          .unionByName(batch.select(col("event_type"), col("user_id"),
-            col("value").as("score"), col("seq")))
-          .groupBy("event_type", "user_id")
-          .agg(max_by(struct(col("score"), col("seq")), col("seq")).as("m"))
-          .select(col("event_type"), col("user_id"),
-            col("m.score").as("score"), col("m.seq").as("seq"))
-          .localCheckpoint(eager = false)
-        // retraction-aware: only types whose (user, score) set changed
-        // re-rank — the ranking state of untouched keys is never read
-        val changedTypes = graft.streaming.Changelog
-          .retractDiff(prior.drop("seq"), cur.drop("seq"), Seq("event_type", "user_id"))
-          .select("event_type").distinct()
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("event_type").orderBy(col("score").desc, col("user_id"))
-        inParallel(
-          () => cur.join(changedTypes, "event_type")
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= 3)
-            .select(lit(batchId).as("batch"), col("event_type"),
-              col("rank").cast("long"), col("user_id"), col("score"))
-            .coalesce(1).write.mode("append").parquet(resDir),
-          () => store.write(batchId, cur))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "strn", parts) { (batch, batchId) =>
+      val prior = store.prior(batchId).localCheckpoint(eager = false)
+      // last value per (type, user): max_by over the offset, merged
+      // against the prior table the same way (associative)
+      val cur = prior
+        .unionByName(batch.select(col("event_type"), col("user_id"),
+          col("value").as("score"), col("seq")))
+        .groupBy("event_type", "user_id")
+        .agg(max_by(struct(col("score"), col("seq")), col("seq")).as("m"))
+        .select(col("event_type"), col("user_id"),
+          col("m.score").as("score"), col("m.seq").as("seq"))
+        .localCheckpoint(eager = false)
+      // retraction-aware: only types whose (user, score) set changed
+      // re-rank — the ranking state of untouched keys is never read
+      val changedTypes = graft.streaming.Changelog
+        .retractDiff(prior.drop("seq"), cur.drop("seq"), Seq("event_type", "user_id"))
+        .select("event_type").distinct()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy(col("score").desc, col("user_id"))
+      overlap(
+        () => cur.join(changedTypes, "event_type")
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= 3)
+          .select(lit(batchId).as("batch"), col("event_type"),
+            col("rank").cast("long"), col("user_id"), col("score"))
+          .coalesce(1).write.mode("append").parquet(resDir),
+        () => store.write(batchId, cur))
+    }
     s.read.parquet(resDir)
       .select(col("batch"), col("event_type"), col("rank"), col("user_id"),
         round(col("score"), 2).as("score"))
@@ -2507,32 +2344,24 @@ object StreamingQueries {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val srcDir = stageBatchFiles(dir, "sshap", daySplits(ev, col("ts"), 3))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sshap_store"))
     store.init(AQ.shapleyJourneys(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = store.prior(batchId)
-        val inc = AQ.shapleyJourneys(batch)
-        store.write(batchId,
-          prior.select(col("user_id"), col("conv").as("pc"), col("touched").as("pt"))
-            .join(inc.select(col("user_id"), col("conv").as("ic"), col("touched").as("it")),
-              Seq("user_id"), "full_outer")
-            .select(col("user_id"),
-              greatest(coalesce(col("pc"), lit(0L)), coalesce(col("ic"), lit(0L))).as("conv"),
-              when(coalesce(col("pc"), lit(0L)) === 1L, col("pt"))
-                .otherwise(array_sort(array_union(
-                  coalesce(col("pt"), array().cast("array<string>")),
-                  coalesce(col("it"), array().cast("array<string>")))))
-                .as("touched")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.shapleySolve(s, store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sshap", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val inc = AQ.shapleyJourneys(batch)
+      store.write(batchId,
+        prior.select(col("user_id"), col("conv").as("pc"), col("touched").as("pt"))
+          .join(inc.select(col("user_id"), col("conv").as("ic"), col("touched").as("it")),
+            Seq("user_id"), "full_outer")
+          .select(col("user_id"),
+            greatest(coalesce(col("pc"), lit(0L)), coalesce(col("ic"), lit(0L))).as("conv"),
+            when(coalesce(col("pc"), lit(0L)) === 1L, col("pt"))
+              .otherwise(array_sort(array_union(
+                coalesce(col("pt"), array().cast("array<string>")),
+                coalesce(col("it"), array().cast("array<string>")))))
+              .as("touched")))
+    }
+    AQ.shapleySolve(s, store.version(lastId))
   }
 
   /** k-anonymity audit maintained on a stream
@@ -2548,8 +2377,6 @@ object StreamingQueries {
   def streamKanon(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "skanon",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def tcOf(df: DataFrame): DataFrame =
       df.select(col("user_id"), col("event_type"))
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
@@ -2559,23 +2386,15 @@ object StreamingQueries {
     val dayStore = graft.streaming.VersionedStore(s, freshDir(dir, "skanon_days"))
     tcStore.init(tcOf(ev.limit(0)))
     dayStore.init(daysOf(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        inParallel(
-          () => tcStore.write(batchId,
-            tcStore.prior(batchId).unionByName(tcOf(batch))
-              .groupBy("user_id", "event_type").agg(sum("cnt").as("cnt"))),
-          () => dayStore.write(batchId,
-            dayStore.prior(batchId).unionByName(daysOf(batch)).distinct()))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.kanonSolve(tcStore.version(lastBatchId(srcDir)),
-      dayStore.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "skanon", modSplit(ev, "event_id")) { (batch, batchId) =>
+      overlap(
+        () => tcStore.write(batchId,
+          tcStore.sumMerge(batchId, tcOf(batch), "user_id", "event_type")),
+        () => dayStore.write(batchId,
+          dayStore.prior(batchId).unionByName(daysOf(batch)).distinct()))
+    }
+    AQ.kanonSolve(tcStore.version(lastId),
+      dayStore.version(lastId))
   }
 
   /** Seasonal decomposition maintained on a stream
@@ -2597,25 +2416,15 @@ object StreamingQueries {
     */
   private def maintainDailyGrid(s: SparkSession, dir: String, name: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, name,
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def dailyOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("cnt"))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${name}_store"))
     store.init(dailyOf(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(dailyOf(batch))
-          .groupBy("event_type", "d").agg(sum("cnt").as("cnt")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, name, modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
+    }
+    store.version(lastId)
       .select(col("event_type"), col("d"), col("cnt").cast("long").as("cnt"))
   }
 
@@ -2645,8 +2454,6 @@ object StreamingQueries {
     import graft.functions.GraftFunctions.cosine_double
     val Sim = graft.operators.Similarity
     val emb = Tables.embeddings(s, dir)
-    val srcDir = stageBatchFiles(dir, "sknn",
-      (0 until 3).map(b => emb.filter(col("vec_id") % 3 === b)))
     // coarse quantizer trained offline on the base split (the dense
     // renumber predates r12's order-position seeding and is now
     // semantically a no-op — kept only because the ORACLE replays
@@ -2671,50 +2478,43 @@ object StreamingQueries {
     val preds = graft.streaming.VersionedStore(s, freshDir(dir, "sknn_preds"))
     preds.init(emb.limit(0)
       .select(col("vec_id"), col("label").cast("long"), col("label").cast("long").as("pred")))
-    val q = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = corpus.prior(batchId)
-        // nprobe nearest cells per probe vector, then a cid equi-join
-        // against the stored index — never a corpus-side broadcast
-        val wProbe = org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("qd").desc, col("cid"))
-        val probes = batch
-          .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-            col("embedding").cast("array<double>").as("ed"))
-          .join(broadcast(cent))
-          .select(col("qid"), col("qe"), col("cid"),
-            round(cosine_double(col("ed"), col("ce")), 6).as("qd"))
-          .withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") <= 3)
-          .select("qid", "qe", "cid")
-        val scored = probes.join(prior, Seq("cid"))
-          .select(col("qid"), col("vec_id").as("nid"), col("label").as("nlabel"),
-            graft.functions.GraftFunctions.cosine_sim(col("qe"), col("embedding")).as("c"))
-        val knn = scored
-          .withColumn("rn", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("qid").orderBy(round(col("c"), 6).desc, col("nid"))))
-          .filter(col("rn") <= 5)
-        val votes = knn.groupBy("qid", "nlabel").agg(count(lit(1)).as("votes"))
-        val p = votes
-          .withColumn("rk", row_number().over(
-            org.apache.spark.sql.expressions.Window
-              .partitionBy("qid").orderBy(col("votes").desc, col("nlabel"))))
-          .filter(col("rk") === 1)
-          .select(col("qid").as("vec_id"), col("nlabel").cast("long").as("pred"))
-          .join(batch.select(col("vec_id"), col("label").cast("long")), "vec_id")
-          .select(col("vec_id"), col("label"), col("pred"))
-        inParallel(
-          () => preds.write(batchId, preds.prior(batchId).unionByName(p)),
-          () => corpus.write(batchId, prior.unionByName(withCell(batch))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    preds.version(lastBatchId(srcDir)).orderBy("vec_id")
+    val lastId = replay(dir, "sknn", modSplit(emb, "vec_id")) { (batch, batchId) =>
+      val prior = corpus.prior(batchId)
+      // nprobe nearest cells per probe vector, then a cid equi-join
+      // against the stored index — never a corpus-side broadcast
+      val wProbe = org.apache.spark.sql.expressions.Window
+        .partitionBy("qid").orderBy(col("qd").desc, col("cid"))
+      val probes = batch
+        .select(col("vec_id").as("qid"), col("embedding").as("qe"),
+          col("embedding").cast("array<double>").as("ed"))
+        .join(broadcast(cent))
+        .select(col("qid"), col("qe"), col("cid"),
+          round(cosine_double(col("ed"), col("ce")), 6).as("qd"))
+        .withColumn("rn", row_number().over(wProbe))
+        .filter(col("rn") <= 3)
+        .select("qid", "qe", "cid")
+      val scored = probes.join(prior, Seq("cid"))
+        .select(col("qid"), col("vec_id").as("nid"), col("label").as("nlabel"),
+          graft.functions.GraftFunctions.cosine_sim(col("qe"), col("embedding")).as("c"))
+      val knn = scored
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy("qid").orderBy(round(col("c"), 6).desc, col("nid"))))
+        .filter(col("rn") <= 5)
+      val votes = knn.groupBy("qid", "nlabel").agg(count(lit(1)).as("votes"))
+      val p = votes
+        .withColumn("rk", row_number().over(
+          org.apache.spark.sql.expressions.Window
+            .partitionBy("qid").orderBy(col("votes").desc, col("nlabel"))))
+        .filter(col("rk") === 1)
+        .select(col("qid").as("vec_id"), col("nlabel").cast("long").as("pred"))
+        .join(batch.select(col("vec_id"), col("label").cast("long")), "vec_id")
+        .select(col("vec_id"), col("label"), col("pred"))
+      overlap(
+        () => preds.write(batchId, preds.prior(batchId).unionByName(p)),
+        () => corpus.write(batchId, prior.unionByName(withCell(batch))))
+    }
+    preds.version(lastId).orderBy("vec_id")
   }
 
   val streamKnnProbeSql: String = {
@@ -2777,23 +2577,12 @@ object StreamingQueries {
   def streamMsprt(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "smsprt",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "smsprt_store"))
     store.init(AQ.msprtDaily(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(AQ.msprtDaily(batch))
-          .groupBy("d").agg(sum("na_d").as("na_d"), sum("ca_d").as("ca_d"),
-            sum("nb_d").as("nb_d"), sum("cb_d").as("cb_d")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.msprtFromDaily(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "smsprt", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.msprtDaily(batch), "d"))
+    }
+    AQ.msprtFromDaily(store.version(lastId))
   }
 
   /** The stratified-ATE estimator maintained on a stream
@@ -2808,24 +2597,15 @@ object StreamingQueries {
   def streamAte(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sate",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sate_store"))
     store.init(AQ.ateUsers(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
-          .groupBy("user_id").agg(sum("act").as("act"),
-            max("treated").as("treated"), max("conv").as("conv")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sate", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
+        .groupBy("user_id").agg(sum("act").as("act"),
+          max("treated").as("treated"), max("conv").as("conv")))
+    }
     AQ.ateFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastBatchId(srcDir))
+      store.version(lastId)
         .select(col("user_id"), col("act").cast("long").as("act"),
           col("treated").cast("long").as("treated"), col("conv").cast("long").as("conv"))))
   }
@@ -2842,31 +2622,22 @@ object StreamingQueries {
   def streamHeaps(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir)
-    val srcDir = stageBatchFiles(dir, "sheaps",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val fsStore = graft.streaming.VersionedStore(s, freshDir(dir, "sheaps_fs"))
     val dlStore = graft.streaming.VersionedStore(s, freshDir(dir, "sheaps_dl"))
     fsStore.init(PQ.heapsFirstSeen(docs.limit(0)))
     dlStore.init(PQ.heapsDocLen(docs.limit(0)))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        inParallel(
-          () => fsStore.write(batchId, fsStore.prior(batchId)
-            .unionByName(PQ.heapsFirstSeen(batch))
-            .groupBy("tok").agg(min("fd").as("fd"))),
-          () => dlStore.write(batchId, dlStore.prior(batchId)
-            .unionByName(PQ.heapsDocLen(batch))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sheaps", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      overlap(
+        () => fsStore.write(batchId, fsStore.prior(batchId)
+          .unionByName(PQ.heapsFirstSeen(batch))
+          .groupBy("tok").agg(min("fd").as("fd"))),
+        () => dlStore.write(batchId, dlStore.prior(batchId)
+          .unionByName(PQ.heapsDocLen(batch))))
+    }
     PQ.heapsSolve(
-      graft.operators.Funnel.stageLazy(fsStore.version(lastBatchId(srcDir))
+      graft.operators.Funnel.stageLazy(fsStore.version(lastId)
         .select(col("tok"), col("fd").cast("long").as("fd"))),
-      graft.operators.Funnel.stageLazy(dlStore.version(lastBatchId(srcDir))
+      graft.operators.Funnel.stageLazy(dlStore.version(lastId)
         .select(col("doc_id").cast("long").as("doc_id"), col("nt").cast("long").as("nt"))))
   }
 
@@ -2880,23 +2651,13 @@ object StreamingQueries {
   def streamBenford(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sbenford",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sbenford_store"))
     store.init(AQ.benfordDigits(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(AQ.benfordDigits(batch))
-          .groupBy("d").agg(sum("n").as("n")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sbenford", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.benfordDigits(batch), "d"))
+    }
     AQ.benfordFromDigits(graft.operators.Funnel.stageLazy(
-      store.version(lastBatchId(srcDir))
+      store.version(lastId)
         .select(col("d").cast("long").as("d"), col("n").cast("long").as("n"))))
   }
 
@@ -2909,23 +2670,13 @@ object StreamingQueries {
   def streamLorenz(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "slorenz",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "slorenz_store"))
     store.init(AQ.lorenzUsers(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(AQ.lorenzUsers(batch))
-          .groupBy("user_id").agg(sum("y").as("y")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "slorenz", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.lorenzUsers(batch), "user_id"))
+    }
     AQ.lorenzFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastBatchId(srcDir))
+      store.version(lastId)
         .select(col("user_id"), col("y").cast("long").as("y"))))
   }
 
@@ -2940,8 +2691,6 @@ object StreamingQueries {
     */
   def streamGram(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
-    val srcDir = stageBatchFiles(dir, "sgram",
-      (0 until 3).map(b => emb.filter(col("vec_id") % 3 === b)))
     val dims = 8
     val scale = 1048576.0
     def cells(df: DataFrame): DataFrame = {
@@ -2958,18 +2707,10 @@ object StreamingQueries {
     }
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sgram_store"))
     store.init(cells(emb.limit(0)))
-    val q = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(cells(batch))
-          .groupBy("i", "j").agg(sum("g_scaled").as("g_scaled")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sgram", modSplit(emb, "vec_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, cells(batch), "i", "j"))
+    }
+    store.version(lastId)
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"),
         col("g_scaled").cast("long").as("g_scaled"),
         (col("g_scaled").cast("double") / lit(scale * scale)).as("gram"))
@@ -3011,44 +2752,36 @@ object StreamingQueries {
     // line rows arrive in DIFFERENT batches, so every delta term
     // (Δl⋈O_prev, L_prev⋈Δo, Δl⋈Δo) fires and a missing term breaks
     // the oracle
-    val srcDir = stageBatchFiles(dir, "sivm",
-      (0 until 3).map(b => tagged.filter(
-        (col("tag") === "o" && col("k") % 3 === b)
-          || (col("tag") === "l" && col("k") % 3 === (b + 1) % 3))))
+    val parts = (0 until 3).map(b => tagged.filter(
+      (col("tag") === "o" && col("k") % 3 === b)
+        || (col("tag") === "l" && col("k") % 3 === (b + 1) % 3)))
     val oStore = graft.streaming.DeltaStore(s, freshDir(dir, "sivm_o"))
     val lStore = graft.streaming.DeltaStore(s, freshDir(dir, "sivm_l"))
     val jStore = graft.streaming.DeltaStore(s, freshDir(dir, "sivm_j"))
     oStore.init(tagged.limit(0).select(col("k"), col("pri")))
     lStore.init(tagged.limit(0).select(col("k"), col("price_micro")))
     jStore.init(tagged.limit(0).select(col("k"), col("pri"), col("price_micro")))
-    val q = s.readStream.schema(tagged.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.localCheckpoint(eager = false)
-        val dO = b.filter(col("tag") === "o").select(col("k"), col("pri"))
-        val dL = b.filter(col("tag") === "l").select(col("k"), col("price_micro"))
-        val oPrev = oStore.snapshot(batchId - 1)
-        val lPrev = lStore.snapshot(batchId - 1)
-        val dJ = dL.join(oPrev, "k")
-          .unionByName(lPrev.join(dO, "k"))
-          .unionByName(dL.join(dO, "k"))
-          .select(col("k"), col("pri"), col("price_micro"))
-        // three independent stores, disjoint directories; the delta
-        // frames read only version ≤ b−1 paths pinned above — overlap
-        // the appends (guide §2.6, r14 opt). The periodic compact reads
-        // jStore's own just-appended delta, so it stays AFTER the join
-        inParallel(
-          () => jStore.append(batchId, dJ),
-          () => oStore.append(batchId, dO),
-          () => lStore.append(batchId, dL))
-        if (batchId % 2 == 1) jStore.compact(batchId) // periodic fold
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    jStore.snapshot(lastBatchId(srcDir))
+    val lastId = replay(dir, "sivm", parts) { (batch, batchId) =>
+      val b = batch.localCheckpoint(eager = false)
+      val dO = b.filter(col("tag") === "o").select(col("k"), col("pri"))
+      val dL = b.filter(col("tag") === "l").select(col("k"), col("price_micro"))
+      val oPrev = oStore.snapshot(batchId - 1)
+      val lPrev = lStore.snapshot(batchId - 1)
+      val dJ = dL.join(oPrev, "k")
+        .unionByName(lPrev.join(dO, "k"))
+        .unionByName(dL.join(dO, "k"))
+        .select(col("k"), col("pri"), col("price_micro"))
+      // three independent stores, disjoint directories; the delta
+      // frames read only version ≤ b−1 paths pinned above — overlap
+      // the appends (guide §2.6, r14 opt). The periodic compact reads
+      // jStore's own just-appended delta, so it stays AFTER the join
+      overlap(
+        () => jStore.append(batchId, dJ),
+        () => oStore.append(batchId, dO),
+        () => lStore.append(batchId, dL))
+      if (batchId % 2 == 1) jStore.compact(batchId) // periodic fold
+    }
+    jStore.snapshot(lastId)
       .groupBy("pri")
       .agg(count(lit(1)).as("n"), sum("price_micro").as("sum_micro"))
       .select(col("pri").as("o_orderpriority"), col("n").cast("long").as("n"),
@@ -3095,10 +2828,9 @@ object StreamingQueries {
     // batch b: orders with k%3==b, line INSERTS with k%3==b, and the
     // DELETES of the previous batch's inserts — retractions always
     // arrive after their insert, as a changelog guarantees
-    val srcDir = stageBatchFiles(dir, "sivmr",
-      (0 until 4).map(b => tagged.filter(
-        (col("mult") === 1L && col("k") % 3 === math.min(b, 2).toLong && lit(b) < 3)
-          || (col("mult") === -1L && col("k") % 3 === (b - 1).toLong))))
+    val parts = (0 until 4).map(b => tagged.filter(
+      (col("mult") === 1L && col("k") % 3 === math.min(b, 2).toLong && lit(b) < 3)
+        || (col("mult") === -1L && col("k") % 3 === (b - 1).toLong)))
     val oStore = graft.streaming.BucketStore(s, freshDir(dir, "sivmr_o"), numBuckets = 8)
     val lStore = graft.streaming.BucketStore(s, freshDir(dir, "sivmr_l"), numBuckets = 8)
     val jStore = graft.streaming.BucketStore(s, freshDir(dir, "sivmr_j"), numBuckets = 8)
@@ -3106,47 +2838,40 @@ object StreamingQueries {
     lStore.init(tagged.limit(0).select(col("k"), col("price_micro"), col("ln"), col("mult")), "k")
     jStore.init(tagged.limit(0)
       .select(col("k"), col("pri"), col("price_micro"), col("mult")), "k")
-    val q = s.readStream.schema(tagged.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // lazy boundary (r13 opt): the batch fans out to both deltas and
-        // three join legs; persist() materializes it inside the first
-        // store action instead of paying a dedicated localCheckpoint job
-        val b = batch.localCheckpoint(eager = false)
-        val dO = b.filter(col("tag") === "o").select(col("k"), col("pri"), col("mult"))
-        val dL = b.filter(col("tag") === "l")
-          .select(col("k"), col("price_micro"), col("ln"), col("mult"))
-        val oPrev = oStore.snapshot(batchId - 1)
-        val lPrev = lStore.snapshot(batchId - 1)
-        // multiplicities multiply across the join (Δl⋈O ∪ L⋈Δo ∪ Δl⋈Δo)
-        def j(lt: DataFrame, rt: DataFrame): DataFrame =
-          lt.join(rt.withColumnRenamed("mult", "m2"), "k")
-            .select(col("k"), col("pri"), col("price_micro"),
-              (col("mult") * col("m2")).as("mult"))
-        val dJ = j(dL, oPrev).unionByName(j(dL, dO))
-          .unionByName(lPrev.join(dO.withColumnRenamed("mult", "m2"), "k")
-            .select(col("k"), col("pri"), col("price_micro"),
-              (col("mult") * col("m2")).as("mult")))
-        // the three stores are INDEPENDENT (separate instances, separate
-        // directories; dJ reads o/l version b−1, which is immutable and
-        // resolved to concrete paths above) — submit their applyDeltas
-        // concurrently so each store's scheduling floor overlaps the
-        // others' instead of summing (guide §2.6; r14 opt). Concurrent
-        // first consumers of the shared lazy-checkpointed batch are safe:
-        // the block manager computes each partition once under its lock.
-        inParallel(
-          () => jStore.applyDelta(batchId, dJ, "k",
-            Seq("k", "pri", "price_micro"), "mult"),
-          () => oStore.applyDelta(batchId, dO, "k", Seq("k", "pri"), "mult"),
-          () => lStore.applyDelta(batchId, dL, "k",
-            Seq("k", "price_micro", "ln"), "mult"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    jStore.snapshot(lastBatchId(srcDir))
+    val lastId = replay(dir, "sivmr", parts) { (batch, batchId) =>
+      // lazy boundary (r13 opt): the batch fans out to both deltas and
+      // three join legs; persist() materializes it inside the first
+      // store action instead of paying a dedicated localCheckpoint job
+      val b = batch.localCheckpoint(eager = false)
+      val dO = b.filter(col("tag") === "o").select(col("k"), col("pri"), col("mult"))
+      val dL = b.filter(col("tag") === "l")
+        .select(col("k"), col("price_micro"), col("ln"), col("mult"))
+      val oPrev = oStore.snapshot(batchId - 1)
+      val lPrev = lStore.snapshot(batchId - 1)
+      // multiplicities multiply across the join (Δl⋈O ∪ L⋈Δo ∪ Δl⋈Δo)
+      def j(lt: DataFrame, rt: DataFrame): DataFrame =
+        lt.join(rt.withColumnRenamed("mult", "m2"), "k")
+          .select(col("k"), col("pri"), col("price_micro"),
+            (col("mult") * col("m2")).as("mult"))
+      val dJ = j(dL, oPrev).unionByName(j(dL, dO))
+        .unionByName(lPrev.join(dO.withColumnRenamed("mult", "m2"), "k")
+          .select(col("k"), col("pri"), col("price_micro"),
+            (col("mult") * col("m2")).as("mult")))
+      // the three stores are INDEPENDENT (separate instances, separate
+      // directories; dJ reads o/l version b−1, which is immutable and
+      // resolved to concrete paths above) — submit their applyDeltas
+      // concurrently so each store's scheduling floor overlaps the
+      // others' instead of summing (guide §2.6; r14 opt). Concurrent
+      // first consumers of the shared lazy-checkpointed batch are safe:
+      // the block manager computes each partition once under its lock.
+      overlap(
+        () => jStore.applyDelta(batchId, dJ, "k",
+          Seq("k", "pri", "price_micro"), "mult"),
+        () => oStore.applyDelta(batchId, dO, "k", Seq("k", "pri"), "mult"),
+        () => lStore.applyDelta(batchId, dL, "k",
+          Seq("k", "price_micro", "ln"), "mult"))
+    }
+    jStore.snapshot(lastId)
       .groupBy("pri")
       .agg(sum("mult").as("n"), sum(col("price_micro") * col("mult")).as("sum_micro"))
       .select(col("pri").as("o_orderpriority"), col("n").cast("long").as("n"),
@@ -3173,24 +2898,15 @@ object StreamingQueries {
   def streamQini(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sqini",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sqini_store"))
     store.init(AQ.ateUsers(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
-          .groupBy("user_id").agg(sum("act").as("act"),
-            max("treated").as("treated"), max("conv").as("conv")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sqini", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
+        .groupBy("user_id").agg(sum("act").as("act"),
+          max("treated").as("treated"), max("conv").as("conv")))
+    }
     AQ.qiniFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastBatchId(srcDir))
+      store.version(lastId)
         .select(col("user_id"), col("act").cast("long").as("act"),
           col("treated").cast("long").as("treated"), col("conv").cast("long").as("conv"))))
   }
@@ -3205,24 +2921,14 @@ object StreamingQueries {
   def streamConformal(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sconf",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def prof(df: DataFrame): DataFrame = AQ.conformalUsers(df).drop("fold")
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sconf_store"))
     store.init(prof(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(prof(batch))
-          .groupBy("user_id").agg(sum("x").as("x"), sum("y_micro").as("y_micro")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sconf", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, prof(batch), "user_id"))
+    }
     AQ.conformalFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastBatchId(srcDir))
+      store.version(lastId)
         .select(col("user_id"), col("x").cast("long").as("x"),
           col("y_micro").cast("long").as("y_micro"))
         .withColumn("fold", pmod(
@@ -3240,26 +2946,16 @@ object StreamingQueries {
   def streamDispersion(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sdisp",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def dailyOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("cnt"))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sdisp_store"))
     store.init(dailyOf(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(dailyOf(batch))
-          .groupBy("event_type", "d").agg(sum("cnt").as("cnt")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sdisp", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
+    }
     AQ.dispersionFromDaily(graft.operators.Funnel.stageLazy(
-      store.version(lastBatchId(srcDir))
+      store.version(lastId)
         .select(col("event_type"), col("d"), col("cnt").cast("long").as("cnt"))))
   }
 
@@ -3277,25 +2973,15 @@ object StreamingQueries {
   def streamBinseg(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sbseg",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def dailyOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("cnt"))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sbseg_store"))
     store.init(dailyOf(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, store.prior(batchId).unionByName(dailyOf(batch))
-          .groupBy("event_type", "d").agg(sum("cnt").as("cnt")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.binsegFromDaily(store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sbseg", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
+    }
+    AQ.binsegFromDaily(store.version(lastId)
       .select(col("event_type"), col("d"), col("cnt").cast("long").as("cnt")))
   }
 
@@ -3310,24 +2996,13 @@ object StreamingQueries {
   def streamFlaggedTerms(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val srcDir = stageBatchFiles(dir, "sflag",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sflag_store"))
     store.init(PQ.flaggedTermCounts(docs.limit(0)))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(PQ.flaggedTermCounts(batch))
-            .groupBy("source", "term")
-            .agg(sum("docs").as("docs"), sum("hits").as("hits")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sflag", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.write(batchId,
+        store.sumMerge(batchId, PQ.flaggedTermCounts(batch), "source", "term"))
+    }
+    store.version(lastId)
       .select(col("source"), col("term"), col("docs").cast("long").as("docs"),
         col("hits").cast("long").as("hits"))
       .orderBy("source", "term")
@@ -3346,22 +3021,13 @@ object StreamingQueries {
   def streamSnm(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "ssnm",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.DeltaStore(s, freshDir(dir, "ssnm_keys"))
     store.init(s.range(0).select(col("id"), lit("").as("key")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, batch.select(col("doc_id").as("id"),
-          substring(TextAnalysis.normalizeText(col("text")), 1, 64).as("key")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Dedup.snmCandidates(store.snapshot(lastBatchId(srcDir)), w = 3, maxDist = 12)
+    val lastId = replay(dir, "ssnm", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.append(batchId, batch.select(col("doc_id").as("id"),
+        substring(TextAnalysis.normalizeText(col("text")), 1, 64).as("key")))
+    }
+    Dedup.snmCandidates(store.snapshot(lastId), w = 3, maxDist = 12)
       .orderBy("a_id", "b_id")
   }
 
@@ -3377,23 +3043,14 @@ object StreamingQueries {
   def streamLinkage(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Funnel, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val srcDir = stageBatchFiles(dir, "slnk",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.DeltaStore(s, freshDir(dir, "slnk_keys"))
     store.init(s.range(0).select(col("id"), lit("").as("key"), lit("").as("source")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, batch.select(col("doc_id").as("id"),
-          substring(TextAnalysis.normalizeText(col("text")), 1, 64).as("key"),
-          col("source")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val snap = store.snapshot(lastBatchId(srcDir))
+    val lastId = replay(dir, "slnk", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.append(batchId, batch.select(col("doc_id").as("id"),
+        substring(TextAnalysis.normalizeText(col("text")), 1, 64).as("key"),
+        col("source")))
+    }
+    val snap = store.snapshot(lastId)
     val cands = Dedup.snmCandidates(snap.select("id", "key"), w = 3, maxDist = 64)
     val src = snap.select(col("id"), col("source"))
     val pat = Funnel.stageLazy(cands
@@ -3427,51 +3084,41 @@ object StreamingQueries {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val srcDir = stageBatchFiles(dir, "smattr", daySplits(ev, col("ts"), 3))
     val transStore = graft.streaming.VersionedStore(s, freshDir(dir, "smattr_trans"))
     val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "smattr_last"))
     transStore.init(s.range(0).select(col("id").cast("string").as("f"),
       col("id").cast("string").as("t"), col("id").as("n")))
     lastStore.init(ev.limit(0))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorL = lastStore.prior(batchId)
-        // carried last-journey rows rejoin the sequence as lag sources
-        // (and as the freeze signal when they are the first purchase);
-        // they are never re-counted as transition targets
-        val all = batch.withColumn("carried", lit(false))
-          .unionByName(priorL.withColumn("carried", lit(true)))
-          .localCheckpoint(eager = false)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("ts", "event_id")
-        val kept = all
-          .withColumn("state",
-            when(col("event_type") === "purchase", "CONV").otherwise(col("event_type")))
-          .withColumn("prior",
-            coalesce(sum(when(col("state") === "CONV", 1L).otherwise(0L))
-              .over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                -1)), lit(0L)))
-          .filter(col("prior") === 0)
-        val trans = kept
-          .withColumn("f", coalesce(lag("state", 1).over(w), lit("START")))
-          .filter(!col("carried"))
-          .groupBy(col("f"), col("state").as("t")).agg(count(lit(1)).as("n"))
-        inParallel(
-          () => transStore.write(batchId, transStore.prior(batchId).unionByName(trans)
-            .groupBy("f", "t").agg(sum("n").as("n"))),
-          () => lastStore.write(batchId, kept
-            .groupBy("user_id")
-            .agg(expr("max_by(struct(ts, event_id, event_type), struct(ts, event_id))").as("m"))
-            .select(col("user_id"), col("m.ts").as("ts"),
-              col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val last = lastBatchId(srcDir)
+    val last = replay(dir, "smattr", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val priorL = lastStore.prior(batchId)
+      // carried last-journey rows rejoin the sequence as lag sources
+      // (and as the freeze signal when they are the first purchase);
+      // they are never re-counted as transition targets
+      val all = batch.withColumn("carried", lit(false))
+        .unionByName(priorL.withColumn("carried", lit(true)))
+        .localCheckpoint(eager = false)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("ts", "event_id")
+      val kept = all
+        .withColumn("state",
+          when(col("event_type") === "purchase", "CONV").otherwise(col("event_type")))
+        .withColumn("prior",
+          coalesce(sum(when(col("state") === "CONV", 1L).otherwise(0L))
+            .over(w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+              -1)), lit(0L)))
+        .filter(col("prior") === 0)
+      val trans = kept
+        .withColumn("f", coalesce(lag("state", 1).over(w), lit("START")))
+        .filter(!col("carried"))
+        .groupBy(col("f"), col("state").as("t")).agg(count(lit(1)).as("n"))
+      overlap(
+        () => transStore.write(batchId, transStore.sumMerge(batchId, trans, "f", "t")),
+        () => lastStore.write(batchId, kept
+          .groupBy("user_id")
+          .agg(expr("max_by(struct(ts, event_id, event_type), struct(ts, event_id))").as("m"))
+          .select(col("user_id"), col("m.ts").as("ts"),
+            col("m.event_id").as("event_id"), col("m.event_type").as("event_type"))))
+    }
     val term = lastStore.version(last)
       .filter(col("event_type") =!= "purchase")
       .select(col("event_type").as("f"), lit("NULL").as("t"))
@@ -3493,26 +3140,15 @@ object StreamingQueries {
     */
   def streamDpRelease(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sdpr",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def cells(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("n"))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sdpr_store"))
     store.init(cells(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(cells(batch))
-            .groupBy("event_type", "d").agg(sum("n").as("n")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AnalyticsQueries.dpNoisyRelease(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sdpr", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, cells(batch), "event_type", "d"))
+    }
+    AnalyticsQueries.dpNoisyRelease(store.version(lastId))
   }
 
   /** CUPED maintained on a stream ([[AnalyticsQueries.evtCuped]]'s
@@ -3529,47 +3165,23 @@ object StreamingQueries {
   def streamCuped(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "scuped",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "scuped_store"))
     store.init(AQ.cupedDaily(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.cupedDaily(batch))
-            .groupBy("user_id", "de").agg(sum("pmicro").as("pmicro")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.cupedSolve(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "scuped", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.cupedDaily(batch), "user_id", "de"))
+    }
+    AQ.cupedSolve(store.version(lastId))
   }
 
   def streamOls(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sols",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sols_store"))
     store.init(AQ.olsStats(ev.limit(0)))
-    val statCols = Seq("n", "s1", "s2", "s11", "s12", "s22", "sy", "s1y", "s2y", "syy")
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.olsStats(batch))
-            .agg(statCols.map(c => sum(c).as(c)).head,
-              statCols.tail.map(c => sum(c).as(c)): _*))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.olsSolve(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sols", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.olsStats(batch)))
+    }
+    AQ.olsSolve(store.version(lastId))
   }
 
   /** Streaming discriminant-direction maintainer: the between-class
@@ -3588,25 +3200,16 @@ object StreamingQueries {
     import graft.queries.{PipelineQueries => PQ}
     val emb = Tables.embeddings(s, dir)
     val d = PQ.EmbDim
-    val srcDir = stageBatchFiles(dir, "slda",
-      (0 until 3).map(b => emb.filter(col("vec_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "slda_store"))
     store.init(Pca.classSums(emb.limit(0), "label", "embedding", d))
-    val q = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId)
-            .unionByName(Pca.classSums(batch, "label", "embedding", d))
-            .groupBy("cls").agg(sum("nc").as("nc"),
-              array((0 until d).map(i => sum(col("s").getItem(i))): _*).as("s")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    PQ.ldaScores(emb, PQ.collectClassSums(store.version(lastBatchId(srcDir))))
+    val lastId = replay(dir, "slda", modSplit(emb, "vec_id")) { (batch, batchId) =>
+      store.write(batchId,
+        store.prior(batchId)
+          .unionByName(Pca.classSums(batch, "label", "embedding", d))
+          .groupBy("cls").agg(sum("nc").as("nc"),
+            array((0 until d).map(i => sum(col("s").getItem(i))): _*).as("s")))
+    }
+    PQ.ldaScores(emb, PQ.collectClassSums(store.version(lastId)))
   }
 
   /** Streaming KS drift gate: the deci-bucket two-sample counts are
@@ -3617,23 +3220,12 @@ object StreamingQueries {
   def streamKs(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sks",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sks_store"))
     store.init(AQ.ksBins(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.ksBins(batch))
-            .groupBy("b").agg(sum("c1").as("c1"), sum("c2").as("c2")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.ksFromBins(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sks", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.ksBins(batch), "b"))
+    }
+    AQ.ksFromBins(store.version(lastId))
   }
 
   /** Streaming Mann–Whitney maintainer: the SAME ≤4901-row deci-bucket
@@ -3646,23 +3238,12 @@ object StreamingQueries {
   def streamMannWhitney(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "smw",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "smw_store"))
     store.init(AQ.ksBins(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.ksBins(batch))
-            .groupBy("b").agg(sum("c1").as("c1"), sum("c2").as("c2")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.mannWhitneyFromBins(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "smw", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.ksBins(batch), "b"))
+    }
+    AQ.mannWhitneyFromBins(store.version(lastId))
   }
 
   /** Streaming maintainer for the per-(bin, event_type) count table —
@@ -3675,23 +3256,12 @@ object StreamingQueries {
       tail: DataFrame => DataFrame): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, tag,
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store"))
     store.init(AQ.typeBins(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.typeBins(batch))
-            .groupBy("b", "event_type").agg(sum("c").as("c")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    tail(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.typeBins(batch), "b", "event_type"))
+    }
+    tail(store.version(lastId))
   }
 
   /** Streaming Kruskal–Wallis: the maintained k-sample bin table, the
@@ -3728,23 +3298,12 @@ object StreamingQueries {
       tail: DataFrame => DataFrame): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, tag,
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store"))
     store.init(AQ.userDayGrid(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.userDayGrid(batch))
-            .groupBy("user_id", "d").agg(sum("n").as("n"), sum("np").as("np")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    tail(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.userDayGrid(batch), "user_id", "d"))
+    }
+    tail(store.version(lastId))
   }
 
   /** Streaming McNemar: the maintained (user, day) grid with the
@@ -3772,24 +3331,12 @@ object StreamingQueries {
       tail: DataFrame => DataFrame): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, tag,
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store"))
     store.init(AQ.dailyCents(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.dailyCents(batch))
-            .groupBy("event_type", "d")
-            .agg(sum("cnt").as("cnt"), sum("cents").as("cents")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    tail(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.dailyCents(batch), "event_type", "d"))
+    }
+    tail(store.version(lastId))
   }
 
   def streamSpearman(s: SparkSession, dir: String): DataFrame =
@@ -3808,8 +3355,6 @@ object StreamingQueries {
   def streamTclose(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "stcl",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     def tcOf(df: DataFrame): DataFrame =
       df.select(col("user_id"), col("event_type"))
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
@@ -3819,23 +3364,15 @@ object StreamingQueries {
     val dayStore = graft.streaming.VersionedStore(s, freshDir(dir, "stcl_days"))
     tcStore.init(tcOf(ev.limit(0)))
     dayStore.init(daysOf(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        inParallel(
-          () => tcStore.write(batchId,
-            tcStore.prior(batchId).unionByName(tcOf(batch))
-              .groupBy("user_id", "event_type").agg(sum("cnt").as("cnt"))),
-          () => dayStore.write(batchId,
-            dayStore.prior(batchId).unionByName(daysOf(batch)).distinct()))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.tcloseSolve(tcStore.version(lastBatchId(srcDir)),
-      dayStore.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "stcl", modSplit(ev, "event_id")) { (batch, batchId) =>
+      overlap(
+        () => tcStore.write(batchId,
+          tcStore.sumMerge(batchId, tcOf(batch), "user_id", "event_type")),
+        () => dayStore.write(batchId,
+          dayStore.prior(batchId).unionByName(daysOf(batch)).distinct()))
+    }
+    AQ.tcloseSolve(tcStore.version(lastId),
+      dayStore.version(lastId))
   }
 
   /** Streaming isotonic-calibration maintainer: the (score, n,
@@ -3853,23 +3390,12 @@ object StreamingQueries {
           round(graft.operators.TextAnalysis.stopwordCount(col("text"), "en") /
             graft.operators.TextAnalysis.tokenCount(col("text")), 3).as("sc"))
         .groupBy("sc").agg(count(lit(1)).as("n"), sum("pos").as("np"))
-    val srcDir = stageBatchFiles(dir, "siso",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "siso_store"))
     store.init(blocksOf(docs.limit(0)))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(blocksOf(batch))
-            .groupBy("sc").agg(sum("n").as("n"), sum("np").as("np")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.isotonicFromBlocks(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "siso", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, blocksOf(batch), "sc"))
+    }
+    AQ.isotonicFromBlocks(store.version(lastId))
   }
 
   /** Streaming CMH maintainer: the SAME additive per-user
@@ -3880,24 +3406,12 @@ object StreamingQueries {
   def streamCmh(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "scmh",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "scmh_store"))
     store.init(AQ.cmhUsers(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.cmhUsers(batch))
-            .groupBy("user_id")
-            .agg(sum("act").as("act"), sum("n").as("n"), sum("np").as("np")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.cmhFromUsers(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "scmh", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.cmhUsers(batch), "user_id"))
+    }
+    AQ.cmhFromUsers(store.version(lastId))
   }
 
   /** Streaming Granger maintainer: the per-day (click, purchase) count
@@ -3909,23 +3423,12 @@ object StreamingQueries {
   def streamGranger(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val srcDir = stageBatchFiles(dir, "sgrang",
-      (0 until 3).map(b => ev.filter(col("event_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sgrang_store"))
     store.init(AQ.grangerDaily(ev.limit(0)))
-    val q = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(AQ.grangerDaily(batch))
-            .groupBy("d").agg(sum("xc").as("xc"), sum("yp").as("yp")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    AQ.grangerFromDaily(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sgrang", modSplit(ev, "event_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, AQ.grangerDaily(batch), "d"))
+    }
+    AQ.grangerFromDaily(store.version(lastId))
   }
 
   /** Streaming Good–Turing maintainer: the (bigram, count) vocab table
@@ -3936,23 +3439,12 @@ object StreamingQueries {
   def streamGoodTuring(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir)
-    val srcDir = stageBatchFiles(dir, "sgt",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sgt_store"))
     store.init(PQ.gtBigramCounts(docs.limit(0)))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(PQ.gtBigramCounts(batch))
-            .groupBy("tok").agg(sum("cnt").as("cnt")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    PQ.goodTuringFromCounts(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sgt", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, PQ.gtBigramCounts(batch), "tok"))
+    }
+    PQ.goodTuringFromCounts(store.version(lastId))
   }
 
   /** Streaming Jensen–Shannon drift gate: the (source, token) counts
@@ -3964,23 +3456,12 @@ object StreamingQueries {
   def streamJs(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir)
-    val srcDir = stageBatchFiles(dir, "sjs",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sjs_store"))
     store.init(PQ.jsCounts(docs.limit(0)))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId,
-          store.prior(batchId).unionByName(PQ.jsCounts(batch))
-            .groupBy("source", "tok").agg(sum("cs").as("cs")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    PQ.jsFromCounts(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sjs", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, PQ.jsCounts(batch), "source", "tok"))
+    }
+    PQ.jsFromCounts(store.version(lastId))
   }
 
   /** Streaming Kaplan–Meier maintainer: incremental sessionization by
@@ -4014,50 +3495,40 @@ object StreamingQueries {
 
   private def survivalGridMaintained(s: SparkSession, dir: String, tag: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
-    val srcDir = stageBatchFiles(dir, tag, daySplits(ev, col("ts"), 3))
-    val lastBatch = lastBatchId(srcDir)
     val durStore = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store_d"))
     val openStore = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store_o"))
     durStore.init(s.range(0).select(col("id").as("dur"), col("id").as("d")))
     openStore.init(s.range(0).select(col("id").as("user_id"),
       col("id").as("s0"), col("id").as("s1")))
-    val batches = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id").orderBy("tss", "eff0")
-        val all = batch.select(col("user_id"), col("ts").cast("long").as("tss"))
-          .withColumn("eff0", col("tss"))
-          .unionByName(openStore.prior(batchId)
-            .select(col("user_id"), col("s1").as("tss"), col("s0").as("eff0")))
-          .localCheckpoint(eager = false)
-        val sess = all
-          .withColumn("prev", lag("tss", 1).over(w))
-          .withColumn("brk",
-            when(col("prev").isNull || col("tss") - col("prev") > 1800L, 1L).otherwise(0L))
-          .withColumn("sid", sum("brk").over(w))
-          .groupBy("user_id", "sid")
-          .agg(min("eff0").as("s0"), max("tss").as("s1"))
-          .withColumn("max_sid",
-            max("sid").over(org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
-          .localCheckpoint(eager = false)
-        val deaths = sess.filter(col("sid") < col("max_sid"))
-          .select(floor((col("s1") - col("s0")) / lit(60)).cast("long").as("dur"))
-          .groupBy("dur").agg(count(lit(1)).as("d"))
-        inParallel(
-          () => durStore.write(batchId, durStore.prior(batchId).unionByName(deaths)
-            .groupBy("dur").agg(sum("d").as("d"))),
-          () => openStore.write(batchId,
-            sess.filter(col("sid") === col("max_sid")).select("user_id", "s0", "s1")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, tag, daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy("tss", "eff0")
+      val all = batch.select(col("user_id"), col("ts").cast("long").as("tss"))
+        .withColumn("eff0", col("tss"))
+        .unionByName(openStore.prior(batchId)
+          .select(col("user_id"), col("s1").as("tss"), col("s0").as("eff0")))
+        .localCheckpoint(eager = false)
+      val sess = all
+        .withColumn("prev", lag("tss", 1).over(w))
+        .withColumn("brk",
+          when(col("prev").isNull || col("tss") - col("prev") > 1800L, 1L).otherwise(0L))
+        .withColumn("sid", sum("brk").over(w))
+        .groupBy("user_id", "sid")
+        .agg(min("eff0").as("s0"), max("tss").as("s1"))
+        .withColumn("max_sid",
+          max("sid").over(org.apache.spark.sql.expressions.Window.partitionBy("user_id")))
+        .localCheckpoint(eager = false)
+      val deaths = sess.filter(col("sid") < col("max_sid"))
+        .select(floor((col("s1") - col("s0")) / lit(60)).cast("long").as("dur"))
+        .groupBy("dur").agg(count(lit(1)).as("d"))
+      overlap(
+        () => durStore.write(batchId, durStore.sumMerge(batchId, deaths, "dur")),
+        () => openStore.write(batchId,
+          sess.filter(col("sid") === col("max_sid")).select("user_id", "s0", "s1")))
+    }
     // end-of-stream closure: the corpus end is the max open s1 (the
     // globally-last event always sits in an open session)
-    val open = openStore.version(lastBatch)
+    val open = openStore.version(lastId)
     val te = open.agg(max(col("s1")).as("te"))
     val finals = open.crossJoin(broadcast(te))
       .select(floor((col("s1") - col("s0")) / lit(60)).cast("long").as("dur"),
@@ -4065,7 +3536,7 @@ object StreamingQueries {
       .groupBy("dur").agg(
         sum(when(col("cen") === 0L, 1L).otherwise(0L)).as("df"),
         sum(col("cen")).as("c"))
-    durStore.version(lastBatch)
+    durStore.version(lastId)
       .join(finals, Seq("dur"), "full_outer")
       .select(col("dur"),
         (coalesce(col("d"), lit(0L)) + coalesce(col("df"), lit(0L))).as("d"),
@@ -4084,69 +3555,47 @@ object StreamingQueries {
   def streamSummarize(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem")
     val cols = Seq("l_quantity", "l_extendedprice", "l_returnflag", "l_linestatus")
-    val srcDir = stageBatchFiles(dir, "ssum",
-      (0 until 3).map(b => li.filter(col("l_orderkey") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "ssum_store"))
     store.init(graft.operators.Profiling.moments(li.limit(0), cols))
-    val q = s.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.write(batchId, graft.operators.Profiling.mergeMoments(
-          store.prior(batchId), graft.operators.Profiling.moments(batch, cols)))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.Profiling.report(store.version(lastBatchId(srcDir)))
+    val lastId = replay(dir, "ssum", modSplit(li, "l_orderkey")) { (batch, batchId) =>
+      store.write(batchId, graft.operators.Profiling.mergeMoments(
+        store.prior(batchId), graft.operators.Profiling.moments(batch, cols)))
+    }
+    graft.operators.Profiling.report(store.version(lastId))
       .orderBy("col_name")
   }
 
   def streamExpect(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val docs = Tables.documents(s, dir)
     val dups = docs.filter(col("doc_id") % 25 === 3)
-    val srcDir = stageBatchFiles(dir, "sexp", (0 until 3).map { b =>
-      val part0 = docs.filter(col("doc_id") % 3 === b)
-      if (b == 2) part0.unionByName(dups) else part0
-    })
+    val split = modSplit(docs, "doc_id")
+    val parts = split.updated(2, split(2).unionByName(dups))
     val reportStore = graft.streaming.VersionedStore(s, freshDir(dir, "sexp_store_r"))
     val keyStore = graft.streaming.VersionedStore(s, freshDir(dir, "sexp_store_k"))
     reportStore.init(s.range(0).select(col("id").cast("string").as("rule"),
       col("id").as("n_rows"), col("id").as("n_violations")))
     keyStore.init(s.range(0).select(col("id").as("doc_id")))
-    val batches = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorR = reportStore.prior(batchId)
-        val priorK = keyStore.prior(batchId)
-        val rowPart = graft.operators.Expectations
-          .audit(batch, PipelineQueries.expectRowRules)
-          .select("rule", "n_rows", "n_violations")
-        val perId = batch.groupBy("doc_id").agg(count(lit(1)).as("c")).localCheckpoint(eager = false)
-        val inb = perId.agg(
-          coalesce(sum(col("c")), lit(0L)).cast("long").as("rows_b"),
-          coalesce(sum(col("c") - 1), lit(0L)).cast("long").as("exc"))
-        val coll = perId.join(priorK, "doc_id")
-          .agg(count(lit(1)).cast("long").as("coll"))
-        val uniq = inb.crossJoin(coll)
-          .select(lit("doc_id_unique").as("rule"), col("rows_b").as("n_rows"),
-            (col("exc") + col("coll")).as("n_violations"))
-        inParallel(
-          () => reportStore.write(batchId, priorR.unionByName(rowPart.unionByName(uniq))
-            .groupBy("rule")
-            .agg(sum("n_rows").as("n_rows"), sum("n_violations").as("n_violations"))),
-          () => keyStore.write(batchId,
-            priorK.unionByName(perId.select("doc_id")).distinct()))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    reportStore.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sexp", parts) { (batch, batchId) =>
+      val priorK = keyStore.prior(batchId)
+      val rowPart = graft.operators.Expectations
+        .audit(batch, PipelineQueries.expectRowRules)
+        .select("rule", "n_rows", "n_violations")
+      val perId = batch.groupBy("doc_id").agg(count(lit(1)).as("c")).localCheckpoint(eager = false)
+      val inb = perId.agg(
+        coalesce(sum(col("c")), lit(0L)).cast("long").as("rows_b"),
+        coalesce(sum(col("c") - 1), lit(0L)).cast("long").as("exc"))
+      val coll = perId.join(priorK, "doc_id")
+        .agg(count(lit(1)).cast("long").as("coll"))
+      val uniq = inb.crossJoin(coll)
+        .select(lit("doc_id_unique").as("rule"), col("rows_b").as("n_rows"),
+          (col("exc") + col("coll")).as("n_violations"))
+      overlap(
+        () => reportStore.write(batchId,
+          reportStore.sumMerge(batchId, rowPart.unionByName(uniq), "rule")),
+        () => keyStore.write(batchId,
+          priorK.unionByName(perId.select("doc_id")).distinct()))
+    }
+    reportStore.version(lastId)
       .select(col("rule"), col("n_rows").cast("long").as("n_rows"),
         col("n_violations").cast("long").as("n_violations"),
         round(when(col("n_rows") === 0L, lit(0.0))
@@ -4170,67 +3619,48 @@ object StreamingQueries {
     * a full-outer merge-on-write; at production scale that merge is the
     * LSM compaction a merge-capable table format does for you, and the
     * store is line-keyed so it merges without ever touching the
-    * corpus). Batch files carry forced ascending mtimes; the oracle
-    * replays batch id = doc_id mod 3 with a cumulative-df window, so a
+    * corpus). The oracle replays batch id = doc_id mod 3 with a cumulative-df window, so a
     * line's strip verdict flips across batches exactly when the
     * accumulated distinct-doc count crosses the threshold.
     */
   def streamBoilerplate(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "sbp",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
-    val storeBase = freshDir(dir, "sbp_store")
+    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sbp_store"))
     val resDir = freshDir(dir, "sbp_res")
-    // pre-seed an empty store version and result table
+    // pre-seed an empty store version and result table; the store is
+    // keyed by xxhash64(line) — 8-byte identities, never the raw line
+    // text (Curation.stripBoilerplate's prior contract, r14 opt)
+    store.init(s.range(0).select(col("id").as("hl"), col("id").as("df")))
     graft.BenchMeters.fixture {
-      // store keyed by xxhash64(line) — 8-byte identities, never the raw
-      // line text (Curation.stripBoilerplate's prior contract, r14 opt)
-      s.range(0).select(col("id").as("hl"), col("id").as("df"))
-        .write.mode("overwrite").parquet(s"$storeBase/v_init")
       s.range(0).select(col("id").as("doc_id"), col("id").as("n_lines"),
           col("id").as("n_kept"), col("id").cast("string").as("kept_md5"))
         .write.mode("overwrite").parquet(resDir)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorPath =
-          if (batchId == 0) s"$storeBase/v_init" else s"$storeBase/v${batchId - 1}"
-        val prior = s.read.parquet(priorPath)
-        val lined = PipelineQueries.linedDocs(batch).localCheckpoint(eager = false)
-        // merge this batch's distinct-doc line counts into the store
-        // (8-byte xxhash64 line keys — the raw line never enters the
-        // store or its exchanges, r14 opt)
-        val own = lined
-          .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
-          .select(col("doc_id"), xxhash64(col("line")).as("hl"))
-          .distinct()
-          .groupBy("hl").agg(count(lit(1)).as("df"))
-        // the stripped result and the df-store merge share only `prior`
-        // and `lined` (reads) and write disjoint paths — overlap them
-        // (guide §2.6, r14 opt)
-        inParallel(
-          () => graft.operators.Curation
-            .stripBoilerplate(lined, minDocs = 2, prior = Some(prior))
-            .select(col("id").as("doc_id"), col("n_lines"), col("n_kept"),
-              md5(col("kept_text")).as("kept_md5"))
-            .coalesce(1).write.mode("append").parquet(resDir),
-          () => prior.select(col("hl"), col("df").as("pdf"))
-            .join(own.select(col("hl"), col("df").as("odf")), Seq("hl"), "full_outer")
-            .select(col("hl"),
-              (coalesce(col("pdf"), lit(0L)) + coalesce(col("odf"), lit(0L))).as("df"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$storeBase/v$batchId"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "sbp", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val lined = PipelineQueries.linedDocs(batch).localCheckpoint(eager = false)
+      // merge this batch's distinct-doc line counts into the store
+      // (8-byte xxhash64 line keys — the raw line never enters the
+      // store or its exchanges, r14 opt)
+      val own = lined
+        .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
+        .select(col("doc_id"), xxhash64(col("line")).as("hl"))
+        .distinct()
+        .groupBy("hl").agg(count(lit(1)).as("df"))
+      // the stripped result and the df-store merge share only `prior`
+      // and `lined` (reads) and write disjoint paths — overlap them
+      // (guide §2.6, r14 opt)
+      overlap(
+        () => graft.operators.Curation
+          .stripBoilerplate(lined, minDocs = 2, prior = Some(prior))
+          .select(col("id").as("doc_id"), col("n_lines"), col("n_kept"),
+            md5(col("kept_text")).as("kept_md5"))
+          .coalesce(1).write.mode("append").parquet(resDir),
+        () => store.write(batchId, prior.select(col("hl"), col("df").as("pdf"))
+          .join(own.select(col("hl"), col("df").as("odf")), Seq("hl"), "full_outer")
+          .select(col("hl"),
+            (coalesce(col("pdf"), lit(0L)) + coalesce(col("odf"), lit(0L))).as("df"))))
+    }
     s.read.parquet(resDir).orderBy("doc_id")
   }
 
@@ -4249,48 +3679,30 @@ object StreamingQueries {
     * counting with constant state and no corpus re-read.
     */
   def streamHll(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     import graft.operators.{Sketches, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "shll",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
-    val storeBase = freshDir(dir, "shll_store")
+    val store = graft.streaming.VersionedStore(s, freshDir(dir, "shll_store"))
     val resDir = freshDir(dir, "shll_res")
+    store.init(s.range(64).select(col("id").as("bucket"), lit(0L).as("reg")))
     graft.BenchMeters.fixture {
-      s.range(64).select(col("id").as("bucket"), lit(0L).as("reg"))
-        .write.mode("overwrite").parquet(s"$storeBase/v_init")
       s.range(0).select(col("id").as("batch"), col("id").cast("double").as("est_distinct"))
         .write.mode("overwrite").parquet(resDir)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorPath =
-          if (batchId == 0) s"$storeBase/v_init" else s"$storeBase/v${batchId - 1}"
-        val prior = s.read.parquet(priorPath)
-        val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
-        val own = Sketches.hllRegisters(sh, "sh", m = 64, wBits = 54)
-        val merged = prior.select(col("bucket"), col("reg").as("p"))
-          .join(own.select(col("bucket"), col("reg").as("o")), Seq("bucket"), "full_outer")
-          .select(col("bucket"),
-            greatest(coalesce(col("p"), lit(0L)), coalesce(col("o"), lit(0L))).as("reg"))
-          .localCheckpoint(eager = false) // serves both the store write and the estimate
-        inParallel(
-          () => merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$storeBase/v$batchId"),
-          () => Sketches.hllEstimate(merged, m = 64, wBits = 54, alpha = 0.709)
-            .select(lit(batchId).as("batch"), col("est_distinct"))
-            .coalesce(1).write.mode("append").parquet(resDir))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "shll", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
+      val own = Sketches.hllRegisters(sh, "sh", m = 64, wBits = 54)
+      val merged = prior.select(col("bucket"), col("reg").as("p"))
+        .join(own.select(col("bucket"), col("reg").as("o")), Seq("bucket"), "full_outer")
+        .select(col("bucket"),
+          greatest(coalesce(col("p"), lit(0L)), coalesce(col("o"), lit(0L))).as("reg"))
+        .localCheckpoint(eager = false) // serves both the store write and the estimate
+      overlap(
+        () => store.write(batchId, merged),
+        () => Sketches.hllEstimate(merged, m = 64, wBits = 54, alpha = 0.709)
+          .select(lit(batchId).as("batch"), col("est_distinct"))
+          .coalesce(1).write.mode("append").parquet(resDir))
+    }
     s.read.parquet(resDir).orderBy("batch")
   }
 
@@ -4324,53 +3736,36 @@ object StreamingQueries {
     * second merge semantics of the sketch family.
     */
   def streamCms(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     import graft.operators.{Sketches, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "scms",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
-    val storeBase = freshDir(dir, "scms_store")
+    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scms_store"))
     val resDir = freshDir(dir, "scms_res")
+    store.init(
+      s.range(0).select(col("id").cast("int").as("r"), col("id").as("b"), col("id").as("c")))
     graft.BenchMeters.fixture {
-      s.range(0).select(col("id").cast("int").as("r"), col("id").as("b"), col("id").as("c"))
-        .write.mode("overwrite").parquet(s"$storeBase/v_init")
       s.range(0).select(col("id").as("batch"), col("id").cast("string").as("tok"),
           col("id").as("est_cnt"))
         .write.mode("overwrite").parquet(resDir)
     }
     val probes = Seq("data", "stream", "table", "the")
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorPath =
-          if (batchId == 0) s"$storeBase/v_init" else s"$storeBase/v${batchId - 1}"
-        val prior = s.read.parquet(priorPath)
-        val toks = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-        val own = Sketches.cmsCells(toks, "tok", depth = 4, width = 256)
-        val merged = prior.select(col("r"), col("b"), col("c").as("p"))
-          .join(own.select(col("r"), col("b"), col("c").as("o")), Seq("r", "b"), "full_outer")
-          .select(col("r"), col("b"),
-            (coalesce(col("p"), lit(0L)) + coalesce(col("o"), lit(0L))).as("c"))
-          .localCheckpoint(eager = false) // serves both the store write and the probes
-        val probeDf = s.createDataFrame(
-          s.sparkContext.parallelize(probes.map(org.apache.spark.sql.Row(_))),
-          StructType(Seq(StructField("tok", StringType))))
-        inParallel(
-          () => merged.coalesce(1).write.mode("overwrite")
-            .parquet(s"$storeBase/v$batchId"),
-          () => Sketches.cmsLookup(merged, probeDf, "tok", depth = 4, width = 256)
-            .select(lit(batchId).as("batch"), col("tok"), col("est_cnt"))
-            .coalesce(1).write.mode("append").parquet(resDir))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "scms", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val toks = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
+      val own = Sketches.cmsCells(toks, "tok", depth = 4, width = 256)
+      val merged = prior.select(col("r"), col("b"), col("c").as("p"))
+        .join(own.select(col("r"), col("b"), col("c").as("o")), Seq("r", "b"), "full_outer")
+        .select(col("r"), col("b"),
+          (coalesce(col("p"), lit(0L)) + coalesce(col("o"), lit(0L))).as("c"))
+        .localCheckpoint(eager = false) // serves both the store write and the probes
+      val probeDf = s.createDataFrame(
+        s.sparkContext.parallelize(probes.map(org.apache.spark.sql.Row(_))),
+        StructType(Seq(StructField("tok", StringType))))
+      overlap(
+        () => store.write(batchId, merged),
+        () => Sketches.cmsLookup(merged, probeDf, "tok", depth = 4, width = 256)
+          .select(lit(batchId).as("batch"), col("tok"), col("est_cnt"))
+          .coalesce(1).write.mode("append").parquet(resDir))
+    }
     s.read.parquet(resDir).orderBy("batch", "tok")
   }
 
@@ -4457,11 +3852,10 @@ object StreamingQueries {
 
   def streamAggOfAgg(s: SparkSession, dir: String): DataFrame = {
     val splits = freshDir(dir, "agg_of_agg_src")
-    Tables.events(s, dir).select("event_id", "user_id")
-      .repartitionByRange(3, col("event_id"))
+    val ev = Tables.events(s, dir).select("event_id", "user_id")
+    ev.repartitionByRange(3, col("event_id"))
       .write.mode("overwrite").parquet(splits)
-    val inner = s.readStream
-      .schema(StructType(Seq(StructField("event_id", LongType), StructField("user_id", LongType))))
+    val inner = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1") // one batch per split → real retractions
       .parquet(splits)
       .groupBy("user_id").agg(count(lit(1)).as("n_events"))
@@ -5137,8 +4531,9 @@ object StreamingQueries {
     import org.apache.spark.sql.expressions.Window
 
     val jitterKey = unix_micros(col("ts")) + (col("event_id") % 97) * lit(300000000L)
-    val ev = Tables.events(s, dir)
+    val cols = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
+    val ev = cols
       .withColumn("b", ntile(3).over(Window.orderBy(jitterKey, col("event_id"))) - 1)
     // one file per micro-batch: ONE partitionBy write (a single job —
     // three filter+sort+write jobs cost ~3× the prep latency), then
@@ -5177,10 +4572,7 @@ object StreamingQueries {
         partials(merged, late = true).write.mode("append").parquet(store)
       })
 
-    val src = s.readStream
-      .schema(StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", TimestampType),
-        StructField("event_type", StringType), StructField("value", DoubleType))))
+    val src = s.readStream.schema(cols.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
     val q = src.writeStream.foreachBatch(handler).trigger(Trigger.AvailableNow()).start()
@@ -5224,29 +4616,19 @@ object StreamingQueries {
     */
   def streamFeatureHash(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select("user_id", "event_type", "ts")
-    val srcDir = stageBatchFiles(dir, "sfh", daySplits(ev, col("ts"), 3))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sfh_store"))
     store.init(s.range(0).select(col("id").as("user_id"), col("id").as("dim"),
       col("id").as("val")))
-    val batches = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val feats = batch.select(col("user_id"), explode(array(
-          concat(lit("t:"), col("event_type")),
-          concat(lit("h:"), hour(col("ts"))),
-          concat(lit("d:"), dayofweek(col("ts"))))).as("f"))
-        val own = graft.operators.Curation.featureHash(feats, "user_id", "f", dim = 32)
-          .select(col("key").as("user_id"), col("dim"), col("val"))
-        store.write(batchId, store.prior(batchId)
-          .unionByName(own)
-          .groupBy("user_id", "dim").agg(sum("val").as("val")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.version(lastBatchId(srcDir))
+    val lastId = replay(dir, "sfh", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val feats = batch.select(col("user_id"), explode(array(
+        concat(lit("t:"), col("event_type")),
+        concat(lit("h:"), hour(col("ts"))),
+        concat(lit("d:"), dayofweek(col("ts"))))).as("f"))
+      val own = graft.operators.Curation.featureHash(feats, "user_id", "f", dim = 32)
+        .select(col("key").as("user_id"), col("dim"), col("val"))
+      store.write(batchId, store.sumMerge(batchId, own, "user_id", "dim"))
+    }
+    store.version(lastId)
       .select(col("user_id"), col("dim"), col("val").cast("long").as("val"))
       .orderBy("user_id", "dim")
   }
@@ -5269,28 +4651,18 @@ object StreamingQueries {
     */
   def streamSoftDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "ssdd",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val fpStore = graft.streaming.DeltaStore(s, freshDir(dir, "ssdd_fp"))
     val dfStore = graft.streaming.DeltaStore(s, freshDir(dir, "ssdd_df"))
     fpStore.init(s.range(0).select(col("id"), lit("").as("ffp")))
     dfStore.init(s.range(0).select(lit("").as("ffp"), col("id").as("df")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fp = batch.select(col("doc_id").cast("long").as("id"),
-          md5(graft.operators.TextAnalysis.dedupFold(col("text"))).as("ffp"))
-          .localCheckpoint(eager = false)
-        inParallel(
-          () => fpStore.append(batchId, fp),
-          () => dfStore.append(batchId, fp.groupBy("ffp").agg(count(lit(1)).as("df"))))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val last = lastBatchId(srcDir)
+    val last = replay(dir, "ssdd", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val fp = batch.select(col("doc_id").cast("long").as("id"),
+        md5(graft.operators.TextAnalysis.dedupFold(col("text"))).as("ffp"))
+        .localCheckpoint(eager = false)
+      overlap(
+        () => fpStore.append(batchId, fp),
+        () => dfStore.append(batchId, fp.groupBy("ffp").agg(count(lit(1)).as("df"))))
+    }
     val dfc = dfStore.snapshot(last).groupBy("ffp").agg(sum("df").as("df"))
     fpStore.snapshot(last).join(dfc, "ffp")
       .select(col("id").as("doc_id"), col("df"),
@@ -5316,8 +4688,6 @@ object StreamingQueries {
   def streamSemDedup(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val srcDir = stageBatchFiles(dir, "ssem",
-      (0 until 3).map(b => emb.filter(col("vec_id") % 3 === b)))
     val cent = graft.BenchMeters.fixture {
       Similarity.kmeansCentroids(emb, k = 8, iters = 2).localCheckpoint(eager = false)
     }
@@ -5325,17 +4695,10 @@ object StreamingQueries {
     store.init(s.range(0).select(col("id").as("vec_id"),
       array().cast("array<double>").as("e"),
       col("id").cast("int").as("cid"), lit(0.0).as("ccos")))
-    val q = s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, Similarity.semDeDupAssign(batch, cent))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Similarity.semDeDupSolve(store.snapshot(lastBatchId(srcDir)), tau = 0.35)
+    val lastId = replay(dir, "ssem", modSplit(emb, "vec_id")) { (batch, batchId) =>
+      store.append(batchId, Similarity.semDeDupAssign(batch, cent))
+    }
+    Similarity.semDeDupSolve(store.snapshot(lastId), tau = 0.35)
       .orderBy("vec_id")
   }
 
@@ -5351,23 +4714,14 @@ object StreamingQueries {
     */
   def streamMojibake(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val srcDir = stageBatchFiles(dir, "smoji",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.DeltaStore(s, freshDir(dir, "smoji_st"))
     store.init(s.range(0).select(lit("").as("source"), col("id").as("n_docs"),
       col("id").as("n_mojibake"), col("id").as("markers_before"),
       col("id").as("markers_after"), col("id").as("fixed_checksum")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, PipelineQueries.mojibakeProfile(batch))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.snapshot(lastBatchId(srcDir))
+    val lastId = replay(dir, "smoji", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.append(batchId, PipelineQueries.mojibakeProfile(batch))
+    }
+    store.snapshot(lastId)
       .groupBy("source")
       .agg(sum("n_docs").as("n_docs"), sum("n_mojibake").as("n_mojibake"),
         sum("markers_before").as("markers_before"),
@@ -5391,22 +4745,13 @@ object StreamingQueries {
     */
   def streamDoremi(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val srcDir = stageBatchFiles(dir, "sdrm",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.DeltaStore(s, freshDir(dir, "sdrm_tok"))
     store.init(s.range(0).select(col("id").as("doc_id"),
       lit("").as("source"), lit("").as("tok")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, PipelineQueries.doremiToks(batch))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    PipelineQueries.doremiFromToks(store.snapshot(lastBatchId(srcDir)))
+    val lastId = replay(dir, "sdrm", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.append(batchId, PipelineQueries.doremiToks(batch))
+    }
+    PipelineQueries.doremiFromToks(store.snapshot(lastId))
   }
 
   /** Min-k% membership audit maintained on a document stream
@@ -5421,22 +4766,13 @@ object StreamingQueries {
     */
   def streamMink(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "smink",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.DeltaStore(s, freshDir(dir, "smink_tok"))
     store.init(s.range(0).select(col("id").as("doc_id"), lit("").as("tok")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, batch.select(col("doc_id"),
-          explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    PipelineQueries.minkFromToks(store.snapshot(lastBatchId(srcDir)))
+    val lastId = replay(dir, "smink", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.append(batchId, batch.select(col("doc_id"),
+        explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok")))
+    }
+    PipelineQueries.minkFromToks(store.snapshot(lastId))
   }
 
   /** Streaming KMV (bottom-k theta) maintenance — the LOSSLESS merge
@@ -5454,32 +4790,22 @@ object StreamingQueries {
     import org.apache.spark.sql.expressions.Window
     val k = 256
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "skmv",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "skmv_store"))
     store.init(s.range(0).select(col("id").as("h")))
     val audit = graft.streaming.DeltaStore(s, freshDir(dir, "skmv_audit"))
     audit.init(s.range(0).select(col("id").cast("string").as("sh")))
-    val q = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
-          .localCheckpoint(eager = false)
-        val own = Sketches.kmvValues(sh, "sh", k).select("h")
-        // bottom-k of the union of bottom-ks = the global bottom-k
-        // (min-merge); the window runs over ≤2k rows
-        inParallel(
-          () => store.write(batchId, store.prior(batchId).unionByName(own).distinct()
-            .withColumn("rk", row_number().over(Window.orderBy("h")))
-            .filter(col("rk") <= k).select("h")),
-          () => audit.append(batchId, sh.distinct()))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val last = lastBatchId(srcDir)
+    val last = replay(dir, "skmv", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
+        .localCheckpoint(eager = false)
+      val own = Sketches.kmvValues(sh, "sh", k).select("h")
+      // bottom-k of the union of bottom-ks = the global bottom-k
+      // (min-merge); the window runs over ≤2k rows
+      overlap(
+        () => store.write(batchId, store.prior(batchId).unionByName(own).distinct()
+          .withColumn("rk", row_number().over(Window.orderBy("h")))
+          .filter(col("rk") <= k).select("h")),
+        () => audit.append(batchId, sh.distinct()))
+    }
     val vals = Funnel.stageLazy(store.version(last)
       .withColumn("rank", row_number().over(Window.orderBy("h")).cast("long")))
     val est = Sketches.kmvEstimate(vals.select("h"), k)
@@ -5506,27 +4832,17 @@ object StreamingQueries {
     val docs = Funnel.stageLazy(Tables.documents(s, dir)
       .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp")))
     val base = docs.filter(col("doc_id") % 10 =!= 7)
-    val srcDir = stageBatchFiles(dir, "sblm",
-      (0 until 3).map(b => base.filter(col("doc_id") % 3 === b)))
     val store = graft.streaming.VersionedStore(s, freshDir(dir, "sblm_bits"))
     store.init(s.range(0).select(col("id").as("pos")))
     val fpStore = graft.streaming.DeltaStore(s, freshDir(dir, "sblm_fp"))
     fpStore.init(s.range(0).select(col("id").cast("string").as("fp")))
-    val q = s.readStream.schema(base.schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        inParallel(
-          () => store.write(batchId, store.prior(batchId)
-            .unionByName(Sketches.bloomBits(batch, "fp", k = 3, mBits = 4096))
-            .distinct()),
-          () => fpStore.append(batchId, batch.select("fp")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val last = lastBatchId(srcDir)
+    val last = replay(dir, "sblm", modSplit(base, "doc_id")) { (batch, batchId) =>
+      overlap(
+        () => store.write(batchId, store.prior(batchId)
+          .unionByName(Sketches.bloomBits(batch, "fp", k = 3, mBits = 4096))
+          .distinct()),
+        () => fpStore.append(batchId, batch.select("fp")))
+    }
     val delta = docs.filter(col("doc_id") % 10 === 7)
       .unionByName(docs.filter(col("doc_id") % 100 === 1)
         .select((col("doc_id") + 1000000).as("doc_id"), col("fp")))
@@ -5552,54 +4868,35 @@ object StreamingQueries {
     * is ≤k rows forever. Because the guarantee survives ANY merge
     * tree, the final store's candidates are a superset of the
     * frequency > n/(k+1) set, so the end-of-stream exact verify over
-    * the staged corpus emits EXACTLY the batch answer — the oracle is
+    * the corpus emits EXACTLY the batch answer — the oracle is
     * [[graft.queries.SketchQueries.docMgHeavySql]] verbatim.
     */
   def streamMg(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Sketches, TextAnalysis}
     val K = 24
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val srcDir = stageBatchFiles(dir, "smg",
-      (0 until 3).map(b => docs.filter(col("doc_id") % 3 === b)))
-    val storeBase = freshDir(dir, "smg_store")
-    graft.BenchMeters.fixture {
-      s.range(0).select(col("id").cast("string").as("item"), col("id").as("c"))
-        .write.mode("overwrite").parquet(s"$storeBase/v_init")
+    val store = graft.streaming.VersionedStore(s, freshDir(dir, "smg_store"))
+    store.init(s.range(0).select(col("id").cast("string").as("item"), col("id").as("c")))
+    val lastId = replay(dir, "smg", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val pfx = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
+        .select(substring(col("tok"), 1, 1).as("pfx"))
+      val own = Sketches.mgSummary(pfx, "pfx", K)
+      val summed = prior.select(col("item"), col("c").as("pc"))
+        .join(own.select(col("item"), col("c").as("oc")), Seq("item"), "full_outer")
+        .select(col("item"),
+          (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("c"))
+      val wRank = org.apache.spark.sql.expressions.Window
+        .orderBy(col("c").desc, col("item")) // ≤2k rows: bounded
+      val ranked = summed.withColumn("rn", row_number().over(wRank)).localCheckpoint(eager = false)
+      val sub = ranked.agg(max(when(col("rn") === K + 1, col("c"))).as("sub"))
+      store.write(batchId, ranked.crossJoin(broadcast(sub))
+        .select(col("item"), (col("c") - coalesce(col("sub"), lit(0L))).as("c"))
+        .filter(col("c") > 0))
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorPath =
-          if (batchId == 0) s"$storeBase/v_init" else s"$storeBase/v${batchId - 1}"
-        val prior = s.read.parquet(priorPath)
-        val pfx = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
-          .select(substring(col("tok"), 1, 1).as("pfx"))
-        val own = Sketches.mgSummary(pfx, "pfx", K)
-        val summed = prior.select(col("item"), col("c").as("pc"))
-          .join(own.select(col("item"), col("c").as("oc")), Seq("item"), "full_outer")
-          .select(col("item"),
-            (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("c"))
-        val wRank = org.apache.spark.sql.expressions.Window
-          .orderBy(col("c").desc, col("item")) // ≤2k rows: bounded
-        val ranked = summed.withColumn("rn", row_number().over(wRank)).localCheckpoint(eager = false)
-        val sub = ranked.agg(max(when(col("rn") === K + 1, col("c"))).as("sub"))
-        ranked.crossJoin(broadcast(sub))
-          .select(col("item"), (col("c") - coalesce(col("sub"), lit(0L))).as("c"))
-          .filter(col("c") > 0)
-          .coalesce(1).write.mode("overwrite").parquet(s"$storeBase/v$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // end-of-stream: candidate-restricted exact verify over the corpus
-    val cand = s.read.parquet(s"$storeBase/v${lastBatchId(srcDir)}")
-      .select(col("item").as("pfx"))
-    val corpus = s.read.parquet(srcDir)
+    val cand = store.version(lastId).select(col("item").as("pfx"))
+    val corpus = docs
       .select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
       .select(substring(col("tok"), 1, 1).as("pfx"))
     val n = corpus.agg(count(lit(1)).as("n"))
@@ -5629,13 +4926,11 @@ object StreamingQueries {
   def streamIterate(s: SparkSession, dir: String): DataFrame = {
     val users = Tables.events(s, dir).select("user_id").distinct()
       .select(col("user_id"), (col("user_id") % 5 + 1).as("value"))
-    val srcDir = stageBatchFiles(dir, "sit",
-      (0 until 3).map(b => users.filter(col("user_id") % 3 === b)))
-    val fbBase = freshDir(dir, "sit_fb")
+    val feedback = graft.streaming.VersionedStore(s, freshDir(dir, "sit_fb"))
     val resDir = freshDir(dir, "sit_res")
+    feedback.init(s.range(0).select(col("id").as("user_id"), col("id").as("value"),
+      col("id").as("steps")))
     graft.BenchMeters.fixture {
-      s.range(0).select(col("id").as("user_id"), col("id").as("value"),
-        col("id").as("steps")).write.mode("overwrite").parquet(s"$fbBase/v_init")
       s.range(0).select(col("id").as("user_id"), col("id").as("steps"),
         col("id").as("finished_pass")).write.mode("overwrite").parquet(resDir)
     }
@@ -5649,27 +4944,15 @@ object StreamingQueries {
         .coalesce(1).write.mode("append").parquet(resDir)
       stepped.filter(col("value") > 0)
     }
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("value", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val priorPath =
-          if (batchId == 0) s"$fbBase/v_init" else s"$fbBase/v${batchId - 1}"
-        val inflow = batch
-          .select(col("user_id"), col("value"), lit(0L).as("steps"))
-          .unionByName(s.read.parquet(priorPath))
-        pass(inflow, batchId)
-          .coalesce(1).write.mode("overwrite").parquet(s"$fbBase/v$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sit", modSplit(users, "user_id")) { (batch, batchId) =>
+      val inflow = batch
+        .select(col("user_id"), col("value"), lit(0L).as("steps"))
+        .unionByName(feedback.prior(batchId))
+      feedback.write(batchId, pass(inflow, batchId))
+    }
     // source drained: loop the feedback edge until it empties
-    var fb = s.read.parquet(s"$fbBase/v${lastBatchId(srcDir)}")
-    var passId = lastBatchId(srcDir) + 1
+    var fb = feedback.version(lastId)
+    var passId = lastId + 1
     while (!fb.isEmpty) {
       // EAGER: isEmpty (a partial action) is this frame's first consumer,
       // and a lazy boundary would checkpoint only the probed partitions,
@@ -5709,7 +4992,6 @@ object StreamingQueries {
   def streamQueryable(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.{QueryableState, VersionedStore}
     val ev = Tables.events(s, dir).select("user_id", "value", "ts")
-    val srcDir = stageBatchFiles(dir, "sqst", daySplits(ev, col("ts"), 3))
     val store = VersionedStore(s, freshDir(dir, "sqst_store"))
     val resDir = freshDir(dir, "sqst_res")
     val probes: Seq[Any] = graft.BenchMeters.fixture {
@@ -5722,34 +5004,25 @@ object StreamingQueries {
     val qname = s"uagg_${System.nanoTime()}" // fresh per run; client resolves by name
     QueryableState.register(qname, store)
     val client = new QueryableState.Client
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("value", DoubleType), StructField("ts", TimestampType))))
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = store.prior(batchId)
-        val own = batch.groupBy("user_id")
-          .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
-        val merged = prior
-          .select(col("user_id"), col("cnt").as("pc"), col("total").as("pt"))
-          .join(own.select(col("user_id"), col("cnt").as("oc"), col("total").as("ot")),
-            Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("cnt"),
-            (coalesce(col("pt"), lit(0.0)) + coalesce(col("ot"), lit(0.0))).as("total"))
-        store.write(batchId, merged)
-        QueryableState.publish(qname, batchId)
-        // external client's mid-stream view of the live state
-        client.getKvStates(qname, "user_id", probes)
-          .select(lit(batchId).as("batch"), col("user_id"),
-            col("cnt"), round(col("total"), 2).as("total"))
-          .coalesce(1).write.mode("append").parquet(resDir)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    replay(dir, "sqst", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val own = batch.groupBy("user_id")
+        .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
+      val merged = prior
+        .select(col("user_id"), col("cnt").as("pc"), col("total").as("pt"))
+        .join(own.select(col("user_id"), col("cnt").as("oc"), col("total").as("ot")),
+          Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("cnt"),
+          (coalesce(col("pt"), lit(0.0)) + coalesce(col("ot"), lit(0.0))).as("total"))
+      store.write(batchId, merged)
+      QueryableState.publish(qname, batchId)
+      // external client's mid-stream view of the live state
+      client.getKvStates(qname, "user_id", probes)
+        .select(lit(batchId).as("batch"), col("user_id"),
+          col("cnt"), round(col("total"), 2).as("total"))
+        .coalesce(1).write.mode("append").parquet(resDir)
+    }
     QueryableState.deregister(qname)
     s.read.parquet(resDir).orderBy("batch", "user_id")
   }
@@ -5794,30 +5067,20 @@ object StreamingQueries {
     // offline bootstrap write — measured operator work, not fixture
     store.bootstrap(splits.head.groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("total")))
-    val srcDir = stageBatchFiles(dir, "sboot", splits.tail)
-    val batches = s.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("value", DoubleType), StructField("ts", TimestampType))))
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prior = store.prior(batchId)
-        val own = batch.groupBy("user_id")
-          .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
-        store.write(batchId, prior
-          .select(col("user_id"), col("cnt").as("pc"), col("total").as("pt"))
-          .join(own.select(col("user_id"), col("cnt").as("oc"), col("total").as("ot")),
-            Seq("user_id"), "full_outer")
-          .select(col("user_id"),
-            (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("cnt"),
-            (coalesce(col("pt"), lit(0.0)) + coalesce(col("ot"), lit(0.0))).as("total")))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val lastId = replay(dir, "sboot", splits.tail) { (batch, batchId) =>
+      val prior = store.prior(batchId)
+      val own = batch.groupBy("user_id")
+        .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
+      store.write(batchId, prior
+        .select(col("user_id"), col("cnt").as("pc"), col("total").as("pt"))
+        .join(own.select(col("user_id"), col("cnt").as("oc"), col("total").as("ot")),
+          Seq("user_id"), "full_outer")
+        .select(col("user_id"),
+          (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("cnt"),
+          (coalesce(col("pt"), lit(0.0)) + coalesce(col("ot"), lit(0.0))).as("total")))
+    }
     // Savepoint reader: offline read of the final state
-    store.version(lastBatchId(srcDir))
+    store.version(lastId)
       .select(col("user_id"), col("cnt"), round(col("total"), 2).as("total"))
       .orderBy("user_id")
   }

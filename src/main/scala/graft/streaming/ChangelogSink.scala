@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
@@ -56,13 +56,6 @@ object ChangelogSink {
         // to one row per changed key by the stateful operator upstream
         store.upsert(batchId, batch.collect().toSeq.map(r => keyOf(r) -> r))
       }
-
-  def runAvailableNow[K](updates: DataFrame, keyOf: Row => K, store: UpsertStore[K]): Unit = {
-    val q: StreamingQuery = upsertWriter(updates, keyOf, store)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
 
   /** DISTRIBUTED upsert sink (the scale-safe counterpart of
     * [[MemoryUpsertStore]] — no `.collect()` anywhere): each micro-batch

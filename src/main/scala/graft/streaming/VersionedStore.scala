@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, sum}
 
 /** Versioned state store for `foreachBatch` incremental maintenance —
   * the operator-shaped form of the read-v(b−1) / write-v(b) discipline
@@ -58,6 +59,17 @@ final case class VersionedStore(spark: SparkSession, base: String) {
     */
   def write(batchId: Long, df: DataFrame): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path(batchId.toString))
+
+  /** The sum-merge of this batch's `delta` into the previous version —
+    * the merge of every ADDITIVE store (counts, sums, moment grids): the
+    * prior version ∪ `delta`, grouped by `keys`, every other column of
+    * `delta` summed under its own name, keys first, then the sums in
+    * `delta`'s column order. No keys sums the whole union into one row.
+    */
+  def sumMerge(batchId: Long, delta: DataFrame, keys: String*): DataFrame = {
+    val sums = delta.columns.toSeq.filterNot(keys.contains).map(c => sum(c).as(c))
+    prior(batchId).unionByName(delta).groupBy(keys.map(col): _*).agg(sums.head, sums.tail: _*)
+  }
 
   /** Read the final state after the stream drained. */
   def version(batchId: Long): DataFrame =

@@ -170,7 +170,10 @@ class EmptyInputSpec extends SparkSpec {
     "q_evt_holtwinters", // <14-day grid -> empty walk, no init moments
     "q_emb_knn_probe", // kNN over empty corpus -> empty votes/pred
     "q_emb_modularity", // m=0 kNN graph -> empty moments, no 0/0 division evaluated
-    "q_evt_bursts" // empty grid -> zero-moment types filtered, no ln(0)
+    "q_evt_bursts", // empty grid -> zero-moment types filtered, no ln(0)
+    "q_stream_kmv", // replay of 3 empty parts: bottom-k merge over an empty sketch store
+    "q_stream_tclose", // replay of 3 empty parts: sum + distinct merges into empty stores
+    "q_stream_mg" // replay of 3 empty parts: MG merge with a null subtrahend, empty verify
   )
 
   test("representative queries survive a fully empty corpus (no driver-side empty-input crash)") {

@@ -1,0 +1,65 @@
+package graft.queries
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Keeps the replay skeleton in one place. Outside
+  * [[StreamingQueries.replay]], `StreamingQueries.scala` may spell
+  * `option("maxFilesPerTrigger", "1")` or `Trigger.AvailableNow()` only
+  * inside the functions exempted below by name — each drives a stream
+  * that is not a staged-parts + `foreachBatch` replay. A maintainer that
+  * hand-writes the skeleton again fails this spec; it belongs on
+  * `replay`.
+  */
+class ReplayGuardSpec extends AnyFunSuite {
+
+  private val exempt = Map(
+    "replay" -> "the one home of the replay skeleton",
+    "runToTable" -> "memory sink, not foreachBatch",
+    "streamFileSink" -> "parquet file sink with its own checkpoint",
+    "streamAggOfAgg" -> "upsert sink over a range-partitioned source",
+    "streamTimeTravel" -> "upsert sink, read back as of each batch",
+    "streamCurate" -> "stages its own range-partitioned source files",
+    "streamLateUpdate" -> "stages its own ntile-split source files",
+    "streamSqlDedup" -> "runs through RankSql, not foreachBatch",
+    "streamSqlTopn" -> "runs through RankSql, not foreachBatch",
+    "streamRules" -> "goes through BroadcastState.withBatchRules")
+
+  private val tokens = Seq("""option("maxFilesPerTrigger", "1")""", "Trigger.AvailableNow()")
+  private val Member = """^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val) (\w+).*""".r
+
+  /** Lines carrying a skeleton token outside an exempt top-level member. */
+  private def offenders(lines: Seq[String]): Seq[String] = {
+    var member = ""
+    lines.zipWithIndex.flatMap { case (line, i) =>
+      line match {
+        case Member(name) => member = name
+        case _ => ()
+      }
+      if (tokens.exists(line.contains) && !exempt.contains(member))
+        Some(s"line ${i + 1} (in $member): ${line.trim}")
+      else None
+    }
+  }
+
+  test("StreamingQueries spells the replay skeleton only inside replay and the exempt streams") {
+    val lines = Files.readAllLines(
+      Paths.get("src/main/scala/graft/queries/StreamingQueries.scala"), UTF_8).asScala.toSeq
+    assert(lines.exists(_.contains("def replay(")), "replay not found: wrong file?")
+    val found = offenders(lines)
+    assert(found.isEmpty, s"hand-written replay skeleton; use replay:\n  ${found.mkString("\n  ")}")
+  }
+
+  test("the guard flags a hand-written copy in a non-exempt maintainer") {
+    val copy = Seq(
+      "  def streamCopy(s: SparkSession, dir: String): DataFrame = {",
+      "    s.readStream.schema(ev.schema)",
+      "      .option(\"maxFilesPerTrigger\", \"1\").parquet(srcDir)",
+      "      .trigger(Trigger.AvailableNow())",
+      "  }")
+    assert(offenders(copy).size === 2)
+  }
+}
