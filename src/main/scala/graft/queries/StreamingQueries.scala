@@ -18,22 +18,12 @@ import org.apache.spark.sql.types._
   */
 object StreamingQueries {
 
-  private def eventsSchema(tsType: DataType) = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", tsType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** File-source stream of events normalized to µs TimestampType. The
     * file source requires a DIRECTORY; the testdata dir mixes all
     * tables, so we expose events.parquet alone through a symlink under
-    * /tmp. The physical ts encoding varies with the generator's pandas
-    * version — TIMESTAMP(NANOS) (read as long via nanosAsLong, ÷1000)
-    * or TIMESTAMP(MICROS) (read as NTZ, reinterpreted as a UTC
-    * instant) — so the stream schema is probed from the footer like
-    * [[Tables.events]].
+    * /tmp. The stream declares the schema [[Tables.events]] reads the
+    * file with (memoized, so no inference job) and normalizes `ts` the
+    * same way, whichever encoding the file has.
     */
   private def eventStream(s: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
@@ -43,19 +33,7 @@ object StreamingQueries {
     val link = streamDir.resolve("events.parquet")
     if (!Files.exists(link))
       Files.createSymbolicLink(link, Paths.get(s"$dir/events.parquet"))
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
-      case LongType =>
-        s.readStream
-          .schema(eventsSchema(LongType))
-          .parquet(streamDir.toString)
-          .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case ntz =>
-        s.readStream
-          .schema(eventsSchema(ntz))
-          .parquet(streamDir.toString)
-          .withColumn("ts", col("ts").cast(TimestampType))
-    }
+    Tables.normalizeTs(s.readStream.schema(Tables.rawEventsSchema(s, dir)).parquet(streamDir.toString))
   }
 
   /** Fresh per-(sfDir, name) output directory under /tmp — cleaned before
