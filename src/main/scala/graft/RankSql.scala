@@ -83,8 +83,8 @@ object RankSql {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stateDir))
     val runDir = java.nio.file.Files
       .createTempDirectory(java.nio.file.Paths.get(stateDir), s"ranksql_${table}_")
-    val store = graft.streaming.VersionedStore(spark, runDir.toString)
-    store.init(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], src.schema))
+    val store = graft.streaming.VersionedStore(runDir.toString,
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], src.schema))
     @volatile var last = -1L // written from the stream-execution thread
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -97,9 +97,9 @@ object RankSql {
     q.awaitTermination()
     // the statement itself now runs over the maintained state — outer
     // projection/ordering semantics are Catalyst's, not re-implemented.
-    // Zero micro-batches = the empty init state: the statement returns
-    // its (empty) result exactly as the batch form would.
-    val state = if (last >= 0) store.version(last) else store.prior(0L)
+    // Zero micro-batches = the empty seed (version -1): the statement
+    // returns its (empty) result exactly as the batch form would.
+    val state = store.version(last)
     val view = s"__ranksql_${table}_state"
     state.createOrReplaceTempView(view)
     spark.sql(sql.replaceAll(s"(?i)\\bFROM\\s+$table\\b", s"FROM $view"))

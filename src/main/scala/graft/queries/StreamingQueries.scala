@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.cep.{AfterMatch, CEP, MatchRecognize, Pattern}
-import graft.streaming.{Event, StreamingOps}
+import graft.streaming.{DeltaStore, Event, StreamingOps, VersionedStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -50,6 +50,13 @@ object StreamingQueries {
     Files.createDirectories(p.getParent)
     p.toString
   }
+
+  /** An empty frame of the DDL-declared columns — the seed of a store
+    * that starts empty. It is a local relation with no rows, which
+    * Catalyst folds out of every union or join it meets.
+    */
+  private def emptyOf(s: SparkSession, ddl: String): DataFrame =
+    s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), StructType.fromDDL(ddl))
 
   /** Stage each `parts(i)` as one single-file micro-batch source under a
     * fresh directory — explicit names AND strictly increasing mtimes so
@@ -186,16 +193,22 @@ object StreamingQueries {
       }
     }
 
-  private def runToTable(name: String, out: DataFrame, mode: String): DataFrame = {
-    val spark = out.sparkSession
-    // Stateful operators pay a per-partition state-store commit each
-    // micro-batch; 32 shuffle partitions is pure overhead at local test
-    // scale (4 beat 8 by ~15-20% on the stream-stream joins at sf0.1).
-    // Scope the smaller setting to the streaming run — on a cluster this
-    // maps to sizing state partitions to executor count.
+  /** Runs `body` with `spark.sql.shuffle.partitions` at 4 and restores
+    * the previous value after it, also when it throws. Stateful operators
+    * pay a per-partition state-store commit each micro-batch; 32 shuffle
+    * partitions is pure overhead at local test scale (4 beat 8 by
+    * ~15-20% on the stream-stream joins at sf0.1). Scope the smaller
+    * setting to the streaming run — on a cluster this maps to sizing
+    * state partitions to executor count.
+    */
+  private def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  private def runToTable(name: String, out: DataFrame, mode: String): DataFrame =
+    withStatePartitions(out.sparkSession) {
       val qname = s"mem_$name"
       val q = out.writeStream
         .format("memory")
@@ -204,9 +217,8 @@ object StreamingQueries {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.table(qname)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+      out.sparkSession.table(qname)
+    }
 
   /** Streaming tumbling-window aggregate with a 10-minute watermark,
     * append mode (ref: StreamExecGroupWindowAggregate.scala:33 +
@@ -286,16 +298,11 @@ object StreamingQueries {
     env.executeSql(
       s"""CREATE TABLE ddl_hourly (wstart TIMESTAMP(3), event_type STRING, cnt BIGINT, sv BIGINT)
          |WITH ('connector'='filesystem', 'path'='$outDir', 'format'='parquet')""".stripMargin)
-    // same state-partition scoping as runToTable: 32 shuffle partitions
-    // is pure state-store-commit overhead at local replay scale
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try env.executeSql(
+    withStatePartitions(s)(env.executeSql(
       """INSERT INTO ddl_hourly
         |SELECT window.start, event_type, count(*),
         |  sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-        |FROM ddl_ev GROUP BY window(ts, '1 hour'), event_type""".stripMargin)
-    finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        |FROM ddl_ev GROUP BY window(ts, '1 hour'), event_type""".stripMargin))
     env.executeSql("SELECT wstart, event_type, cnt, sv FROM ddl_hourly ORDER BY wstart, event_type")
   }
 
@@ -573,22 +580,29 @@ object StreamingQueries {
         |SELECT user_id, start_s, duration_s, n_events, total_value
         |FROM g WHERE sid < max_sid ORDER BY user_id, start_s""".stripMargin
 
+  /** The stream-stream interval joins' one shape (ref:
+    * TimeBoundedStreamJoin.java:52): watermarked signups
+    * (a_id, a_user, a_ts) joined, as join type `how`, to watermarked
+    * purchases (b_id, b_user, b_ts) of the same user within 1h after —
+    * b_ts ∈ (a_ts, a_ts + 1h].
+    */
+  private def signupPurchaseJoin(s: SparkSession, dir: String, how: String): DataFrame = {
+    val ev = eventStream(s, dir)
+    def side(eventType: String, p: String): DataFrame = ev.filter(col("event_type") === eventType)
+      .withWatermark("ts", "10 minutes")
+      .select(col("event_id").as(s"${p}_id"), col("user_id").as(s"${p}_user"),
+        col("ts").as(s"${p}_ts"))
+    side("signup", "a").join(side("purchase", "b"),
+      col("a_user") === col("b_user")
+        && col("b_ts") > col("a_ts")
+        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"), how)
+  }
+
   /** Stream-stream interval join (ref: TimeBoundedStreamJoin.java:52):
     * signup ⋈ purchase within 1h, inner append — all pairs emitted.
     */
   def streamIntervalJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = eventStream(s, dir)
-    val a = ev.filter(col("event_type") === "signup")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val b = ev.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-    val out = a.join(b,
-      col("a_user") === col("b_user")
-        && col("b_ts") > col("a_ts")
-        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"))
-      .select("a_id", "b_id")
+    val out = signupPurchaseJoin(s, dir, "inner").select("a_id", "b_id")
     runToTable("stream_ij", out, "append").orderBy("a_id", "b_id")
   }
 
@@ -797,19 +811,7 @@ object StreamingQueries {
     * watermark passes their join window (a_ts + 1h).
     */
   def streamLeftJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = eventStream(s, dir)
-    val a = ev.filter(col("event_type") === "signup")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val b = ev.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-    val out = a.join(b,
-      col("a_user") === col("b_user")
-        && col("b_ts") > col("a_ts")
-        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
-      .select("a_id", "b_id")
+    val out = signupPurchaseJoin(s, dir, "left_outer").select("a_id", "b_id")
     runToTable("stream_loj", out, "append").orderBy("a_id", "b_id")
   }
 
@@ -841,19 +843,7 @@ object StreamingQueries {
     * same replay convention as the left join's oracle.
     */
   def streamFullJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = eventStream(s, dir)
-    val a = ev.filter(col("event_type") === "signup")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val b = ev.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-    val out = a.join(b,
-      col("a_user") === col("b_user")
-        && col("b_ts") > col("a_ts")
-        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"),
-      "full_outer")
-      .select("a_id", "b_id")
+    val out = signupPurchaseJoin(s, dir, "full_outer").select("a_id", "b_id")
     runToTable("stream_foj", out, "append").orderBy("a_id", "b_id")
   }
 
@@ -886,19 +876,7 @@ object StreamingQueries {
     * watermark passes b_ts (same bound as the full join's right side).
     */
   def streamRightJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = eventStream(s, dir)
-    val a = ev.filter(col("event_type") === "signup")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val b = ev.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-    val out = a.join(b,
-      col("a_user") === col("b_user")
-        && col("b_ts") > col("a_ts")
-        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"),
-      "right_outer")
-      .select("a_id", "b_id")
+    val out = signupPurchaseJoin(s, dir, "right_outer").select("a_id", "b_id")
     runToTable("stream_roj", out, "append").orderBy("a_id", "b_id")
   }
 
@@ -928,19 +906,7 @@ object StreamingQueries {
     * plain EXISTS with no watermark gate.
     */
   def streamSemiJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = eventStream(s, dir)
-    val a = ev.filter(col("event_type") === "signup")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val b = ev.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-      .select(col("user_id").as("b_user"), col("ts").as("b_ts"))
-    val out = a.join(b,
-      col("a_user") === col("b_user")
-        && col("b_ts") > col("a_ts")
-        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"),
-      "left_semi")
-      .select("a_id")
+    val out = signupPurchaseJoin(s, dir, "left_semi").select("a_id")
     runToTable("stream_sj", out, "append").orderBy("a_id")
   }
 
@@ -962,18 +928,7 @@ object StreamingQueries {
     * final min-watermark, mirrored in the oracle.
     */
   def streamAntiJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = eventStream(s, dir)
-    val a = ev.filter(col("event_type") === "signup")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val b = ev.filter(col("event_type") === "purchase")
-      .withWatermark("ts", "10 minutes")
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-    val out = a.join(b,
-      col("a_user") === col("b_user")
-        && col("b_ts") > col("a_ts")
-        && col("b_ts") <= col("a_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
+    val out = signupPurchaseJoin(s, dir, "left_outer")
       .filter(col("b_id").isNull)
       .select("a_id")
     runToTable("stream_aj", out, "append").orderBy("a_id")
@@ -1219,7 +1174,8 @@ object StreamingQueries {
     * (n_tokens ≥ 20), PRE-DEDUPED within the batch (per-fingerprint
     * `min_by` keeper — the map-side-combine of the incremental world:
     * state writes are bounded by batch cardinality, not batch rows),
-    * and appended to the keeper store; compaction happens on read with
+    * and appended to the keeper [[graft.streaming.DeltaStore]];
+    * compaction happens on read with
     * the same `min_by` merge. Because min is associative/commutative,
     * the final keeper set is EXACTLY batch exact-dedup no matter how
     * the stream was batched or ordered — which is what the oracle
@@ -1232,29 +1188,29 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
     docs.repartitionByRange(3, col("doc_id"))
       .write.mode("overwrite").parquet(splits)
-    val store = freshDir(dir, "curate_store")
+    def keepers(df: DataFrame): DataFrame = df
+      .select(col("doc_id"), col("source"),
+        TextAnalysis.tokenCount(col("text")).as("n_tokens"),
+        TextAnalysis.fingerprint(col("text")).as("fp"))
+      .filter(col("n_tokens") >= 20)
+      .groupBy("fp")
+      .agg(min_by(struct(col("doc_id"), col("source"), col("n_tokens")), col("doc_id")).as("r"))
+      .select(col("fp"), col("r.doc_id").as("doc_id"),
+        col("r.source").as("source"), col("r.n_tokens").as("n_tokens"))
+    val store = DeltaStore(freshDir(dir, "curate_store"), keepers(docs.limit(0)))
+    val last = new java.util.concurrent.atomic.AtomicLong(-1L)
     val batches = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1") // one batch per range split
       .parquet(splits)
     val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch
-          .select(col("doc_id"), col("source"),
-            TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-            TextAnalysis.fingerprint(col("text")).as("fp"))
-          .filter(col("n_tokens") >= 20)
-          .groupBy("fp")
-          .agg(min_by(struct(col("doc_id"), col("source"), col("n_tokens")),
-            col("doc_id")).as("r"))
-          .select(col("fp"), col("r.doc_id").as("doc_id"),
-            col("r.source").as("source"), col("r.n_tokens").as("n_tokens"))
-          .write.mode("append").parquet(store)
-        ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        store.append(batchId, keepers(batch))
+        last.set(batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(store)
+    store.snapshot(last.get)
       .groupBy("fp")
       .agg(min_by(struct(col("doc_id"), col("source"), col("n_tokens")), col("doc_id")).as("r"))
       .groupBy(col("r.source").as("source"))
@@ -1288,7 +1244,8 @@ object StreamingQueries {
   def streamRules(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val srcDir = stageBatchFiles(dir, "rules", modSplit(ev, "event_id"))
+    val parts = modSplit(ev, "event_id")
+    val srcDir = stageBatchFiles(dir, "rules", parts)
     // versioned rules snapshots: the "slowly-changing dimension" the
     // pattern refreshes — multiplier drifts by +1 per version
     val rulesDir = freshDir(dir, "rules_dim")
@@ -1299,11 +1256,7 @@ object StreamingQueries {
             (length(col("event_type")) + lit(v)).cast("double").as("mult"))
           .coalesce(1).write.mode("overwrite").parquet(s"$rulesDir/v$v")
     }
-    val store = freshDir(dir, "rules_out")
-    graft.BenchMeters.fixture {
-      ev.filter(lit(false)).withColumn("adj", lit(0.0))
-        .write.mode("overwrite").parquet(store)
-    }
+    val store = DeltaStore(freshDir(dir, "rules_out"), ev.limit(0).withColumn("adj", lit(0.0)))
     val batches = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
@@ -1314,7 +1267,7 @@ object StreamingQueries {
           (col("value") * col("mult")).as("adj"))
     }
     q.awaitTermination()
-    s.read.parquet(store)
+    store.snapshot(parts.size - 1L)
       .groupBy("event_type")
       .agg(count(lit(1)).as("cnt"), round(sum("adj"), 2).as("adj_total"))
       .orderBy("event_type")
@@ -1392,18 +1345,12 @@ object StreamingQueries {
       .filter(col("doc_id") % 100 === 1 && col("doc_id") % 3 === 1)
       .withColumn("doc_id", col("doc_id") + 1000000L)
     val all = docs.unionByName(recrawl)
-    val docStore = freshDir(dir, "dmh_docs")
-    val keyStore = freshDir(dir, "dmh_keys")
-    val resDir = freshDir(dir, "dmh_res")
-    // pre-seed the stores so the first batch reads valid empty tables
-    graft.BenchMeters.fixture {
-      all.filter(lit(false)).write.mode("overwrite").parquet(docStore)
-      graft.operators.Dedup.bandIndex(all.filter(lit(false)))
-        .write.mode("overwrite").parquet(keyStore)
-      s.range(0).select(col("id"), col("id").as("keeper"),
-        lit(0.0).as("jacc")).write.mode("overwrite").parquet(resDir)
-    }
-    replay(dir, "dmh", modSplit(all, "doc_id")) { (batch, _) =>
+    val docStore = DeltaStore(freshDir(dir, "dmh_docs"), all.limit(0))
+    val keyStore = DeltaStore(freshDir(dir, "dmh_keys"),
+      graft.operators.Dedup.bandIndex(all.limit(0)))
+    val res = DeltaStore(freshDir(dir, "dmh_res"),
+      emptyOf(s, "id BIGINT, keeper BIGINT, jacc DOUBLE"))
+    val last = replay(dir, "dmh", modSplit(all, "doc_id")) { (batch, batchId) =>
       // the PERSISTED band index is read, never recomputed — a
       // batch's probe cost tracks the batch, not the store; the
       // batch's OWN index is materialized once and serves both the
@@ -1417,20 +1364,19 @@ object StreamingQueries {
       // probe write instead of paying a dedicated localCheckpoint job
       val idx = graft.operators.Dedup.bandIndex(batch).localCheckpoint(eager = false)
       // the probe result and the two store appends write DISJOINT
-      // directories, and the probe's store reads pinned their file
-      // lists at construction (before any append lands) — overlap the
-      // three jobs so the tiny appends back-fill the probe join's
-      // tail (guide §2.6, r14 opt; probe-before-append semantics are
-      // preserved by the pinned listings)
+      // directories, and the probe reads only the stores' batch < b
+      // deltas — overlap the three jobs so the tiny appends back-fill
+      // the probe join's tail (guide §2.6, r14 opt; probe-before-append
+      // semantics are preserved by the snapshot(b−1) reads)
       val probe = graft.operators.Dedup.deltaMinHashKeepersWithIndex(
-        s.read.parquet(keyStore), s.read.parquet(docStore), batch,
+        keyStore.snapshot(batchId - 1), docStore.snapshot(batchId - 1), batch,
         deltaIndex = Some(idx))
       overlap(
-        () => probe.coalesce(1).write.mode("append").parquet(resDir),
-        () => idx.coalesce(1).write.mode("append").parquet(keyStore),
-        () => batch.coalesce(1).write.mode("append").parquet(docStore))
+        () => res.append(batchId, probe.coalesce(1)),
+        () => keyStore.append(batchId, idx.coalesce(1)),
+        () => docStore.append(batchId, batch.coalesce(1)))
     }
-    s.read.parquet(resDir).orderBy("id")
+    res.snapshot(last).orderBy("id")
   }
 
   /** Streaming INCREMENTAL k-means — continuous centroid maintenance
@@ -1453,15 +1399,15 @@ object StreamingQueries {
     import graft.functions.GraftFunctions.cosine_double
     val k = 8
     val emb = Tables.embeddings(s, dir).select("vec_id", "embedding")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "skm_store"))
-    val resBase = freshDir(dir, "skm_res")
     // accumulator seed: vec_id < k enters with unit weight (a prior at
     // the seed point — keeps every cluster alive until first assignment)
-    store.init(emb.filter(col("vec_id") < k)
-      .select(col("vec_id").cast("int").as("cid"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("i", "s")))
-      .withColumn("n", lit(1L)))
-    replay(dir, "skm", modSplit(emb, "vec_id")) { (batch, batchId) =>
+    val store = VersionedStore(freshDir(dir, "skm_store"),
+      emb.filter(col("vec_id") < k)
+        .select(col("vec_id").cast("int").as("cid"),
+          posexplode(col("embedding").cast("array<double>")).as(Seq("i", "s")))
+        .withColumn("n", lit(1L)))
+    val res = DeltaStore(freshDir(dir, "skm_res"), emptyOf(s, "vec_id BIGINT, bat BIGINT, cid INT"))
+    val lastId = replay(dir, "skm", modSplit(emb, "vec_id")) { (batch, batchId) =>
       val acc = store.prior(batchId)
       val cent = acc
         .groupBy("cid")
@@ -1479,22 +1425,20 @@ object StreamingQueries {
       val deltas = assigned
         .select(col("cid"), posexplode(col("e")).as(Seq("i", "v")))
         .groupBy("cid", "i").agg(sum("v").as("ds"), count(lit(1)).as("dn"))
-      // results versioned-OVERWRITE per batchId like the store, so a
-      // foreachBatch retry rewrites the same batch's rows instead of
-      // appending duplicates — the whole job is retry-idempotent; the
-      // two writes share only read-side frames and land on disjoint
-      // paths, so they overlap (guide §2.6, r14 opt)
+      // results are batch-stamped DeltaStore deltas, so a foreachBatch
+      // retry rewrites the same batch's rows instead of appending
+      // duplicates — the whole job is retry-idempotent; the two writes
+      // share only read-side frames and land on disjoint paths, so they
+      // overlap (guide §2.6, r14 opt)
       overlap(
         () => store.write(batchId, acc.join(deltas, Seq("cid", "i"), "left")
           .select(col("cid"), col("i"),
             (col("s") + coalesce(col("ds"), lit(0.0))).as("s"),
             (col("n") + coalesce(col("dn"), lit(0L))).as("n"))),
-        () => assigned.select(col("vec_id"), lit(batchId).as("bat"), col("cid"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$resBase/b$batchId"))
+        () => res.append(batchId,
+          assigned.select(col("vec_id"), lit(batchId).as("bat"), col("cid")).coalesce(1)))
     }
-    s.read.parquet(s"$resBase/b0", s"$resBase/b1", s"$resBase/b2")
-      .select(col("vec_id"), col("bat").cast("long").as("bat"), col("cid").cast("int").as("cid"))
-      .orderBy("vec_id")
+    res.snapshot(lastId).orderBy("vec_id")
   }
 
   val streamKmeansSql: String = {
@@ -1545,8 +1489,7 @@ object StreamingQueries {
     val edges = ev
       .select(col("event_id").as("a"), lag("event_id", 1).over(w).as("b"))
       .filter(col("b").isNotNull)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scc_store"))
-    store.init(s.range(0).select(col("id").as("da"), col("id").as("db")))
+    val store = VersionedStore(freshDir(dir, "scc_store"), emptyOf(s, "da BIGINT, db BIGINT"))
     val lastId = replay(dir, "scc", modSplit(edges, "a")) { (batch, batchId) =>
       // delta-cost maintenance: the batch relabels into root space and
       // only THAT contracts — history is one rewrite join, never a
@@ -1582,9 +1525,8 @@ object StreamingQueries {
     val ev = Tables.events(s, dir)
     val parts = modSplit(ev, "event_id")
       .map(_.select(col("event_type"), date_trunc("hour", col("ts")).as("h")))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sano_store"))
-    store.init(s.range(0).select(col("id").cast("string").as("event_type"),
-      col("id").cast("timestamp").as("h"), col("id").as("cnt")))
+    val store = VersionedStore(freshDir(dir, "sano_store"),
+      emptyOf(s, "event_type STRING, h TIMESTAMP, cnt BIGINT"))
     val lastId = replay(dir, "sano", parts) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId,
         batch.groupBy("event_type", "h").agg(count(lit(1)).as("cnt")), "event_type", "h"))
@@ -1624,11 +1566,9 @@ object StreamingQueries {
   def streamTransitions(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val countStore = graft.streaming.VersionedStore(s, freshDir(dir, "str_store_c"))
-    val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "str_store_l"))
-    countStore.init(s.range(0).select(col("id").cast("string").as("from_type"),
-      col("id").cast("string").as("to_type"), col("id").as("n")))
-    lastStore.init(ev.limit(0))
+    val countStore = VersionedStore(freshDir(dir, "str_store_c"),
+      emptyOf(s, "from_type STRING, to_type STRING, n BIGINT"))
+    val lastStore = VersionedStore(freshDir(dir, "str_store_l"), ev.limit(0))
     val lastId = replay(dir, "str", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val priorL = lastStore.prior(batchId)
       // prior last-events join the sequence so each boundary pair
@@ -1674,10 +1614,9 @@ object StreamingQueries {
   def streamPaths(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val countStore = graft.streaming.VersionedStore(s, freshDir(dir, "spath_store_c"))
-    val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "spath_store_l"))
-    countStore.init(s.range(0).select(col("id").cast("string").as("path"), col("id").as("n")))
-    lastStore.init(ev.limit(0))
+    val countStore = VersionedStore(freshDir(dir, "spath_store_c"),
+      emptyOf(s, "path STRING, n BIGINT"))
+    val lastStore = VersionedStore(freshDir(dir, "spath_store_l"), ev.limit(0))
     val lastId = replay(dir, "spath", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val priorL = lastStore.prior(batchId)
       val all = batch.unionByName(priorL).localCheckpoint(eager = false)
@@ -1720,10 +1659,8 @@ object StreamingQueries {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_type"))
       .filter(col("event_type").isin("view", "click", "purchase"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sfun_store"))
-    store.init(s.range(0).select(col("id").as("user_id"),
-      lit(null).cast("timestamp").as("t1"), lit(null).cast("timestamp").as("t2"),
-      lit(null).cast("timestamp").as("t3")))
+    val store = VersionedStore(freshDir(dir, "sfun_store"),
+      emptyOf(s, "user_id BIGINT, t1 TIMESTAMP, t2 TIMESTAMP, t3 TIMESTAMP"))
     def mergeMin(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       coalesce(least(a, b), a, b)
     val lastId = replay(dir, "sfun", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
@@ -1780,11 +1717,9 @@ object StreamingQueries {
   def streamAttribution(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"), col("value"))
-    val revStore = graft.streaming.VersionedStore(s, freshDir(dir, "satt_store_r"))
-    val touchStore = graft.streaming.VersionedStore(s, freshDir(dir, "satt_store_t"))
-    revStore.init(s.range(0).select(col("id").cast("string").as("channel"),
-      col("id").as("n_purchases"), col("id").cast("double").as("revenue")))
-    touchStore.init(ev.limit(0))
+    val revStore = VersionedStore(freshDir(dir, "satt_store_r"),
+      emptyOf(s, "channel STRING, n_purchases BIGINT, revenue DOUBLE"))
+    val touchStore = VersionedStore(freshDir(dir, "satt_store_t"), ev.limit(0))
     val lastId = replay(dir, "satt", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val priorT = touchStore.prior(batchId)
       val all = batch.withColumn("carry", lit(false))
@@ -1830,11 +1765,10 @@ object StreamingQueries {
   def streamRetention(s: SparkSession, dir: String): DataFrame = {
     val days = Tables.events(s, dir)
       .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val firstStore = graft.streaming.VersionedStore(s, freshDir(dir, "sret_store_f"))
-    val pairStore = graft.streaming.VersionedStore(s, freshDir(dir, "sret_store_p"))
-    firstStore.init(s.range(0).select(col("id").as("user_id"),
-      lit(null).cast("date").as("d0")))
-    pairStore.init(s.range(0).select(col("id").as("user_id"), col("id").as("week_offset")))
+    val firstStore = VersionedStore(freshDir(dir, "sret_store_f"),
+      emptyOf(s, "user_id BIGINT, d0 DATE"))
+    val pairStore = VersionedStore(freshDir(dir, "sret_store_p"),
+      emptyOf(s, "user_id BIGINT, week_offset BIGINT"))
     val lastId = replay(dir, "sret", daySplits(days, col("d"), 3)) { (batch, batchId) =>
       val priorF = firstStore.prior(batchId)
       val priorP = pairStore.prior(batchId)
@@ -1878,11 +1812,9 @@ object StreamingQueries {
       .select(col("user_id"), to_date(col("ts")).as("d")).distinct()
     val splits = daySplits(days, col("d"), 3)
     val lastBatch = splits.size - 1L
-    val countStore = graft.streaming.VersionedStore(s, freshDir(dir, "sgr_store_c"))
-    val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "sgr_store_l"))
-    countStore.init(s.range(0).select(lit(null).cast("date").as("day"),
-      col("id").cast("string").as("state"), col("id").as("n")))
-    lastStore.init(days.limit(0))
+    val countStore = VersionedStore(freshDir(dir, "sgr_store_c"),
+      emptyOf(s, "day DATE, state STRING, n BIGINT"))
+    val lastStore = VersionedStore(freshDir(dir, "sgr_store_l"), days.limit(0))
     val lastId = replay(dir, "sgr", splits) { (batch, batchId) =>
       val priorL = lastStore.prior(batchId)
       val w = org.apache.spark.sql.expressions.Window
@@ -1908,8 +1840,7 @@ object StreamingQueries {
       val churnFlush =
         if (batchId == lastBatch)
           newLast.select(date_add(col("d"), 1).as("day"), lit("churned").as("state"))
-        else s.range(0).select(lit(null).cast("date").as("day"),
-          col("id").cast("string").as("state"))
+        else emptyOf(s, "day DATE, state STRING")
       val delta = states.unionByName(churnSeen).unionByName(churnFlush)
         .groupBy("day", "state").agg(count(lit(1)).as("n"))
       overlap(
@@ -1962,13 +1893,9 @@ object StreamingQueries {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val minLen = 40
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val winStore = freshDir(dir, "ssub_wins")
-    val dfStore = graft.streaming.VersionedStore(s, freshDir(dir, "ssub_store"))
-    dfStore.init(s.range(0).select(col("id").as("h"), col("id").as("c")))
-    graft.BenchMeters.fixture {
-      s.range(0).select(col("id").as("doc_id"), col("id").cast("int").as("pos"),
-        col("id").as("h")).write.mode("overwrite").parquet(winStore)
-    }
+    val winStore = DeltaStore(freshDir(dir, "ssub_wins"),
+      emptyOf(s, "doc_id BIGINT, pos INT, h BIGINT"))
+    val dfStore = VersionedStore(freshDir(dir, "ssub_store"), emptyOf(s, "h BIGINT, c BIGINT"))
     val lastId = replay(dir, "ssub", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val hashes = ColumnBridge.column(graft.functions.RollingWindowHashes(
         ColumnBridge.expression(col("text")), minLen))
@@ -1977,14 +1904,14 @@ object StreamingQueries {
         .select(col("doc_id"), posexplode(hashes).as(Seq("pos", "h")))
         .localCheckpoint(eager = false)
       overlap(
-        () => wins.coalesce(1).write.mode("append").parquet(winStore),
+        () => winStore.append(batchId, wins.coalesce(1)),
         () => dfStore.write(batchId,
           dfStore.sumMerge(batchId, wins.groupBy("h").agg(count(lit(1)).as("c")), "h")))
     }
     // final read: probe the persisted index against the final hot set
     val hot = dfStore.version(lastId)
       .filter(col("c") >= 2).select("h")
-    val dup = s.read.parquet(winStore).join(hot, "h").select("doc_id", "pos")
+    val dup = winStore.snapshot(lastId).join(hot, "h").select("doc_id", "pos")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
     dup
@@ -2051,9 +1978,8 @@ object StreamingQueries {
       col("event_id").as("seq"), col("user_id"),
       round(col("value"), 2).as("value"), col("ts"))
     val parts = requireOffsetMonotone(daySplits(log, col("ts"), 3).map(_.drop("ts")), "seq")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scdc_store"))
-    store.init(s.range(0).select(col("id").as("user_id"),
-      col("id").cast("double").as("value")))
+    val store = VersionedStore(freshDir(dir, "scdc_store"),
+      emptyOf(s, "user_id BIGINT, value DOUBLE"))
     val lastId = replay(dir, "scdc", parts) { (batch, batchId) =>
       store.write(batchId, graft.streaming.Changelog.foldCdc(
         store.prior(batchId), batch, "user_id", "seq", "kind"))
@@ -2097,26 +2023,21 @@ object StreamingQueries {
       col("event_id").as("seq"), col("user_id"),
       round(col("value"), 2).as("value"), col("ts"))
     val parts = requireOffsetMonotone(daySplits(log, col("ts"), 3).map(_.drop("ts")), "seq")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scag_store"))
-    store.init(s.range(0).select(col("id").as("user_id"),
-      col("id").cast("double").as("value")))
-    val resDir = freshDir(dir, "scag_res")
-    graft.BenchMeters.fixture {
-      s.range(0).select(lit(0L).as("batch"), col("id").as("n_users"),
-        col("id").cast("double").as("total"))
-        .write.mode("overwrite").parquet(resDir)
-    }
-    replay(dir, "scag", parts) { (batch, batchId) =>
+    val store = VersionedStore(freshDir(dir, "scag_store"),
+      emptyOf(s, "user_id BIGINT, value DOUBLE"))
+    val res = DeltaStore(freshDir(dir, "scag_res"),
+      emptyOf(s, "batch BIGINT, n_users BIGINT, total DOUBLE"))
+    val last = replay(dir, "scag", parts) { (batch, batchId) =>
       val cur = graft.streaming.Changelog.foldCdc(
         store.prior(batchId), batch, "user_id", "seq", "kind")
         .localCheckpoint(eager = false)
       overlap(
-        () => cur.agg(count(lit(1)).as("n_users"), round(sum("value"), 2).as("total"))
-          .select(lit(batchId).as("batch"), col("n_users"), col("total"))
-          .coalesce(1).write.mode("append").parquet(resDir),
+        () => res.append(batchId,
+          cur.agg(count(lit(1)).as("n_users"), round(sum("value"), 2).as("total"))
+            .select(lit(batchId).as("batch"), col("n_users"), col("total")).coalesce(1)),
         () => store.write(batchId, cur))
     }
-    s.read.parquet(resDir).orderBy("batch")
+    res.snapshot(last).orderBy("batch")
   }
 
   /** Aggregate of every prefix fold of the same CDC log. */
@@ -2154,27 +2075,23 @@ object StreamingQueries {
     */
   def streamRetract(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "srtr_store"))
-    store.init(s.range(0).select(col("id").as("user_id"), col("id").as("cnt")))
-    val resDir = freshDir(dir, "srtr_res")
-    graft.BenchMeters.fixture {
-      s.range(0).select(lit(0L).as("batch"), lit("").as("kind"),
-        col("id").as("user_id"), col("id").as("cnt"))
-        .write.mode("overwrite").parquet(resDir)
-    }
-    replay(dir, "srtr", daySplits(ev, col("ts"), 3).map(_.drop("ts"))) { (batch, batchId) =>
+    val store = VersionedStore(freshDir(dir, "srtr_store"),
+      emptyOf(s, "user_id BIGINT, cnt BIGINT"))
+    val res = DeltaStore(freshDir(dir, "srtr_res"),
+      emptyOf(s, "batch BIGINT, kind STRING, user_id BIGINT, cnt BIGINT"))
+    val parts = daySplits(ev, col("ts"), 3).map(_.drop("ts"))
+    val last = replay(dir, "srtr", parts) { (batch, batchId) =>
       val prior = store.prior(batchId).localCheckpoint(eager = false)
       val cur = prior
         .unionByName(batch.groupBy("user_id").agg(count(lit(1)).as("cnt")))
         .groupBy("user_id").agg(sum("cnt").as("cnt"))
         .localCheckpoint(eager = false)
       overlap(
-        () => graft.streaming.Changelog.retractDiff(prior, cur, "user_id")
-          .select(lit(batchId).as("batch"), col("kind"), col("user_id"), col("cnt"))
-          .coalesce(1).write.mode("append").parquet(resDir),
+        () => res.append(batchId, graft.streaming.Changelog.retractDiff(prior, cur, "user_id")
+          .select(lit(batchId).as("batch"), col("kind"), col("user_id"), col("cnt")).coalesce(1)),
         () => store.write(batchId, cur))
     }
-    s.read.parquet(resDir).orderBy("batch", "user_id", "kind")
+    res.snapshot(last).orderBy("batch", "user_id", "kind")
   }
 
   /** The change log recomputed from cumulative prefix counts over the
@@ -2222,17 +2139,11 @@ object StreamingQueries {
       .select(col("event_type"), col("user_id"), col("value"),
         col("event_id").as("seq"), col("ts"))
     val parts = requireOffsetMonotone(daySplits(ev, col("ts"), 3).map(_.drop("ts")), "seq")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "strn_store"))
-    store.init(s.range(0).select(col("id").cast("string").as("event_type"),
-      col("id").as("user_id"), col("id").cast("double").as("score"),
-      col("id").as("seq")))
-    val resDir = freshDir(dir, "strn_res")
-    graft.BenchMeters.fixture {
-      s.range(0).select(lit(0L).as("batch"), col("id").cast("string").as("event_type"),
-        col("id").as("rank"), col("id").as("user_id"), col("id").cast("double").as("score"))
-        .write.mode("overwrite").parquet(resDir)
-    }
-    replay(dir, "strn", parts) { (batch, batchId) =>
+    val store = VersionedStore(freshDir(dir, "strn_store"),
+      emptyOf(s, "event_type STRING, user_id BIGINT, score DOUBLE, seq BIGINT"))
+    val res = DeltaStore(freshDir(dir, "strn_res"),
+      emptyOf(s, "batch BIGINT, event_type STRING, rank BIGINT, user_id BIGINT, score DOUBLE"))
+    val last = replay(dir, "strn", parts) { (batch, batchId) =>
       val prior = store.prior(batchId).localCheckpoint(eager = false)
       // last value per (type, user): max_by over the offset, merged
       // against the prior table the same way (associative)
@@ -2252,15 +2163,15 @@ object StreamingQueries {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy(col("score").desc, col("user_id"))
       overlap(
-        () => cur.join(changedTypes, "event_type")
+        () => res.append(batchId, cur.join(changedTypes, "event_type")
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 3)
           .select(lit(batchId).as("batch"), col("event_type"),
             col("rank").cast("long"), col("user_id"), col("score"))
-          .coalesce(1).write.mode("append").parquet(resDir),
+          .coalesce(1)),
         () => store.write(batchId, cur))
     }
-    s.read.parquet(resDir)
+    res.snapshot(last)
       .select(col("batch"), col("event_type"), col("rank"), col("user_id"),
         round(col("score"), 2).as("score"))
       .orderBy("batch", "event_type", "rank")
@@ -2322,8 +2233,7 @@ object StreamingQueries {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sshap_store"))
-    store.init(AQ.shapleyJourneys(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sshap_store"), AQ.shapleyJourneys(ev.limit(0)))
     val lastId = replay(dir, "sshap", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val prior = store.prior(batchId)
       val inc = AQ.shapleyJourneys(batch)
@@ -2360,10 +2270,8 @@ object StreamingQueries {
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
     def daysOf(df: DataFrame): DataFrame =
       df.select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val tcStore = graft.streaming.VersionedStore(s, freshDir(dir, "skanon_tc"))
-    val dayStore = graft.streaming.VersionedStore(s, freshDir(dir, "skanon_days"))
-    tcStore.init(tcOf(ev.limit(0)))
-    dayStore.init(daysOf(ev.limit(0)))
+    val tcStore = VersionedStore(freshDir(dir, "skanon_tc"), tcOf(ev.limit(0)))
+    val dayStore = VersionedStore(freshDir(dir, "skanon_days"), daysOf(ev.limit(0)))
     val lastId = replay(dir, "skanon", modSplit(ev, "event_id")) { (batch, batchId) =>
       overlap(
         () => tcStore.write(batchId,
@@ -2397,8 +2305,7 @@ object StreamingQueries {
     def dailyOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("cnt"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${name}_store"))
-    store.init(dailyOf(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, s"${name}_store"), dailyOf(ev.limit(0)))
     val lastId = replay(dir, name, modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
     }
@@ -2451,11 +2358,10 @@ object StreamingQueries {
         .groupBy("vec_id")
         .agg(first("label").as("label"), first("embedding").as("embedding"),
           max_by(col("cid"), struct(col("cd"), -col("cid"))).as("cid"))
-    val corpus = graft.streaming.VersionedStore(s, freshDir(dir, "sknn_corpus"))
-    corpus.init(withCell(emb.limit(0)))
-    val preds = graft.streaming.VersionedStore(s, freshDir(dir, "sknn_preds"))
-    preds.init(emb.limit(0)
-      .select(col("vec_id"), col("label").cast("long"), col("label").cast("long").as("pred")))
+    val corpus = VersionedStore(freshDir(dir, "sknn_corpus"), withCell(emb.limit(0)))
+    val preds = VersionedStore(freshDir(dir, "sknn_preds"),
+      emb.limit(0)
+        .select(col("vec_id"), col("label").cast("long"), col("label").cast("long").as("pred")))
     val lastId = replay(dir, "sknn", modSplit(emb, "vec_id")) { (batch, batchId) =>
       val prior = corpus.prior(batchId)
       // nprobe nearest cells per probe vector, then a cid equi-join
@@ -2555,8 +2461,7 @@ object StreamingQueries {
   def streamMsprt(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "smsprt_store"))
-    store.init(AQ.msprtDaily(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "smsprt_store"), AQ.msprtDaily(ev.limit(0)))
     val lastId = replay(dir, "smsprt", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.msprtDaily(batch), "d"))
     }
@@ -2575,8 +2480,7 @@ object StreamingQueries {
   def streamAte(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sate_store"))
-    store.init(AQ.ateUsers(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sate_store"), AQ.ateUsers(ev.limit(0)))
     val lastId = replay(dir, "sate", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
         .groupBy("user_id").agg(sum("act").as("act"),
@@ -2600,10 +2504,8 @@ object StreamingQueries {
   def streamHeaps(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir)
-    val fsStore = graft.streaming.VersionedStore(s, freshDir(dir, "sheaps_fs"))
-    val dlStore = graft.streaming.VersionedStore(s, freshDir(dir, "sheaps_dl"))
-    fsStore.init(PQ.heapsFirstSeen(docs.limit(0)))
-    dlStore.init(PQ.heapsDocLen(docs.limit(0)))
+    val fsStore = VersionedStore(freshDir(dir, "sheaps_fs"), PQ.heapsFirstSeen(docs.limit(0)))
+    val dlStore = VersionedStore(freshDir(dir, "sheaps_dl"), PQ.heapsDocLen(docs.limit(0)))
     val lastId = replay(dir, "sheaps", modSplit(docs, "doc_id")) { (batch, batchId) =>
       overlap(
         () => fsStore.write(batchId, fsStore.prior(batchId)
@@ -2629,8 +2531,7 @@ object StreamingQueries {
   def streamBenford(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sbenford_store"))
-    store.init(AQ.benfordDigits(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sbenford_store"), AQ.benfordDigits(ev.limit(0)))
     val lastId = replay(dir, "sbenford", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.benfordDigits(batch), "d"))
     }
@@ -2648,8 +2549,7 @@ object StreamingQueries {
   def streamLorenz(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "slorenz_store"))
-    store.init(AQ.lorenzUsers(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "slorenz_store"), AQ.lorenzUsers(ev.limit(0)))
     val lastId = replay(dir, "slorenz", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.lorenzUsers(batch), "user_id"))
     }
@@ -2683,8 +2583,7 @@ object StreamingQueries {
             coalesce(col(s"g_${i}_$j"), lit(0L)).as("g_scaled"))): _*)).as("x"))
         .select(col("x.i").as("i"), col("x.j").as("j"), col("x.g_scaled").as("g_scaled"))
     }
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sgram_store"))
-    store.init(cells(emb.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sgram_store"), cells(emb.limit(0)))
     val lastId = replay(dir, "sgram", modSplit(emb, "vec_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, cells(batch), "i", "j"))
     }
@@ -2733,12 +2632,11 @@ object StreamingQueries {
     val parts = (0 until 3).map(b => tagged.filter(
       (col("tag") === "o" && col("k") % 3 === b)
         || (col("tag") === "l" && col("k") % 3 === (b + 1) % 3)))
-    val oStore = graft.streaming.DeltaStore(s, freshDir(dir, "sivm_o"))
-    val lStore = graft.streaming.DeltaStore(s, freshDir(dir, "sivm_l"))
-    val jStore = graft.streaming.DeltaStore(s, freshDir(dir, "sivm_j"))
-    oStore.init(tagged.limit(0).select(col("k"), col("pri")))
-    lStore.init(tagged.limit(0).select(col("k"), col("price_micro")))
-    jStore.init(tagged.limit(0).select(col("k"), col("pri"), col("price_micro")))
+    val oStore = DeltaStore(freshDir(dir, "sivm_o"), tagged.limit(0).select(col("k"), col("pri")))
+    val lStore = DeltaStore(freshDir(dir, "sivm_l"),
+      tagged.limit(0).select(col("k"), col("price_micro")))
+    val jStore = DeltaStore(freshDir(dir, "sivm_j"),
+      tagged.limit(0).select(col("k"), col("pri"), col("price_micro")))
     val lastId = replay(dir, "sivm", parts) { (batch, batchId) =>
       val b = batch.localCheckpoint(eager = false)
       val dO = b.filter(col("tag") === "o").select(col("k"), col("pri"))
@@ -2876,8 +2774,7 @@ object StreamingQueries {
   def streamQini(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sqini_store"))
-    store.init(AQ.ateUsers(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sqini_store"), AQ.ateUsers(ev.limit(0)))
     val lastId = replay(dir, "sqini", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
         .groupBy("user_id").agg(sum("act").as("act"),
@@ -2900,8 +2797,7 @@ object StreamingQueries {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
     def prof(df: DataFrame): DataFrame = AQ.conformalUsers(df).drop("fold")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sconf_store"))
-    store.init(prof(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sconf_store"), prof(ev.limit(0)))
     val lastId = replay(dir, "sconf", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, prof(batch), "user_id"))
     }
@@ -2927,8 +2823,7 @@ object StreamingQueries {
     def dailyOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("cnt"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sdisp_store"))
-    store.init(dailyOf(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sdisp_store"), dailyOf(ev.limit(0)))
     val lastId = replay(dir, "sdisp", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
     }
@@ -2954,8 +2849,7 @@ object StreamingQueries {
     def dailyOf(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("cnt"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sbseg_store"))
-    store.init(dailyOf(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sbseg_store"), dailyOf(ev.limit(0)))
     val lastId = replay(dir, "sbseg", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
     }
@@ -2974,8 +2868,7 @@ object StreamingQueries {
   def streamFlaggedTerms(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sflag_store"))
-    store.init(PQ.flaggedTermCounts(docs.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sflag_store"), PQ.flaggedTermCounts(docs.limit(0)))
     val lastId = replay(dir, "sflag", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.write(batchId,
         store.sumMerge(batchId, PQ.flaggedTermCounts(batch), "source", "term"))
@@ -2999,8 +2892,7 @@ object StreamingQueries {
   def streamSnm(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.DeltaStore(s, freshDir(dir, "ssnm_keys"))
-    store.init(s.range(0).select(col("id"), lit("").as("key")))
+    val store = DeltaStore(freshDir(dir, "ssnm_keys"), emptyOf(s, "id BIGINT, key STRING"))
     val lastId = replay(dir, "ssnm", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.append(batchId, batch.select(col("doc_id").as("id"),
         substring(TextAnalysis.normalizeText(col("text")), 1, 64).as("key")))
@@ -3021,8 +2913,8 @@ object StreamingQueries {
   def streamLinkage(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Funnel, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val store = graft.streaming.DeltaStore(s, freshDir(dir, "slnk_keys"))
-    store.init(s.range(0).select(col("id"), lit("").as("key"), lit("").as("source")))
+    val store = DeltaStore(freshDir(dir, "slnk_keys"),
+      emptyOf(s, "id BIGINT, key STRING, source STRING"))
     val lastId = replay(dir, "slnk", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.append(batchId, batch.select(col("doc_id").as("id"),
         substring(TextAnalysis.normalizeText(col("text")), 1, 64).as("key"),
@@ -3062,11 +2954,9 @@ object StreamingQueries {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-    val transStore = graft.streaming.VersionedStore(s, freshDir(dir, "smattr_trans"))
-    val lastStore = graft.streaming.VersionedStore(s, freshDir(dir, "smattr_last"))
-    transStore.init(s.range(0).select(col("id").cast("string").as("f"),
-      col("id").cast("string").as("t"), col("id").as("n")))
-    lastStore.init(ev.limit(0))
+    val transStore = VersionedStore(freshDir(dir, "smattr_trans"),
+      emptyOf(s, "f STRING, t STRING, n BIGINT"))
+    val lastStore = VersionedStore(freshDir(dir, "smattr_last"), ev.limit(0))
     val last = replay(dir, "smattr", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val priorL = lastStore.prior(batchId)
       // carried last-journey rows rejoin the sequence as lag sources
@@ -3121,8 +3011,7 @@ object StreamingQueries {
     def cells(df: DataFrame): DataFrame =
       df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
         .agg(count(lit(1)).as("n"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sdpr_store"))
-    store.init(cells(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sdpr_store"), cells(ev.limit(0)))
     val lastId = replay(dir, "sdpr", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, cells(batch), "event_type", "d"))
     }
@@ -3143,8 +3032,7 @@ object StreamingQueries {
   def streamCuped(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scuped_store"))
-    store.init(AQ.cupedDaily(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "scuped_store"), AQ.cupedDaily(ev.limit(0)))
     val lastId = replay(dir, "scuped", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.cupedDaily(batch), "user_id", "de"))
     }
@@ -3154,8 +3042,7 @@ object StreamingQueries {
   def streamOls(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sols_store"))
-    store.init(AQ.olsStats(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sols_store"), AQ.olsStats(ev.limit(0)))
     val lastId = replay(dir, "sols", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.olsStats(batch)))
     }
@@ -3178,8 +3065,8 @@ object StreamingQueries {
     import graft.queries.{PipelineQueries => PQ}
     val emb = Tables.embeddings(s, dir)
     val d = PQ.EmbDim
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "slda_store"))
-    store.init(Pca.classSums(emb.limit(0), "label", "embedding", d))
+    val store = VersionedStore(freshDir(dir, "slda_store"),
+      Pca.classSums(emb.limit(0), "label", "embedding", d))
     val lastId = replay(dir, "slda", modSplit(emb, "vec_id")) { (batch, batchId) =>
       store.write(batchId,
         store.prior(batchId)
@@ -3198,8 +3085,7 @@ object StreamingQueries {
   def streamKs(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sks_store"))
-    store.init(AQ.ksBins(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sks_store"), AQ.ksBins(ev.limit(0)))
     val lastId = replay(dir, "sks", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.ksBins(batch), "b"))
     }
@@ -3216,8 +3102,7 @@ object StreamingQueries {
   def streamMannWhitney(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "smw_store"))
-    store.init(AQ.ksBins(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "smw_store"), AQ.ksBins(ev.limit(0)))
     val lastId = replay(dir, "smw", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.ksBins(batch), "b"))
     }
@@ -3234,8 +3119,7 @@ object StreamingQueries {
       tail: DataFrame => DataFrame): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store"))
-    store.init(AQ.typeBins(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, s"${tag}_store"), AQ.typeBins(ev.limit(0)))
     val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.typeBins(batch), "b", "event_type"))
     }
@@ -3276,8 +3160,7 @@ object StreamingQueries {
       tail: DataFrame => DataFrame): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store"))
-    store.init(AQ.userDayGrid(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, s"${tag}_store"), AQ.userDayGrid(ev.limit(0)))
     val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.userDayGrid(batch), "user_id", "d"))
     }
@@ -3309,8 +3192,7 @@ object StreamingQueries {
       tail: DataFrame => DataFrame): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store"))
-    store.init(AQ.dailyCents(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, s"${tag}_store"), AQ.dailyCents(ev.limit(0)))
     val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.dailyCents(batch), "event_type", "d"))
     }
@@ -3338,10 +3220,8 @@ object StreamingQueries {
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
     def daysOf(df: DataFrame): DataFrame =
       df.select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val tcStore = graft.streaming.VersionedStore(s, freshDir(dir, "stcl_tc"))
-    val dayStore = graft.streaming.VersionedStore(s, freshDir(dir, "stcl_days"))
-    tcStore.init(tcOf(ev.limit(0)))
-    dayStore.init(daysOf(ev.limit(0)))
+    val tcStore = VersionedStore(freshDir(dir, "stcl_tc"), tcOf(ev.limit(0)))
+    val dayStore = VersionedStore(freshDir(dir, "stcl_days"), daysOf(ev.limit(0)))
     val lastId = replay(dir, "stcl", modSplit(ev, "event_id")) { (batch, batchId) =>
       overlap(
         () => tcStore.write(batchId,
@@ -3368,8 +3248,7 @@ object StreamingQueries {
           round(graft.operators.TextAnalysis.stopwordCount(col("text"), "en") /
             graft.operators.TextAnalysis.tokenCount(col("text")), 3).as("sc"))
         .groupBy("sc").agg(count(lit(1)).as("n"), sum("pos").as("np"))
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "siso_store"))
-    store.init(blocksOf(docs.limit(0)))
+    val store = VersionedStore(freshDir(dir, "siso_store"), blocksOf(docs.limit(0)))
     val lastId = replay(dir, "siso", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, blocksOf(batch), "sc"))
     }
@@ -3384,8 +3263,7 @@ object StreamingQueries {
   def streamCmh(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scmh_store"))
-    store.init(AQ.cmhUsers(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "scmh_store"), AQ.cmhUsers(ev.limit(0)))
     val lastId = replay(dir, "scmh", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.cmhUsers(batch), "user_id"))
     }
@@ -3401,8 +3279,7 @@ object StreamingQueries {
   def streamGranger(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sgrang_store"))
-    store.init(AQ.grangerDaily(ev.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sgrang_store"), AQ.grangerDaily(ev.limit(0)))
     val lastId = replay(dir, "sgrang", modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, AQ.grangerDaily(batch), "d"))
     }
@@ -3417,8 +3294,7 @@ object StreamingQueries {
   def streamGoodTuring(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sgt_store"))
-    store.init(PQ.gtBigramCounts(docs.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sgt_store"), PQ.gtBigramCounts(docs.limit(0)))
     val lastId = replay(dir, "sgt", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, PQ.gtBigramCounts(batch), "tok"))
     }
@@ -3434,8 +3310,7 @@ object StreamingQueries {
   def streamJs(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sjs_store"))
-    store.init(PQ.jsCounts(docs.limit(0)))
+    val store = VersionedStore(freshDir(dir, "sjs_store"), PQ.jsCounts(docs.limit(0)))
     val lastId = replay(dir, "sjs", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.write(batchId, store.sumMerge(batchId, PQ.jsCounts(batch), "source", "tok"))
     }
@@ -3473,11 +3348,10 @@ object StreamingQueries {
 
   private def survivalGridMaintained(s: SparkSession, dir: String, tag: String): DataFrame = {
     val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
-    val durStore = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store_d"))
-    val openStore = graft.streaming.VersionedStore(s, freshDir(dir, s"${tag}_store_o"))
-    durStore.init(s.range(0).select(col("id").as("dur"), col("id").as("d")))
-    openStore.init(s.range(0).select(col("id").as("user_id"),
-      col("id").as("s0"), col("id").as("s1")))
+    val durStore = VersionedStore(freshDir(dir, s"${tag}_store_d"),
+      emptyOf(s, "dur BIGINT, d BIGINT"))
+    val openStore = VersionedStore(freshDir(dir, s"${tag}_store_o"),
+      emptyOf(s, "user_id BIGINT, s0 BIGINT, s1 BIGINT"))
     val lastId = replay(dir, tag, daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("tss", "eff0")
@@ -3533,8 +3407,8 @@ object StreamingQueries {
   def streamSummarize(s: SparkSession, dir: String): DataFrame = {
     val li = Tables(s, dir, "lineitem")
     val cols = Seq("l_quantity", "l_extendedprice", "l_returnflag", "l_linestatus")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "ssum_store"))
-    store.init(graft.operators.Profiling.moments(li.limit(0), cols))
+    val store = VersionedStore(freshDir(dir, "ssum_store"),
+      graft.operators.Profiling.moments(li.limit(0), cols))
     val lastId = replay(dir, "ssum", modSplit(li, "l_orderkey")) { (batch, batchId) =>
       store.write(batchId, graft.operators.Profiling.mergeMoments(
         store.prior(batchId), graft.operators.Profiling.moments(batch, cols)))
@@ -3548,11 +3422,9 @@ object StreamingQueries {
     val dups = docs.filter(col("doc_id") % 25 === 3)
     val split = modSplit(docs, "doc_id")
     val parts = split.updated(2, split(2).unionByName(dups))
-    val reportStore = graft.streaming.VersionedStore(s, freshDir(dir, "sexp_store_r"))
-    val keyStore = graft.streaming.VersionedStore(s, freshDir(dir, "sexp_store_k"))
-    reportStore.init(s.range(0).select(col("id").cast("string").as("rule"),
-      col("id").as("n_rows"), col("id").as("n_violations")))
-    keyStore.init(s.range(0).select(col("id").as("doc_id")))
+    val reportStore = VersionedStore(freshDir(dir, "sexp_store_r"),
+      emptyOf(s, "rule STRING, n_rows BIGINT, n_violations BIGINT"))
+    val keyStore = VersionedStore(freshDir(dir, "sexp_store_k"), emptyOf(s, "doc_id BIGINT"))
     val lastId = replay(dir, "sexp", parts) { (batch, batchId) =>
       val priorK = keyStore.prior(batchId)
       val rowPart = graft.operators.Expectations
@@ -3603,18 +3475,12 @@ object StreamingQueries {
     */
   def streamBoilerplate(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sbp_store"))
-    val resDir = freshDir(dir, "sbp_res")
-    // pre-seed an empty store version and result table; the store is
-    // keyed by xxhash64(line) — 8-byte identities, never the raw line
-    // text (Curation.stripBoilerplate's prior contract, r14 opt)
-    store.init(s.range(0).select(col("id").as("hl"), col("id").as("df")))
-    graft.BenchMeters.fixture {
-      s.range(0).select(col("id").as("doc_id"), col("id").as("n_lines"),
-          col("id").as("n_kept"), col("id").cast("string").as("kept_md5"))
-        .write.mode("overwrite").parquet(resDir)
-    }
-    replay(dir, "sbp", modSplit(docs, "doc_id")) { (batch, batchId) =>
+    // the store is keyed by xxhash64(line) — 8-byte identities, never
+    // the raw line text (Curation.stripBoilerplate's prior contract, r14 opt)
+    val store = VersionedStore(freshDir(dir, "sbp_store"), emptyOf(s, "hl BIGINT, df BIGINT"))
+    val res = DeltaStore(freshDir(dir, "sbp_res"),
+      emptyOf(s, "doc_id BIGINT, n_lines BIGINT, n_kept BIGINT, kept_md5 STRING"))
+    val last = replay(dir, "sbp", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val prior = store.prior(batchId)
       val lined = PipelineQueries.linedDocs(batch).localCheckpoint(eager = false)
       // merge this batch's distinct-doc line counts into the store
@@ -3629,17 +3495,17 @@ object StreamingQueries {
       // and `lined` (reads) and write disjoint paths — overlap them
       // (guide §2.6, r14 opt)
       overlap(
-        () => graft.operators.Curation
+        () => res.append(batchId, graft.operators.Curation
           .stripBoilerplate(lined, minDocs = 2, prior = Some(prior))
           .select(col("id").as("doc_id"), col("n_lines"), col("n_kept"),
             md5(col("kept_text")).as("kept_md5"))
-          .coalesce(1).write.mode("append").parquet(resDir),
+          .coalesce(1)),
         () => store.write(batchId, prior.select(col("hl"), col("df").as("pdf"))
           .join(own.select(col("hl"), col("df").as("odf")), Seq("hl"), "full_outer")
           .select(col("hl"),
             (coalesce(col("pdf"), lit(0L)) + coalesce(col("odf"), lit(0L))).as("df"))))
     }
-    s.read.parquet(resDir).orderBy("doc_id")
+    res.snapshot(last).orderBy("doc_id")
   }
 
   /** Streaming HLL maintenance — the MERGEABILITY property that makes
@@ -3659,14 +3525,10 @@ object StreamingQueries {
   def streamHll(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Sketches, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "shll_store"))
-    val resDir = freshDir(dir, "shll_res")
-    store.init(s.range(64).select(col("id").as("bucket"), lit(0L).as("reg")))
-    graft.BenchMeters.fixture {
-      s.range(0).select(col("id").as("batch"), col("id").cast("double").as("est_distinct"))
-        .write.mode("overwrite").parquet(resDir)
-    }
-    replay(dir, "shll", modSplit(docs, "doc_id")) { (batch, batchId) =>
+    val store = VersionedStore(freshDir(dir, "shll_store"),
+      s.range(64).select(col("id").as("bucket"), lit(0L).as("reg")))
+    val res = DeltaStore(freshDir(dir, "shll_res"), emptyOf(s, "batch BIGINT, est_distinct DOUBLE"))
+    val last = replay(dir, "shll", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val prior = store.prior(batchId)
       val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
       val own = Sketches.hllRegisters(sh, "sh", m = 64, wBits = 54)
@@ -3677,11 +3539,10 @@ object StreamingQueries {
         .localCheckpoint(eager = false) // serves both the store write and the estimate
       overlap(
         () => store.write(batchId, merged),
-        () => Sketches.hllEstimate(merged, m = 64, wBits = 54, alpha = 0.709)
-          .select(lit(batchId).as("batch"), col("est_distinct"))
-          .coalesce(1).write.mode("append").parquet(resDir))
+        () => res.append(batchId, Sketches.hllEstimate(merged, m = 64, wBits = 54, alpha = 0.709)
+          .select(lit(batchId).as("batch"), col("est_distinct")).coalesce(1)))
     }
-    s.read.parquet(resDir).orderBy("batch")
+    res.snapshot(last).orderBy("batch")
   }
 
   val streamHllSql: String =
@@ -3716,17 +3577,11 @@ object StreamingQueries {
   def streamCms(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Sketches, TextAnalysis}
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "scms_store"))
-    val resDir = freshDir(dir, "scms_res")
-    store.init(
-      s.range(0).select(col("id").cast("int").as("r"), col("id").as("b"), col("id").as("c")))
-    graft.BenchMeters.fixture {
-      s.range(0).select(col("id").as("batch"), col("id").cast("string").as("tok"),
-          col("id").as("est_cnt"))
-        .write.mode("overwrite").parquet(resDir)
-    }
+    val store = VersionedStore(freshDir(dir, "scms_store"), emptyOf(s, "r INT, b BIGINT, c BIGINT"))
+    val res = DeltaStore(freshDir(dir, "scms_res"),
+      emptyOf(s, "batch BIGINT, tok STRING, est_cnt BIGINT"))
     val probes = Seq("data", "stream", "table", "the")
-    replay(dir, "scms", modSplit(docs, "doc_id")) { (batch, batchId) =>
+    val last = replay(dir, "scms", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val prior = store.prior(batchId)
       val toks = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
       val own = Sketches.cmsCells(toks, "tok", depth = 4, width = 256)
@@ -3740,11 +3595,10 @@ object StreamingQueries {
         StructType(Seq(StructField("tok", StringType))))
       overlap(
         () => store.write(batchId, merged),
-        () => Sketches.cmsLookup(merged, probeDf, "tok", depth = 4, width = 256)
-          .select(lit(batchId).as("batch"), col("tok"), col("est_cnt"))
-          .coalesce(1).write.mode("append").parquet(resDir))
+        () => res.append(batchId, Sketches.cmsLookup(merged, probeDf, "tok", depth = 4, width = 256)
+          .select(lit(batchId).as("batch"), col("tok"), col("est_cnt")).coalesce(1)))
     }
-    s.read.parquet(resDir).orderBy("batch", "tok")
+    res.snapshot(last).orderBy("batch", "tok")
   }
 
   val streamCmsSql: String =
@@ -4594,9 +4448,8 @@ object StreamingQueries {
     */
   def streamFeatureHash(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select("user_id", "event_type", "ts")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sfh_store"))
-    store.init(s.range(0).select(col("id").as("user_id"), col("id").as("dim"),
-      col("id").as("val")))
+    val store = VersionedStore(freshDir(dir, "sfh_store"),
+      emptyOf(s, "user_id BIGINT, dim BIGINT, val BIGINT"))
     val lastId = replay(dir, "sfh", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val feats = batch.select(col("user_id"), explode(array(
         concat(lit("t:"), col("event_type")),
@@ -4629,10 +4482,8 @@ object StreamingQueries {
     */
   def streamSoftDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val fpStore = graft.streaming.DeltaStore(s, freshDir(dir, "ssdd_fp"))
-    val dfStore = graft.streaming.DeltaStore(s, freshDir(dir, "ssdd_df"))
-    fpStore.init(s.range(0).select(col("id"), lit("").as("ffp")))
-    dfStore.init(s.range(0).select(lit("").as("ffp"), col("id").as("df")))
+    val fpStore = DeltaStore(freshDir(dir, "ssdd_fp"), emptyOf(s, "id BIGINT, ffp STRING"))
+    val dfStore = DeltaStore(freshDir(dir, "ssdd_df"), emptyOf(s, "ffp STRING, df BIGINT"))
     val last = replay(dir, "ssdd", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val fp = batch.select(col("doc_id").cast("long").as("id"),
         md5(graft.operators.TextAnalysis.dedupFold(col("text"))).as("ffp"))
@@ -4669,10 +4520,8 @@ object StreamingQueries {
     val cent = graft.BenchMeters.fixture {
       Similarity.kmeansCentroids(emb, k = 8, iters = 2).localCheckpoint(eager = false)
     }
-    val store = graft.streaming.DeltaStore(s, freshDir(dir, "ssem_a"))
-    store.init(s.range(0).select(col("id").as("vec_id"),
-      array().cast("array<double>").as("e"),
-      col("id").cast("int").as("cid"), lit(0.0).as("ccos")))
+    val store = DeltaStore(freshDir(dir, "ssem_a"),
+      emptyOf(s, "vec_id BIGINT, e ARRAY<DOUBLE>, cid INT, ccos DOUBLE"))
     val lastId = replay(dir, "ssem", modSplit(emb, "vec_id")) { (batch, batchId) =>
       store.append(batchId, Similarity.semDeDupAssign(batch, cent))
     }
@@ -4692,10 +4541,9 @@ object StreamingQueries {
     */
   def streamMojibake(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val store = graft.streaming.DeltaStore(s, freshDir(dir, "smoji_st"))
-    store.init(s.range(0).select(lit("").as("source"), col("id").as("n_docs"),
-      col("id").as("n_mojibake"), col("id").as("markers_before"),
-      col("id").as("markers_after"), col("id").as("fixed_checksum")))
+    val store = DeltaStore(freshDir(dir, "smoji_st"),
+      emptyOf(s, "source STRING, n_docs BIGINT, n_mojibake BIGINT, markers_before BIGINT, " +
+        "markers_after BIGINT, fixed_checksum BIGINT"))
     val lastId = replay(dir, "smoji", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.append(batchId, PipelineQueries.mojibakeProfile(batch))
     }
@@ -4723,9 +4571,8 @@ object StreamingQueries {
     */
   def streamDoremi(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val store = graft.streaming.DeltaStore(s, freshDir(dir, "sdrm_tok"))
-    store.init(s.range(0).select(col("id").as("doc_id"),
-      lit("").as("source"), lit("").as("tok")))
+    val store = DeltaStore(freshDir(dir, "sdrm_tok"),
+      emptyOf(s, "doc_id BIGINT, source STRING, tok STRING"))
     val lastId = replay(dir, "sdrm", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.append(batchId, PipelineQueries.doremiToks(batch))
     }
@@ -4744,8 +4591,7 @@ object StreamingQueries {
     */
   def streamMink(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.DeltaStore(s, freshDir(dir, "smink_tok"))
-    store.init(s.range(0).select(col("id").as("doc_id"), lit("").as("tok")))
+    val store = DeltaStore(freshDir(dir, "smink_tok"), emptyOf(s, "doc_id BIGINT, tok STRING"))
     val lastId = replay(dir, "smink", modSplit(docs, "doc_id")) { (batch, batchId) =>
       store.append(batchId, batch.select(col("doc_id"),
         explode(graft.operators.TextAnalysis.tokens(col("text"))).as("tok")))
@@ -4768,10 +4614,8 @@ object StreamingQueries {
     import org.apache.spark.sql.expressions.Window
     val k = 256
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "skmv_store"))
-    store.init(s.range(0).select(col("id").as("h")))
-    val audit = graft.streaming.DeltaStore(s, freshDir(dir, "skmv_audit"))
-    audit.init(s.range(0).select(col("id").cast("string").as("sh")))
+    val store = VersionedStore(freshDir(dir, "skmv_store"), emptyOf(s, "h BIGINT"))
+    val audit = DeltaStore(freshDir(dir, "skmv_audit"), emptyOf(s, "sh STRING"))
     val last = replay(dir, "skmv", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
         .localCheckpoint(eager = false)
@@ -4810,10 +4654,8 @@ object StreamingQueries {
     val docs = Funnel.stageLazy(Tables.documents(s, dir)
       .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp")))
     val base = docs.filter(col("doc_id") % 10 =!= 7)
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "sblm_bits"))
-    store.init(s.range(0).select(col("id").as("pos")))
-    val fpStore = graft.streaming.DeltaStore(s, freshDir(dir, "sblm_fp"))
-    fpStore.init(s.range(0).select(col("id").cast("string").as("fp")))
+    val store = VersionedStore(freshDir(dir, "sblm_bits"), emptyOf(s, "pos BIGINT"))
+    val fpStore = DeltaStore(freshDir(dir, "sblm_fp"), emptyOf(s, "fp STRING"))
     val last = replay(dir, "sblm", modSplit(base, "doc_id")) { (batch, batchId) =>
       overlap(
         () => store.write(batchId, store.prior(batchId)
@@ -4853,8 +4695,7 @@ object StreamingQueries {
     import graft.operators.{Sketches, TextAnalysis}
     val K = 24
     val docs = Tables.documents(s, dir).select("doc_id", "text")
-    val store = graft.streaming.VersionedStore(s, freshDir(dir, "smg_store"))
-    store.init(s.range(0).select(col("id").cast("string").as("item"), col("id").as("c")))
+    val store = VersionedStore(freshDir(dir, "smg_store"), emptyOf(s, "item STRING, c BIGINT"))
     val lastId = replay(dir, "smg", modSplit(docs, "doc_id")) { (batch, batchId) =>
       val prior = store.prior(batchId)
       val pfx = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
@@ -4904,22 +4745,17 @@ object StreamingQueries {
   def streamIterate(s: SparkSession, dir: String): DataFrame = {
     val users = Tables.events(s, dir).select("user_id").distinct()
       .select(col("user_id"), (col("user_id") % 5 + 1).as("value"))
-    val feedback = graft.streaming.VersionedStore(s, freshDir(dir, "sit_fb"))
-    val resDir = freshDir(dir, "sit_res")
-    feedback.init(s.range(0).select(col("id").as("user_id"), col("id").as("value"),
-      col("id").as("steps")))
-    graft.BenchMeters.fixture {
-      s.range(0).select(col("id").as("user_id"), col("id").as("steps"),
-        col("id").as("finished_pass")).write.mode("overwrite").parquet(resDir)
-    }
+    val feedback = VersionedStore(freshDir(dir, "sit_fb"),
+      emptyOf(s, "user_id BIGINT, value BIGINT, steps BIGINT"))
+    val res = DeltaStore(freshDir(dir, "sit_res"),
+      emptyOf(s, "user_id BIGINT, steps BIGINT, finished_pass BIGINT"))
     def pass(inflow: DataFrame, passId: Long): DataFrame = {
       val stepped = inflow
         .select(col("user_id"), (col("value") - 1).as("value"),
           (col("steps") + 1).as("steps"))
         .localCheckpoint(eager = false) // serves both the done split and the feedback
-      stepped.filter(col("value") <= 0)
-        .select(col("user_id"), col("steps"), lit(passId).as("finished_pass"))
-        .coalesce(1).write.mode("append").parquet(resDir)
+      res.append(passId, stepped.filter(col("value") <= 0)
+        .select(col("user_id"), col("steps"), lit(passId).as("finished_pass")).coalesce(1))
       stepped.filter(col("value") > 0)
     }
     val lastId = replay(dir, "sit", modSplit(users, "user_id")) { (batch, batchId) =>
@@ -4938,10 +4774,7 @@ object StreamingQueries {
       fb = pass(fb, passId).localCheckpoint()
       passId += 1
     }
-    s.read.parquet(resDir)
-      .select(col("user_id"), col("steps").cast("long").as("steps"),
-        col("finished_pass").cast("long").as("finished_pass"))
-      .orderBy("user_id")
+    res.snapshot(passId - 1).orderBy("user_id")
   }
 
   val streamIterateSql: String =
@@ -4968,21 +4801,21 @@ object StreamingQueries {
     * version with the key predicate at the scan, never the corpus.
     */
   def streamQueryable(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.{QueryableState, VersionedStore}
+    import graft.streaming.QueryableState
     val ev = Tables.events(s, dir).select("user_id", "value", "ts")
-    val store = VersionedStore(s, freshDir(dir, "sqst_store"))
-    val resDir = freshDir(dir, "sqst_res")
+    val store = VersionedStore(freshDir(dir, "sqst_store"),
+      emptyOf(s, "user_id BIGINT, cnt BIGINT, total DOUBLE"))
+    val res = DeltaStore(freshDir(dir, "sqst_res"),
+      emptyOf(s, "batch BIGINT, user_id BIGINT, cnt BIGINT, total DOUBLE"))
     val probes: Seq[Any] = graft.BenchMeters.fixture {
       // the client's key list (5 lowest user ids) — probe-set setup
       ev.select("user_id").distinct().orderBy("user_id").limit(5)
         .collect().map(_.getLong(0)).toSeq
     }
-    store.init(s.range(0).select(col("id").as("user_id"),
-      col("id").as("cnt"), col("id").cast("double").as("total")))
     val qname = s"uagg_${System.nanoTime()}" // fresh per run; client resolves by name
     QueryableState.register(qname, store)
     val client = new QueryableState.Client
-    replay(dir, "sqst", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+    val last = replay(dir, "sqst", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
       val prior = store.prior(batchId)
       val own = batch.groupBy("user_id")
         .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
@@ -4996,13 +4829,13 @@ object StreamingQueries {
       store.write(batchId, merged)
       QueryableState.publish(qname, batchId)
       // external client's mid-stream view of the live state
-      client.getKvStates(qname, "user_id", probes)
+      res.append(batchId, client.getKvStates(qname, "user_id", probes)
         .select(lit(batchId).as("batch"), col("user_id"),
           col("cnt"), round(col("total"), 2).as("total"))
-        .coalesce(1).write.mode("append").parquet(resDir)
+        .coalesce(1))
     }
     QueryableState.deregister(qname)
-    s.read.parquet(resDir).orderBy("batch", "user_id")
+    res.snapshot(last).orderBy("batch", "user_id")
   }
 
   val streamQueryableSql: String =
@@ -5027,8 +4860,8 @@ object StreamingQueries {
     * OFFLINE from a batch dataset; a streaming job then restores from
     * it). The per-user (count, total) state over the historical first
     * third of events is built by an ordinary batch aggregation and
-    * installed as the store's pre-first-batch version
-    * ([[graft.streaming.VersionedStore.bootstrap]]); the stream then
+    * installed as the store's seed, its pre-first-batch version −1
+    * ([[graft.streaming.VersionedStore]]); the stream then
     * resumes over ONLY the remaining two thirds, merging increments.
     * The final state is read back offline (the Savepoint reader side).
     * Oracle = the whole-corpus batch aggregate verbatim: bootstrap +
@@ -5038,12 +4871,11 @@ object StreamingQueries {
     * only ever pays for increments.
     */
   def streamBootstrap(s: SparkSession, dir: String): DataFrame = {
-    import graft.streaming.VersionedStore
     val ev = Tables.events(s, dir).select("user_id", "value", "ts")
     val splits = daySplits(ev, col("ts"), 3)
-    val store = VersionedStore(s, freshDir(dir, "sboot_store"))
-    // offline bootstrap write — measured operator work, not fixture
-    store.bootstrap(splits.head.groupBy("user_id")
+    // the offline bootstrap aggregate is the seed: batch 0 reads it once,
+    // so it runs as measured work inside that batch, with no write of its own
+    val store = VersionedStore(freshDir(dir, "sboot_store"), splits.head.groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("total")))
     val lastId = replay(dir, "sboot", splits.tail) { (batch, batchId) =>
       val prior = store.prior(batchId)

@@ -29,19 +29,18 @@ object BroadcastState {
     * micro-batch, `rulesFor(batchId)` resolves the current rules
     * snapshot (a read of the live dimension in production; a versioned
     * fixture in tests), `apply` combines batch × broadcast(rules), and
-    * the result appends to `store`. AvailableNow: drains the source,
+    * the result is batch `batchId`'s delta in `store` (a retried batch
+    * rewrites it). AvailableNow: drains the source,
     * preserving the per-batch rule refresh.
     */
   def withBatchRules(
       stream: DataFrame,
       rulesFor: Long => DataFrame,
-      store: String
+      store: DeltaStore
   )(apply: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        apply(batch, broadcast(rulesFor(batchId)))
-          .write.mode("append").parquet(store)
-        ()
+        store.append(batchId, apply(batch, broadcast(rulesFor(batchId))))
       }
       .trigger(Trigger.AvailableNow())
       .start()

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Append-delta state store for `foreachBatch` incremental view
   * maintenance — the INSERT-ONLY companion to [[VersionedStore]] (which
@@ -14,13 +15,22 @@ import org.apache.spark.sql.functions._
   * append-snapshot-compact lifecycle of a production table format
   * (Iceberg/Delta snapshot commits), expressed on plain parquet dirs.
   *
+  * The seed follows [[VersionedStore]]'s contract: it is the state
+  * before batch 0 (`snapshot(-1)`), never written, re-evaluated by
+  * every read that precedes the first compaction (so deterministic, and
+  * pinned at the call site when costly), and it declares the one schema
+  * every delta and compaction is read with; an `append` whose columns
+  * differ from it fails, naming the store and both column lists.
+  *
   * Exactly-once under foreachBatch retries: `append` and `compact`
   * OVERWRITE their own batch-stamped directory from state strictly
   * OLDER than the batch, so a retried batch rewrites the same bytes
   * from the same inputs; `snapshot(b)` reads only directories stamped
-  * ≤ b, so a half-written later batch is invisible to a replay.
+  * ≤ b, so a half-written later batch is invisible to a replay. This
+  * is what a same-directory `write.mode("append")` lacks: its retry
+  * adds the batch's rows a second time.
   */
-final case class DeltaStore(spark: SparkSession, base: String) {
+final case class DeltaStore(base: String, seed: DataFrame) {
 
   // state probing walks the local filesystem while data IO goes through
   // Spark — a remote URI would write fine but probe nothing and serve
@@ -29,31 +39,29 @@ final case class DeltaStore(spark: SparkSession, base: String) {
   require(!base.contains("://"),
     s"DeltaStore probes the LOCAL filesystem; got remote base $base")
 
-  private def dPath(v: String): String = s"$base/d_$v"
+  private val spark = seed.sparkSession
+  val schema: StructType = StoreSchema.of(seed)
+
+  private def dPath(b: Long): String = s"$base/d_$b"
   private def cPath(b: Long): String = s"$base/c_$b"
   private def exists(p: String): Boolean = new java.io.File(p).exists()
-
-  /** Seed the pre-first-batch state (typically empty with the schema). */
-  def init(df: DataFrame): Unit =
-    graft.BenchMeters.fixture {
-      df.write.mode("overwrite").parquet(dPath("init"))
-    }
+  private def read(paths: Seq[String]): DataFrame = spark.read.schema(schema).parquet(paths: _*)
 
   /** Append batch `batchId`'s delta — overwrite of the batch's own
     * directory, so a retry is idempotent. Cost ∝ |delta|.
     */
-  def append(batchId: Long, delta: DataFrame): Unit =
-    delta.write.mode("overwrite").parquet(dPath(batchId.toString))
+  def append(batchId: Long, delta: DataFrame): Unit = {
+    StoreSchema.check(s"DeltaStore $base", schema, delta)
+    delta.write.mode("overwrite").parquet(dPath(batchId))
+  }
 
   private def snapshotImpl(batchId: Long, maxCompact: Long): DataFrame = {
     val compacted = (0L to maxCompact).filter(b => exists(cPath(b))).lastOption
-    val lo = compacted.map(_ + 1).getOrElse(0L)
-    val deltas = (lo to batchId).map(b => dPath(b.toString)).filter(exists)
-    val basePaths = compacted.map(cPath).toSeq ++
-      (if (compacted.isEmpty) Seq(dPath("init")).filter(exists) else Nil)
-    val paths = basePaths ++ deltas
-    require(paths.nonEmpty, s"DeltaStore $base: no state at batch $batchId (init not written?)")
-    spark.read.parquet(paths: _*)
+    val deltas = (compacted.fold(0L)(_ + 1) to batchId).map(dPath).filter(exists)
+    compacted match {
+      case Some(c) => read(cPath(c) +: deltas)
+      case None => if (deltas.isEmpty) seed else seed.union(read(deltas))
+    }
   }
 
   /** Fold everything visible at `batchId` into one compaction — the
@@ -67,13 +75,13 @@ final case class DeltaStore(spark: SparkSession, base: String) {
       .write.mode("overwrite").parquet(cPath(batchId))
 
   /** The state as of batch `batchId`: the latest compaction ≤ batchId
-    * plus every delta after it.
+    * (else the seed) plus every delta after it; `snapshot(-1)` is the
+    * seed.
     */
   def snapshot(batchId: Long): DataFrame = snapshotImpl(batchId, batchId)
 
   /** Rows written for batch `batchId` (the spec's per-batch cost probe). */
-  def deltaRows(batchId: Long): Long =
-    spark.read.parquet(dPath(batchId.toString)).count()
+  def deltaRows(batchId: Long): Long = read(Seq(dPath(batchId))).count()
 }
 
 /** Net-multiplicity state under RETRACTIONS, hash-bucketed with

@@ -34,11 +34,11 @@ import org.apache.spark.sql.functions.col
   */
 object QueryableState {
 
-  /** name → (store, last published batchId; -1 = only the init seed). */
+  /** name → (store, last published batchId; -1 = only the seed). */
   private val registry = new ConcurrentHashMap[String, (VersionedStore, Long)]()
 
   /** Register a maintainer's store before the stream starts; the client
-    * can immediately query the init seed (version -1).
+    * can immediately query the seed (version -1).
     */
   def register(name: String, store: VersionedStore): Unit =
     registry.put(name, (store, -1L))
@@ -68,7 +68,7 @@ object QueryableState {
 
     private def latest(name: String): DataFrame = registry.get(name) match {
       case null => throw new NoSuchElementException(s"unknown queryable state '$name'")
-      case (store, last) => if (last < 0L) store.prior(0L) else store.version(last)
+      case (store, last) => store.version(last)
     }
 
     /** Point lookup of one key against the latest committed version. */
@@ -82,7 +82,7 @@ object QueryableState {
     def getKvStates(name: String, keyCol: String, keys: Seq[Any]): DataFrame =
       latest(name).filter(col(keyCol).isin(keys: _*))
 
-    /** The published version id a query would read (-1 = init seed). */
+    /** The published version id a query would read (-1 = the seed). */
     def currentVersion(name: String): Long = registry.get(name) match {
       case null      => throw new NoSuchElementException(s"unknown queryable state '$name'")
       case (_, last) => last

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 made these conversions
   * `private[sql]` (columnNodeSupport.scala); living under
@@ -12,4 +13,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** `t` with every field, element and value nullable — the schema a
+    * parquet read declares (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(t: StructType): StructType = t.asNullable
 }

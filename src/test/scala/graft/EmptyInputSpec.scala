@@ -173,7 +173,9 @@ class EmptyInputSpec extends SparkSpec {
     "q_evt_bursts", // empty grid -> zero-moment types filtered, no ln(0)
     "q_stream_kmv", // replay of 3 empty parts: bottom-k merge over an empty sketch store
     "q_stream_tclose", // replay of 3 empty parts: sum + distinct merges into empty stores
-    "q_stream_mg" // replay of 3 empty parts: MG merge with a null subtrahend, empty verify
+    "q_stream_mg", // replay of 3 empty parts: MG merge with a null subtrahend, empty verify
+    "q_stream_delta_minhash", // three seeded DeltaStores, snapshot(b-1) probe over empty stores
+    "q_stream_bootstrap" // the seed is the offline aggregate of an empty first split
   )
 
   test("representative queries survive a fully empty corpus (no driver-side empty-input crash)") {

@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,35 +16,6 @@ class TablesSchemaSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
   private val tables = Seq("region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
-
-  /** Call sites of the Spark jobs `body` launches from this thread. A
-    * marker job, run last in the same job group, shows the listener has
-    * seen everything before it.
-    */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val group = s"tables-schema-spec-${System.nanoTime}"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(e.properties.getProperty("spark.job.description")).filter(_.nonEmpty)
-            .getOrElse(e.stageInfos.map(_.details.linesIterator.take(8).mkString(" <- ")).mkString))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "")
-      try {
-        body
-        sc.setJobDescription("marker")
-        spark.range(1).collect()
-      } finally sc.clearJobGroup()
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!seen.contains("marker") && System.nanoTime < deadline) Thread.sleep(10)
-      assert(seen.contains("marker"), "listener never saw the marker job")
-      seen.asScala.toSeq.filterNot(_ == "marker")
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 

@@ -6,17 +6,19 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps the replay skeleton in one place. Outside
-  * [[StreamingQueries.replay]], `StreamingQueries.scala` may spell
-  * `option("maxFilesPerTrigger", "1")` or `Trigger.AvailableNow()` only
-  * inside the functions exempted below by name — each drives a stream
-  * that is not a staged-parts + `foreachBatch` replay. A maintainer that
-  * hand-writes the skeleton again fails this spec; it belongs on
-  * `replay`.
+/** Keeps the replay skeleton and the store contract in one place.
+  * Outside [[StreamingQueries.replay]], `StreamingQueries.scala` may
+  * spell `option("maxFilesPerTrigger", "1")` or `Trigger.AvailableNow()`
+  * only inside the functions exempted below by name — each drives a
+  * stream that is not a staged-parts + `foreachBatch` replay. A
+  * maintainer that hand-writes the skeleton again fails this spec; it
+  * belongs on `replay`. Likewise `write.mode("append")` into a shared
+  * directory is not retry-idempotent; per-batch output belongs on a
+  * [[graft.streaming.DeltaStore]].
   */
 class ReplayGuardSpec extends AnyFunSuite {
 
-  private val exempt = Map(
+  private val skeletonExempt = Map(
     "replay" -> "the one home of the replay skeleton",
     "runToTable" -> "memory sink, not foreachBatch",
     "streamFileSink" -> "parquet file sink with its own checkpoint",
@@ -28,10 +30,17 @@ class ReplayGuardSpec extends AnyFunSuite {
     "streamSqlTopn" -> "runs through RankSql, not foreachBatch",
     "streamRules" -> "goes through BroadcastState.withBatchRules")
 
-  private val tokens = Seq("""option("maxFilesPerTrigger", "1")""", "Trigger.AvailableNow()")
+  private val appendExempt = Map(
+    "streamLateUpdate" -> "two appends per batch into one directory; left for the failure-injection work")
+
+  /** Each token with the members allowed to spell it. */
+  private val tokens = Seq(
+    """option("maxFilesPerTrigger", "1")""" -> skeletonExempt,
+    "Trigger.AvailableNow()" -> skeletonExempt,
+    """write.mode("append")""" -> appendExempt)
   private val Member = """^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val) (\w+).*""".r
 
-  /** Lines carrying a skeleton token outside an exempt top-level member. */
+  /** Lines carrying a token outside a top-level member exempt from it. */
   private def offenders(lines: Seq[String]): Seq[String] = {
     var member = ""
     lines.zipWithIndex.flatMap { case (line, i) =>
@@ -39,7 +48,7 @@ class ReplayGuardSpec extends AnyFunSuite {
         case Member(name) => member = name
         case _ => ()
       }
-      if (tokens.exists(line.contains) && !exempt.contains(member))
+      if (tokens.exists { case (t, exempt) => line.contains(t) && !exempt.contains(member) })
         Some(s"line ${i + 1} (in $member): ${line.trim}")
       else None
     }
@@ -50,7 +59,8 @@ class ReplayGuardSpec extends AnyFunSuite {
       Paths.get("src/main/scala/graft/queries/StreamingQueries.scala"), UTF_8).asScala.toSeq
     assert(lines.exists(_.contains("def replay(")), "replay not found: wrong file?")
     val found = offenders(lines)
-    assert(found.isEmpty, s"hand-written replay skeleton; use replay:\n  ${found.mkString("\n  ")}")
+    assert(found.isEmpty,
+      s"hand-written replay skeleton or append; use replay / DeltaStore:\n  ${found.mkString("\n  ")}")
   }
 
   test("the guard flags a hand-written copy in a non-exempt maintainer") {
@@ -59,7 +69,8 @@ class ReplayGuardSpec extends AnyFunSuite {
       "    s.readStream.schema(ev.schema)",
       "      .option(\"maxFilesPerTrigger\", \"1\").parquet(srcDir)",
       "      .trigger(Trigger.AvailableNow())",
+      "    out.coalesce(1).write.mode(\"append\").parquet(resDir)",
       "  }")
-    assert(offenders(copy).size === 2)
+    assert(offenders(copy).size === 3)
   }
 }

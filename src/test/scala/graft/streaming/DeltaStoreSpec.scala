@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 
 /** The IVM storage contracts: DeltaStore per-batch writes track the
   * increment (never the view size), compaction folds without changing
-  * the snapshot, retries are idempotent; BucketStore rewrites only the
-  * buckets a delta touches and keeps net-multiplicity live state.
+  * the snapshot, retries are idempotent, the seed is the state before
+  * batch 0 and declares the schema (reads run no job, a mismatched
+  * append fails); BucketStore rewrites only the buckets a delta touches
+  * and keeps net-multiplicity live state.
   */
 class DeltaStoreSpec extends SparkSpec {
 
@@ -16,8 +18,7 @@ class DeltaStoreSpec extends SparkSpec {
 
   test("DeltaStore: per-batch written rows track the delta, snapshot accumulates, compact folds") {
     import spark.implicits._
-    val store = DeltaStore(spark, tmp("dstore"))
-    store.init(Seq.empty[(Long, Long)].toDF("k", "v"))
+    val store = DeltaStore(tmp("dstore"), Seq.empty[(Long, Long)].toDF("k", "v"))
     // batches of very different sizes: written rows must equal THAT
     // batch's delta size, not the accumulated view size
     val sizes = Seq(100, 3, 50)
@@ -34,9 +35,49 @@ class DeltaStoreSpec extends SparkSpec {
     // post-compaction appends stack on the compacted base
     store.append(3L, Seq((9999L, 9L)).toDF("k", "v"))
     assert(store.snapshot(3L).count() === sizes.sum.toLong + 1)
-    // a retried batch overwrites its own delta — no duplication
+    // a retried batch overwrites its own delta — the same rows, no
+    // duplicate (what a same-directory append would add)
+    val once = store.snapshot(3L).as[(Long, Long)].collect().sorted.toSeq
     store.append(3L, Seq((9999L, 9L)).toDF("k", "v"))
-    assert(store.snapshot(3L).count() === sizes.sum.toLong + 1)
+    assert(store.snapshot(3L).as[(Long, Long)].collect().sorted.toSeq === once)
+  }
+
+  test("DeltaStore: snapshot(-1) is the seed, and the seed stays in every snapshot until a compaction") {
+    import spark.implicits._
+    val seed = Seq((0L, 0L)).toDF("k", "v")
+    val store = DeltaStore(tmp("dseed"), seed)
+    assert(store.snapshot(-1L) eq seed)
+    store.append(0L, Seq((1L, 1L)).toDF("k", "v"))
+    assert(store.snapshot(0L).as[(Long, Long)].collect().toSet === Set((0L, 0L), (1L, 1L)))
+    store.compact(0L)
+    store.append(1L, Seq((2L, 2L)).toDF("k", "v"))
+    assert(store.snapshot(1L).as[(Long, Long)].collect().toSet ===
+      Set((0L, 0L), (1L, 1L), (2L, 2L)))
+  }
+
+  test("DeltaStore: reading a snapshot of written deltas launches no Spark job") {
+    import spark.implicits._
+    val store = DeltaStore(tmp("dnojob"), Seq.empty[(Long, String)].toDF("k", "v"))
+    store.append(0L, Seq((1L, "a")).toDF("k", "v"))
+    store.append(1L, Seq((2L, "b")).toDF("k", "v"))
+    store.compact(1L)
+    store.append(2L, Seq((3L, "c")).toDF("k", "v"))
+    assert(jobsOf {
+      store.snapshot(-1L)
+      store.snapshot(0L)
+      store.snapshot(2L)
+    } === Nil)
+    assert(store.snapshot(2L).count() === 3L)
+  }
+
+  test("DeltaStore: an append whose columns or types differ from the seed throws and names them") {
+    import spark.implicits._
+    val store = DeltaStore(tmp("dcheck"), Seq.empty[(Long, String)].toDF("k", "v"))
+    val e = intercept[IllegalArgumentException](store.append(0L, Seq((1L, 2L)).toDF("k", "v")))
+    assert(e.getMessage.contains("DeltaStore") && e.getMessage.contains(store.base))
+    assert(e.getMessage.contains("(k: BIGINT, v: BIGINT)") &&
+      e.getMessage.contains("(k: BIGINT, v: STRING)"))
+    assert(!new java.io.File(s"${store.base}/d_0").exists(), "a rejected append wrote nothing")
   }
 
   test("BucketStore: only touched buckets are rewritten; net state is the live set") {

@@ -4,11 +4,11 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** Queryable-state registry + client semantics: read-committed (a query
-  * sees the init seed until a publish lands), point lookups hit only the
+  * sees the seed until a publish lands), point lookups hit only the
   * requested keys, monotonic publish (an older batch id never moves the
   * pointer back), and unknown names fail like the reference's
-  * UnknownKvStateLocation. Savepoint-bootstrap: a store seeded by
-  * VersionedStore.bootstrap serves prior(0) exactly like an init seed.
+  * UnknownKvStateLocation. Savepoint-bootstrap: a store seeded with an
+  * offline-built state serves it as prior(0).
   */
 class QueryableStateSpec extends SparkSpec {
 
@@ -23,14 +23,13 @@ class QueryableStateSpec extends SparkSpec {
   }
 
   test("client sees the init seed before any publish, and each published version after") {
-    val store = VersionedStore(spark, tmp("qs1"))
-    store.init(kv(1L -> 10L, 2L -> 20L))
+    val store = VersionedStore(tmp("qs1"), kv(1L -> 10L, 2L -> 20L))
     QueryableState.register("qs1", store)
     val client = new QueryableState.Client
     assert(client.currentVersion("qs1") === -1L)
     assert(client.getKvState("qs1", "k", 2L).select("n").head().getLong(0) === 20L)
     store.write(0L, kv(1L -> 11L, 2L -> 21L))
-    // not yet published — the client still reads the committed init view
+    // not yet published — the client still reads the committed seed
     assert(client.getKvState("qs1", "k", 2L).select("n").head().getLong(0) === 20L)
     QueryableState.publish("qs1", 0L)
     assert(client.currentVersion("qs1") === 0L)
@@ -39,8 +38,7 @@ class QueryableStateSpec extends SparkSpec {
   }
 
   test("point lookups return only the requested keys; batched form = union of singles") {
-    val store = VersionedStore(spark, tmp("qs2"))
-    store.init(kv(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
+    val store = VersionedStore(tmp("qs2"), kv(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
     QueryableState.register("qs2", store)
     val client = new QueryableState.Client
     assert(client.getKvState("qs2", "k", 3L).collect().map(_.getLong(0)).toSeq === Seq(3L))
@@ -52,8 +50,7 @@ class QueryableStateSpec extends SparkSpec {
   }
 
   test("publish is monotonic — a replayed older batch never rolls the pointer back") {
-    val store = VersionedStore(spark, tmp("qs3"))
-    store.init(kv(1L -> 0L))
+    val store = VersionedStore(tmp("qs3"), kv(1L -> 0L))
     store.write(0L, kv(1L -> 1L))
     store.write(1L, kv(1L -> 2L))
     QueryableState.register("qs3", store)
@@ -72,8 +69,8 @@ class QueryableStateSpec extends SparkSpec {
   }
 
   test("bootstrap-seeded store: prior(0) is the offline-built state (savepoint restore)") {
-    val store = VersionedStore(spark, tmp("qs4"))
-    store.bootstrap(kv(7L -> 70L))
-    assert(store.prior(0L).select("n").head().getLong(0) === 70L)
+    val offline = kv(7L -> 70L, 7L -> 5L).groupBy("k").agg(sum("n").as("n"))
+    val store = VersionedStore(tmp("qs4"), offline)
+    assert(store.prior(0L).select("n").head().getLong(0) === 75L)
   }
 }
