@@ -181,12 +181,6 @@ final case class Pattern[T](
   /** the preceding loop may take any in-order subsequence under the
     * enumerating matcher (ref: oneOrMore().allowCombinations()) */
   def allowCombinations: Pattern[T] = updLast(_.copy(combinations = true))
-  /** alternation group with strict contiguity — `next (A|B)` */
-  def nextOneOf(alts: (String, T => Boolean)*): Pattern[T] =
-    copy(stages = stages :+ Stage.oneOf(alts, Contiguity.Strict))
-  /** alternation group with relaxed contiguity — `followedBy (A|B)` */
-  def followedByOneOf(alts: (String, T => Boolean)*): Pattern[T] =
-    copy(stages = stages :+ Stage.oneOf(alts, Contiguity.Relaxed))
   def notNext(name: String): Pattern[T] =
     copy(stages = stages :+ Stage[T](name, _ => true, contiguity = Contiguity.Strict, negated = true))
   def notFollowedBy(name: String): Pattern[T] =
@@ -216,9 +210,6 @@ final case class Pattern[T](
 object Pattern {
   def begin[T](name: String): Pattern[T] =
     Pattern(Vector(Stage[T](name, _ => true, contiguity = Contiguity.Relaxed)))
-  /** begin with an alternation group — `PATTERN ((A|B) ...)` */
-  def beginOneOf[T](alts: (String, T => Boolean)*): Pattern[T] =
-    Pattern(Vector(Stage.oneOf(alts, Contiguity.Relaxed)))
 }
 
 /** A completed match: stage name → matched events in order. `indices`

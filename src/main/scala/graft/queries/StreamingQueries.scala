@@ -130,6 +130,21 @@ object StreamingQueries {
     last
   }
 
+  /** The additive maintainer: a [[graft.streaming.VersionedStore]]
+    * seeded with `delta` of an empty part, into which every part's
+    * `delta` sum-merges on `keys`
+    * ([[graft.streaming.VersionedStore.sumMerge]]) under [[replay]];
+    * returns the final version.
+    */
+  private def sumMaintained(dir: String, name: String, parts: Seq[DataFrame], keys: String*)(
+      delta: DataFrame => DataFrame): DataFrame = {
+    val store = VersionedStore(freshDir(dir, s"${name}_store"), delta(parts.head.limit(0)))
+    val lastId = replay(dir, name, parts) { (batch, batchId) =>
+      store.write(batchId, store.sumMerge(batchId, delta(batch), keys: _*))
+    }
+    store.version(lastId)
+  }
+
   /** Run independent per-batch store actions CONCURRENTLY (guide §2.6;
     * r14 opt): a foreachBatch body that appends a result AND merges a
     * store pays two sequential jobs whose tails leave the executor idle —
@@ -1170,7 +1185,7 @@ object StreamingQueries {
     * batch funnel implies (ref: Flink's continuous dedup keeps per-key
     * state with TTL, `DeduplicateFunctionBase`; here the keeper state
     * lives in a mergeable store instead of operator memory): the corpus
-    * arrives as 3 micro-batches; each batch is quality-filtered
+    * arrives as 3 micro-batches (doc_id mod 3); each batch is quality-filtered
     * (n_tokens ≥ 20), PRE-DEDUPED within the batch (per-fingerprint
     * `min_by` keeper — the map-side-combine of the incremental world:
     * state writes are bounded by batch cardinality, not batch rows),
@@ -1184,10 +1199,7 @@ object StreamingQueries {
     */
   def streamCurate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.TextAnalysis
-    val splits = freshDir(dir, "curate_src")
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    docs.repartitionByRange(3, col("doc_id"))
-      .write.mode("overwrite").parquet(splits)
     def keepers(df: DataFrame): DataFrame = df
       .select(col("doc_id"), col("source"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
@@ -1198,19 +1210,10 @@ object StreamingQueries {
       .select(col("fp"), col("r.doc_id").as("doc_id"),
         col("r.source").as("source"), col("r.n_tokens").as("n_tokens"))
     val store = DeltaStore(freshDir(dir, "curate_store"), keepers(docs.limit(0)))
-    val last = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val batches = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1") // one batch per range split
-      .parquet(splits)
-    val q = batches.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.append(batchId, keepers(batch))
-        last.set(batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.snapshot(last.get)
+    val last = replay(dir, "curate", modSplit(docs, "doc_id")) { (batch, batchId) =>
+      store.append(batchId, keepers(batch))
+    }
+    store.snapshot(last)
       .groupBy("fp")
       .agg(min_by(struct(col("doc_id"), col("source"), col("n_tokens")), col("doc_id")).as("r"))
       .groupBy(col("r.source").as("source"))
@@ -1248,21 +1251,21 @@ object StreamingQueries {
     val srcDir = stageBatchFiles(dir, "rules", parts)
     // versioned rules snapshots: the "slowly-changing dimension" the
     // pattern refreshes — multiplier drifts by +1 per version
-    val rulesDir = freshDir(dir, "rules_dim")
+    val rules = VersionedStore(freshDir(dir, "rules_dim"),
+      emptyOf(s, "event_type STRING, mult DOUBLE"))
     val types = ev.select(col("event_type")).distinct()
     graft.BenchMeters.fixture {
       for (v <- 0 until 3)
-        types.select(col("event_type"),
-            (length(col("event_type")) + lit(v)).cast("double").as("mult"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$rulesDir/v$v")
+        rules.write(v, types.select(col("event_type"),
+          (length(col("event_type")) + lit(v)).cast("double").as("mult")))
     }
     val store = DeltaStore(freshDir(dir, "rules_out"), ev.limit(0).withColumn("adj", lit(0.0)))
     val batches = s.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(srcDir)
     val q = graft.streaming.BroadcastState.withBatchRules(
-      batches, v => s.read.parquet(s"$rulesDir/v$v"), store) { (batch, rules) =>
-      batch.join(rules, Seq("event_type"))
+      batches, rules.version, store) { (batch, rulesNow) =>
+      batch.join(rulesNow, Seq("event_type"))
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
           (col("value") * col("mult")).as("adj"))
     }
@@ -1525,13 +1528,8 @@ object StreamingQueries {
     val ev = Tables.events(s, dir)
     val parts = modSplit(ev, "event_id")
       .map(_.select(col("event_type"), date_trunc("hour", col("ts")).as("h")))
-    val store = VersionedStore(freshDir(dir, "sano_store"),
-      emptyOf(s, "event_type STRING, h TIMESTAMP, cnt BIGINT"))
-    val lastId = replay(dir, "sano", parts) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId,
-        batch.groupBy("event_type", "h").agg(count(lit(1)).as("cnt")), "event_type", "h"))
-    }
-    val hc = store.version(lastId)
+    val hc = sumMaintained(dir, "sano", parts, "event_type", "h")(
+        _.groupBy("event_type", "h").agg(count(lit(1)).as("cnt")))
       .select(col("event_type"), col("h"), col("cnt").cast("long").as("cnt"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy("h").rowsBetween(-24, -1)
@@ -2296,22 +2294,15 @@ object StreamingQueries {
   /** Shared additive daily-grid maintainer: stage the 3-batch %3
     * split, key-sum merge the (event_type, day) counts per batch on a
     * VersionedStore, return the end-of-stream grid. The whole-sequence
-    * solvers (STL, Holt–Winters, bursts) all feed from this ONE loop —
-    * a merge-posture fix lands in every family member (r10 review:
-    * was three verbatim copies).
+    * solvers (STL, Holt–Winters, bursts) and the dispersion and
+    * binary-segmentation tails all feed from this ONE loop — a
+    * merge-posture fix lands in every family member (r10 review: was
+    * three verbatim copies).
     */
-  private def maintainDailyGrid(s: SparkSession, dir: String, name: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    def dailyOf(df: DataFrame): DataFrame =
-      df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-    val store = VersionedStore(freshDir(dir, s"${name}_store"), dailyOf(ev.limit(0)))
-    val lastId = replay(dir, name, modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
-    }
-    store.version(lastId)
+  private def maintainDailyGrid(s: SparkSession, dir: String, name: String): DataFrame =
+    sumMaintained(dir, name, modSplit(Tables.events(s, dir), "event_id"), "event_type", "d")(
+        _.groupBy(col("event_type"), to_date(col("ts")).as("d")).agg(count(lit(1)).as("cnt")))
       .select(col("event_type"), col("d"), col("cnt").cast("long").as("cnt"))
-  }
 
   def streamStl(s: SparkSession, dir: String): DataFrame =
     AnalyticsQueries.stlFromDaily(maintainDailyGrid(s, dir, "sstl"))
@@ -2460,12 +2451,8 @@ object StreamingQueries {
     */
   def streamMsprt(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "smsprt_store"), AQ.msprtDaily(ev.limit(0)))
-    val lastId = replay(dir, "smsprt", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.msprtDaily(batch), "d"))
-    }
-    AQ.msprtFromDaily(store.version(lastId))
+    AQ.msprtFromDaily(sumMaintained(dir, "smsprt",
+      modSplit(Tables.events(s, dir), "event_id"), "d")(AQ.msprtDaily))
   }
 
   /** The stratified-ATE estimator maintained on a stream
@@ -2477,19 +2464,27 @@ object StreamingQueries {
     * over the user-dimension store. Oracle = the batch statement
     * verbatim.
     */
-  def streamAte(s: SparkSession, dir: String): DataFrame = {
+  def streamAte(s: SparkSession, dir: String): DataFrame =
+    AnalyticsQueries.ateFromUsers(ateProfileMaintained(s, dir, "sate"))
+
+  /** The per-user treatment profile [[streamAte]] and [[streamQini]]
+    * maintain: activity sums sum-merge, treatment/conversion flags
+    * max-merge (both commutative, so batches split arbitrarily); the
+    * final version is staged for the solver with its columns as BIGINT.
+    */
+  private def ateProfileMaintained(s: SparkSession, dir: String, name: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
     val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "sate_store"), AQ.ateUsers(ev.limit(0)))
-    val lastId = replay(dir, "sate", modSplit(ev, "event_id")) { (batch, batchId) =>
+    val store = VersionedStore(freshDir(dir, s"${name}_store"), AQ.ateUsers(ev.limit(0)))
+    val lastId = replay(dir, name, modSplit(ev, "event_id")) { (batch, batchId) =>
       store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
         .groupBy("user_id").agg(sum("act").as("act"),
           max("treated").as("treated"), max("conv").as("conv")))
     }
-    AQ.ateFromUsers(graft.operators.Funnel.stageLazy(
+    graft.operators.Funnel.stageLazy(
       store.version(lastId)
         .select(col("user_id"), col("act").cast("long").as("act"),
-          col("treated").cast("long").as("treated"), col("conv").cast("long").as("conv"))))
+          col("treated").cast("long").as("treated"), col("conv").cast("long").as("conv")))
   }
 
   /** Heaps'-law growth maintained on a stream
@@ -2530,13 +2525,9 @@ object StreamingQueries {
     */
   def streamBenford(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "sbenford_store"), AQ.benfordDigits(ev.limit(0)))
-    val lastId = replay(dir, "sbenford", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.benfordDigits(batch), "d"))
-    }
     AQ.benfordFromDigits(graft.operators.Funnel.stageLazy(
-      store.version(lastId)
+      sumMaintained(dir, "sbenford", modSplit(Tables.events(s, dir), "event_id"), "d")(
+          AQ.benfordDigits)
         .select(col("d").cast("long").as("d"), col("n").cast("long").as("n"))))
   }
 
@@ -2548,13 +2539,9 @@ object StreamingQueries {
     */
   def streamLorenz(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "slorenz_store"), AQ.lorenzUsers(ev.limit(0)))
-    val lastId = replay(dir, "slorenz", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.lorenzUsers(batch), "user_id"))
-    }
     AQ.lorenzFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastId)
+      sumMaintained(dir, "slorenz", modSplit(Tables.events(s, dir), "event_id"), "user_id")(
+          AQ.lorenzUsers)
         .select(col("user_id"), col("y").cast("long").as("y"))))
   }
 
@@ -2583,11 +2570,7 @@ object StreamingQueries {
             coalesce(col(s"g_${i}_$j"), lit(0L)).as("g_scaled"))): _*)).as("x"))
         .select(col("x.i").as("i"), col("x.j").as("j"), col("x.g_scaled").as("g_scaled"))
     }
-    val store = VersionedStore(freshDir(dir, "sgram_store"), cells(emb.limit(0)))
-    val lastId = replay(dir, "sgram", modSplit(emb, "vec_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, cells(batch), "i", "j"))
-    }
-    store.version(lastId)
+    sumMaintained(dir, "sgram", modSplit(emb, "vec_id"), "i", "j")(cells)
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"),
         col("g_scaled").cast("long").as("g_scaled"),
         (col("g_scaled").cast("double") / lit(scale * scale)).as("gram"))
@@ -2707,13 +2690,11 @@ object StreamingQueries {
     val parts = (0 until 4).map(b => tagged.filter(
       (col("mult") === 1L && col("k") % 3 === math.min(b, 2).toLong && lit(b) < 3)
         || (col("mult") === -1L && col("k") % 3 === (b - 1).toLong)))
-    val oStore = graft.streaming.BucketStore(s, freshDir(dir, "sivmr_o"), numBuckets = 8)
-    val lStore = graft.streaming.BucketStore(s, freshDir(dir, "sivmr_l"), numBuckets = 8)
-    val jStore = graft.streaming.BucketStore(s, freshDir(dir, "sivmr_j"), numBuckets = 8)
-    oStore.init(tagged.limit(0).select(col("k"), col("pri"), col("mult")), "k")
-    lStore.init(tagged.limit(0).select(col("k"), col("price_micro"), col("ln"), col("mult")), "k")
-    jStore.init(tagged.limit(0)
-      .select(col("k"), col("pri"), col("price_micro"), col("mult")), "k")
+    def bucketStore(name: String, cols: String*) = graft.streaming.BucketStore(
+      freshDir(dir, name), tagged.limit(0).select(cols.map(col): _*), "k", "mult", numBuckets = 8)
+    val oStore = bucketStore("sivmr_o", "k", "pri", "mult")
+    val lStore = bucketStore("sivmr_l", "k", "price_micro", "ln", "mult")
+    val jStore = bucketStore("sivmr_j", "k", "pri", "price_micro", "mult")
     val lastId = replay(dir, "sivmr", parts) { (batch, batchId) =>
       // lazy boundary (r13 opt): the batch fans out to both deltas and
       // three join legs; persist() materializes it inside the first
@@ -2741,11 +2722,9 @@ object StreamingQueries {
       // first consumers of the shared lazy-checkpointed batch are safe:
       // the block manager computes each partition once under its lock.
       overlap(
-        () => jStore.applyDelta(batchId, dJ, "k",
-          Seq("k", "pri", "price_micro"), "mult"),
-        () => oStore.applyDelta(batchId, dO, "k", Seq("k", "pri"), "mult"),
-        () => lStore.applyDelta(batchId, dL, "k",
-          Seq("k", "price_micro", "ln"), "mult"))
+        () => jStore.applyDelta(batchId, dJ),
+        () => oStore.applyDelta(batchId, dO),
+        () => lStore.applyDelta(batchId, dL))
     }
     jStore.snapshot(lastId)
       .groupBy("pri")
@@ -2771,20 +2750,8 @@ object StreamingQueries {
     * with the uplift-curve tail run at end of stream. Oracle = the
     * batch statement verbatim.
     */
-  def streamQini(s: SparkSession, dir: String): DataFrame = {
-    import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "sqini_store"), AQ.ateUsers(ev.limit(0)))
-    val lastId = replay(dir, "sqini", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.prior(batchId).unionByName(AQ.ateUsers(batch))
-        .groupBy("user_id").agg(sum("act").as("act"),
-          max("treated").as("treated"), max("conv").as("conv")))
-    }
-    AQ.qiniFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastId)
-        .select(col("user_id"), col("act").cast("long").as("act"),
-          col("treated").cast("long").as("treated"), col("conv").cast("long").as("conv"))))
-  }
+  def streamQini(s: SparkSession, dir: String): DataFrame =
+    AnalyticsQueries.qiniFromUsers(ateProfileMaintained(s, dir, "sqini"))
 
   /** Split-conformal coverage maintained on a stream
     * ([[AnalyticsQueries.evtConformal]] as a continuously-refreshed
@@ -2795,14 +2762,9 @@ object StreamingQueries {
     */
   def streamConformal(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    def prof(df: DataFrame): DataFrame = AQ.conformalUsers(df).drop("fold")
-    val store = VersionedStore(freshDir(dir, "sconf_store"), prof(ev.limit(0)))
-    val lastId = replay(dir, "sconf", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, prof(batch), "user_id"))
-    }
     AQ.conformalFromUsers(graft.operators.Funnel.stageLazy(
-      store.version(lastId)
+      sumMaintained(dir, "sconf", modSplit(Tables.events(s, dir), "event_id"), "user_id")(
+          AQ.conformalUsers(_).drop("fold"))
         .select(col("user_id"), col("x").cast("long").as("x"),
           col("y_micro").cast("long").as("y_micro"))
         .withColumn("fold", pmod(
@@ -2819,17 +2781,7 @@ object StreamingQueries {
     */
   def streamDispersion(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    def dailyOf(df: DataFrame): DataFrame =
-      df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-    val store = VersionedStore(freshDir(dir, "sdisp_store"), dailyOf(ev.limit(0)))
-    val lastId = replay(dir, "sdisp", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
-    }
-    AQ.dispersionFromDaily(graft.operators.Funnel.stageLazy(
-      store.version(lastId)
-        .select(col("event_type"), col("d"), col("cnt").cast("long").as("cnt"))))
+    AQ.dispersionFromDaily(graft.operators.Funnel.stageLazy(maintainDailyGrid(s, dir, "sdisp")))
   }
 
   /** Binary-segmentation changepoints maintained on an event stream
@@ -2845,16 +2797,7 @@ object StreamingQueries {
     */
   def streamBinseg(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    def dailyOf(df: DataFrame): DataFrame =
-      df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("cnt"))
-    val store = VersionedStore(freshDir(dir, "sbseg_store"), dailyOf(ev.limit(0)))
-    val lastId = replay(dir, "sbseg", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, dailyOf(batch), "event_type", "d"))
-    }
-    AQ.binsegFromDaily(store.version(lastId)
-      .select(col("event_type"), col("d"), col("cnt").cast("long").as("cnt")))
+    AQ.binsegFromDaily(maintainDailyGrid(s, dir, "sbseg"))
   }
 
   /** Flagged-term content scan maintained on a document stream
@@ -2868,12 +2811,7 @@ object StreamingQueries {
   def streamFlaggedTerms(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
     val docs = Tables.documents(s, dir).select("doc_id", "source", "text")
-    val store = VersionedStore(freshDir(dir, "sflag_store"), PQ.flaggedTermCounts(docs.limit(0)))
-    val lastId = replay(dir, "sflag", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      store.write(batchId,
-        store.sumMerge(batchId, PQ.flaggedTermCounts(batch), "source", "term"))
-    }
-    store.version(lastId)
+    sumMaintained(dir, "sflag", modSplit(docs, "doc_id"), "source", "term")(PQ.flaggedTermCounts)
       .select(col("source"), col("term"), col("docs").cast("long").as("docs"),
         col("hits").cast("long").as("hits"))
       .orderBy("source", "term")
@@ -3007,15 +2945,9 @@ object StreamingQueries {
     * itself — dimension-bounded; oracled by the batch SQL verbatim.
     */
   def streamDpRelease(s: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(s, dir)
-    def cells(df: DataFrame): DataFrame =
-      df.groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("n"))
-    val store = VersionedStore(freshDir(dir, "sdpr_store"), cells(ev.limit(0)))
-    val lastId = replay(dir, "sdpr", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, cells(batch), "event_type", "d"))
-    }
-    AnalyticsQueries.dpNoisyRelease(store.version(lastId))
+    AnalyticsQueries.dpNoisyRelease(
+      sumMaintained(dir, "sdpr", modSplit(Tables.events(s, dir), "event_id"), "event_type", "d")(
+        _.groupBy(col("event_type"), to_date(col("ts")).as("d")).agg(count(lit(1)).as("n"))))
   }
 
   /** CUPED maintained on a stream ([[AnalyticsQueries.evtCuped]]'s
@@ -3031,22 +2963,14 @@ object StreamingQueries {
     */
   def streamCuped(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "scuped_store"), AQ.cupedDaily(ev.limit(0)))
-    val lastId = replay(dir, "scuped", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.cupedDaily(batch), "user_id", "de"))
-    }
-    AQ.cupedSolve(store.version(lastId))
+    AQ.cupedSolve(sumMaintained(dir, "scuped",
+      modSplit(Tables.events(s, dir), "event_id"), "user_id", "de")(AQ.cupedDaily))
   }
 
   def streamOls(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "sols_store"), AQ.olsStats(ev.limit(0)))
-    val lastId = replay(dir, "sols", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.olsStats(batch)))
-    }
-    AQ.olsSolve(store.version(lastId))
+    AQ.olsSolve(sumMaintained(dir, "sols", modSplit(Tables.events(s, dir), "event_id"))(
+      AQ.olsStats))
   }
 
   /** Streaming discriminant-direction maintainer: the between-class
@@ -3084,12 +3008,8 @@ object StreamingQueries {
     */
   def streamKs(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "sks_store"), AQ.ksBins(ev.limit(0)))
-    val lastId = replay(dir, "sks", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.ksBins(batch), "b"))
-    }
-    AQ.ksFromBins(store.version(lastId))
+    AQ.ksFromBins(sumMaintained(dir, "sks", modSplit(Tables.events(s, dir), "event_id"), "b")(
+      AQ.ksBins))
   }
 
   /** Streaming Mann–Whitney maintainer: the SAME ≤4901-row deci-bucket
@@ -3101,12 +3021,8 @@ object StreamingQueries {
     */
   def streamMannWhitney(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "smw_store"), AQ.ksBins(ev.limit(0)))
-    val lastId = replay(dir, "smw", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.ksBins(batch), "b"))
-    }
-    AQ.mannWhitneyFromBins(store.version(lastId))
+    AQ.mannWhitneyFromBins(sumMaintained(dir, "smw",
+      modSplit(Tables.events(s, dir), "event_id"), "b")(AQ.ksBins))
   }
 
   /** Streaming maintainer for the per-(bin, event_type) count table —
@@ -3116,15 +3032,9 @@ object StreamingQueries {
     * final bins, oracled by the batch statement verbatim.
     */
   private def typeBinsMaintained(s: SparkSession, dir: String, tag: String)(
-      tail: DataFrame => DataFrame): DataFrame = {
-    import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, s"${tag}_store"), AQ.typeBins(ev.limit(0)))
-    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.typeBins(batch), "b", "event_type"))
-    }
-    tail(store.version(lastId))
-  }
+      tail: DataFrame => DataFrame): DataFrame =
+    tail(sumMaintained(dir, tag, modSplit(Tables.events(s, dir), "event_id"), "b", "event_type")(
+      AnalyticsQueries.typeBins))
 
   /** Streaming Kruskal–Wallis: the maintained k-sample bin table, the
     * batch H tail at end of stream — the live "did any variant's
@@ -3157,15 +3067,9 @@ object StreamingQueries {
     * the batch statement verbatim.
     */
   private def userDayMaintained(s: SparkSession, dir: String, tag: String)(
-      tail: DataFrame => DataFrame): DataFrame = {
-    import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, s"${tag}_store"), AQ.userDayGrid(ev.limit(0)))
-    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.userDayGrid(batch), "user_id", "d"))
-    }
-    tail(store.version(lastId))
-  }
+      tail: DataFrame => DataFrame): DataFrame =
+    tail(sumMaintained(dir, tag, modSplit(Tables.events(s, dir), "event_id"), "user_id", "d")(
+      AnalyticsQueries.userDayGrid))
 
   /** Streaming McNemar: the maintained (user, day) grid with the
     * paired before/after readout at end of stream.
@@ -3189,15 +3093,9 @@ object StreamingQueries {
     * over the final grid, oracled by the batch SQL verbatim.
     */
   private def dailyCentsMaintained(s: SparkSession, dir: String, tag: String)(
-      tail: DataFrame => DataFrame): DataFrame = {
-    import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, s"${tag}_store"), AQ.dailyCents(ev.limit(0)))
-    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.dailyCents(batch), "event_type", "d"))
-    }
-    tail(store.version(lastId))
-  }
+      tail: DataFrame => DataFrame): DataFrame =
+    tail(sumMaintained(dir, tag, modSplit(Tables.events(s, dir), "event_id"), "event_type", "d")(
+      AnalyticsQueries.dailyCents))
 
   def streamSpearman(s: SparkSession, dir: String): DataFrame =
     dailyCentsMaintained(s, dir, "ssprm")(
@@ -3248,11 +3146,7 @@ object StreamingQueries {
           round(graft.operators.TextAnalysis.stopwordCount(col("text"), "en") /
             graft.operators.TextAnalysis.tokenCount(col("text")), 3).as("sc"))
         .groupBy("sc").agg(count(lit(1)).as("n"), sum("pos").as("np"))
-    val store = VersionedStore(freshDir(dir, "siso_store"), blocksOf(docs.limit(0)))
-    val lastId = replay(dir, "siso", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, blocksOf(batch), "sc"))
-    }
-    AQ.isotonicFromBlocks(store.version(lastId))
+    AQ.isotonicFromBlocks(sumMaintained(dir, "siso", modSplit(docs, "doc_id"), "sc")(blocksOf))
   }
 
   /** Streaming CMH maintainer: the SAME additive per-user
@@ -3262,12 +3156,8 @@ object StreamingQueries {
     */
   def streamCmh(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "scmh_store"), AQ.cmhUsers(ev.limit(0)))
-    val lastId = replay(dir, "scmh", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.cmhUsers(batch), "user_id"))
-    }
-    AQ.cmhFromUsers(store.version(lastId))
+    AQ.cmhFromUsers(sumMaintained(dir, "scmh",
+      modSplit(Tables.events(s, dir), "event_id"), "user_id")(AQ.cmhUsers))
   }
 
   /** Streaming Granger maintainer: the per-day (click, purchase) count
@@ -3278,12 +3168,8 @@ object StreamingQueries {
     */
   def streamGranger(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    val store = VersionedStore(freshDir(dir, "sgrang_store"), AQ.grangerDaily(ev.limit(0)))
-    val lastId = replay(dir, "sgrang", modSplit(ev, "event_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, AQ.grangerDaily(batch), "d"))
-    }
-    AQ.grangerFromDaily(store.version(lastId))
+    AQ.grangerFromDaily(sumMaintained(dir, "sgrang",
+      modSplit(Tables.events(s, dir), "event_id"), "d")(AQ.grangerDaily))
   }
 
   /** Streaming Good–Turing maintainer: the (bigram, count) vocab table
@@ -3293,12 +3179,8 @@ object StreamingQueries {
     */
   def streamGoodTuring(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
-    val docs = Tables.documents(s, dir)
-    val store = VersionedStore(freshDir(dir, "sgt_store"), PQ.gtBigramCounts(docs.limit(0)))
-    val lastId = replay(dir, "sgt", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, PQ.gtBigramCounts(batch), "tok"))
-    }
-    PQ.goodTuringFromCounts(store.version(lastId))
+    PQ.goodTuringFromCounts(sumMaintained(dir, "sgt",
+      modSplit(Tables.documents(s, dir), "doc_id"), "tok")(PQ.gtBigramCounts))
   }
 
   /** Streaming Jensen–Shannon drift gate: the (source, token) counts
@@ -3309,12 +3191,8 @@ object StreamingQueries {
     */
   def streamJs(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.{PipelineQueries => PQ}
-    val docs = Tables.documents(s, dir)
-    val store = VersionedStore(freshDir(dir, "sjs_store"), PQ.jsCounts(docs.limit(0)))
-    val lastId = replay(dir, "sjs", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      store.write(batchId, store.sumMerge(batchId, PQ.jsCounts(batch), "source", "tok"))
-    }
-    PQ.jsFromCounts(store.version(lastId))
+    PQ.jsFromCounts(sumMaintained(dir, "sjs",
+      modSplit(Tables.documents(s, dir), "doc_id"), "source", "tok")(PQ.jsCounts))
   }
 
   /** Streaming Kaplan–Meier maintainer: incremental sessionization by
@@ -3500,10 +3378,7 @@ object StreamingQueries {
           .select(col("id").as("doc_id"), col("n_lines"), col("n_kept"),
             md5(col("kept_text")).as("kept_md5"))
           .coalesce(1)),
-        () => store.write(batchId, prior.select(col("hl"), col("df").as("pdf"))
-          .join(own.select(col("hl"), col("df").as("odf")), Seq("hl"), "full_outer")
-          .select(col("hl"),
-            (coalesce(col("pdf"), lit(0L)) + coalesce(col("odf"), lit(0L))).as("df"))))
+        () => store.write(batchId, store.sumMerge(batchId, own, "hl")))
     }
     res.snapshot(last).orderBy("doc_id")
   }
@@ -3529,13 +3404,9 @@ object StreamingQueries {
       s.range(64).select(col("id").as("bucket"), lit(0L).as("reg")))
     val res = DeltaStore(freshDir(dir, "shll_res"), emptyOf(s, "batch BIGINT, est_distinct DOUBLE"))
     val last = replay(dir, "shll", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      val prior = store.prior(batchId)
       val sh = batch.select(explode(TextAnalysis.shingles(col("text"), 3)).as("sh"))
       val own = Sketches.hllRegisters(sh, "sh", m = 64, wBits = 54)
-      val merged = prior.select(col("bucket"), col("reg").as("p"))
-        .join(own.select(col("bucket"), col("reg").as("o")), Seq("bucket"), "full_outer")
-        .select(col("bucket"),
-          greatest(coalesce(col("p"), lit(0L)), coalesce(col("o"), lit(0L))).as("reg"))
+      val merged = store.prior(batchId).unionByName(own).groupBy("bucket").agg(max("reg").as("reg"))
         .localCheckpoint(eager = false) // serves both the store write and the estimate
       overlap(
         () => store.write(batchId, merged),
@@ -3582,13 +3453,9 @@ object StreamingQueries {
       emptyOf(s, "batch BIGINT, tok STRING, est_cnt BIGINT"))
     val probes = Seq("data", "stream", "table", "the")
     val last = replay(dir, "scms", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      val prior = store.prior(batchId)
       val toks = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
       val own = Sketches.cmsCells(toks, "tok", depth = 4, width = 256)
-      val merged = prior.select(col("r"), col("b"), col("c").as("p"))
-        .join(own.select(col("r"), col("b"), col("c").as("o")), Seq("r", "b"), "full_outer")
-        .select(col("r"), col("b"),
-          (coalesce(col("p"), lit(0L)) + coalesce(col("o"), lit(0L))).as("c"))
+      val merged = store.sumMerge(batchId, own, "r", "b")
         .localCheckpoint(eager = false) // serves both the store write and the probes
       val probeDf = s.createDataFrame(
         s.sparkContext.parallelize(probes.map(org.apache.spark.sql.Row(_))),
@@ -4342,12 +4209,15 @@ object StreamingQueries {
     * watermark, so the reference's OBSERVABLE late-fire behavior is
     * reproduced outside it: the [[graft.streaming.LateData]] splitter
     * classifies each micro-batch against the same monotonic watermark the
-    * engine would use; on-time rows append 1-hour tumbling-window
-    * partials to a store, watermark-late rows within the allowed lateness
-    * (window end + 1 h still above the watermark) append UPDATE partials
-    * into the same windows — these are the late fires, counted per window
-    * in `n_late` — and rows past allowed lateness are dropped exactly
-    * like the reference's too-late branch. The snapshot groupBy collapses
+    * engine would use; each batch appends ONE delta to a
+    * [[graft.streaming.DeltaStore]]: its on-time rows' 1-hour
+    * tumbling-window partials plus, for watermark-late rows within the
+    * allowed lateness (window end + 1 h still above the watermark),
+    * UPDATE partials into the same windows — these are the late fires,
+    * counted per window in `n_late` — and rows past allowed lateness
+    * are dropped exactly like the reference's too-late branch. One
+    * batch-stamped delta per batch keeps a retried batch from adding
+    * its partials twice. The snapshot groupBy collapses
     * the partial history into final window rows, i.e. the result a
     * downstream consumer of ALLOWED_LATENESS + late-fire updates would
     * retain.
@@ -4359,32 +4229,17 @@ object StreamingQueries {
     * the whole pipeline exactly, n_late included.
     */
   def streamLateUpdate(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     import org.apache.spark.sql.expressions.Window
 
     val jitterKey = unix_micros(col("ts")) + (col("event_id") % 97) * lit(300000000L)
-    val cols = Tables.events(s, dir)
+    // the global ntile sort runs once: the lazy checkpoint pins it for
+    // all three parts
+    val ev = Tables.events(s, dir)
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val ev = cols
       .withColumn("b", ntile(3).over(Window.orderBy(jitterKey, col("event_id"))) - 1)
-    // one file per micro-batch: ONE partitionBy write (a single job —
-    // three filter+sort+write jobs cost ~3× the prep latency), then
-    // explicit names AND strictly increasing mtimes so the file source
-    // processes b0<b1<b2 regardless of its (mtime, path) tie rules
-    val srcDir = freshDir(dir, "late_update_src")
-    Files.createDirectories(Paths.get(srcDir))
-    val tmp = freshDir(dir, "late_update_tmp")
-    ev.coalesce(1).write.partitionBy("b").mode("overwrite").parquet(tmp)
-    for (b <- 0 until 3) {
-      val part = new java.io.File(s"$tmp/b=$b").listFiles()
-        .find(_.getName.endsWith(".parquet")).get.toPath
-      val dest = Paths.get(srcDir, s"b$b.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() + b * 2000L))
-    }
+      .localCheckpoint(eager = false)
+    val parts = (0 until 3).map(i => ev.filter(col("b") === i).drop("b"))
 
-    val store = freshDir(dir, "late_update_store")
     val splitter = new graft.streaming.LateData("ts", delayMs = 10 * 60 * 1000L)
     val latenessUs = 3600L * 1000000L
     def partials(df: DataFrame, late: Boolean): DataFrame =
@@ -4392,24 +4247,19 @@ object StreamingQueries {
         .agg(count(lit(1)).as("cnt"), sum("value").as("sv"))
         .select(col("w.start").as("wstart"), col("event_type"), col("cnt"), col("sv"),
           (if (late) col("cnt") else lit(0L)).as("n_late"))
-    val handler = splitter.foreachBatch(
-      main = b => partials(b, late = false).write.mode("append").parquet(store),
-      late = b => {
-        // allowed lateness: merge only while the window's end + lateness
-        // is still ahead of the watermark (the splitter's wm is updated
-        // AFTER the handlers run, so this is the batch's own cutoff)
-        val merged = b.filter(
-          expr("((unix_micros(ts) div 3600000000) + 1) * 3600000000") + lit(latenessUs)
-            > lit(splitter.watermarkUs))
-        partials(merged, late = true).write.mode("append").parquet(store)
-      })
-
-    val src = s.readStream.schema(cols.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val q = src.writeStream.foreachBatch(handler).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    s.read.parquet(store)
+    val store = DeltaStore(freshDir(dir, "late_update_store"),
+      partials(parts.head.limit(0), late = false))
+    val last = replay(dir, "late_update", parts)(splitter.foreachBatch { (onTime, late, batchId) =>
+      // allowed lateness: merge only while the window's end + lateness
+      // is still ahead of the watermark (the splitter's wm is updated
+      // AFTER the handler runs, so this is the batch's own cutoff)
+      val merged = late.filter(
+        expr("((unix_micros(ts) div 3600000000) + 1) * 3600000000") + lit(latenessUs)
+          > lit(splitter.watermarkUs))
+      store.append(batchId,
+        partials(onTime, late = false).unionByName(partials(merged, late = true)))
+    })
+    store.snapshot(last)
       .groupBy("wstart", "event_type")
       .agg(sum("cnt").as("cnt"), round(sum("sv"), 4).as("sv"), sum("n_late").as("n_late"))
       .orderBy("wstart", "event_type")
@@ -4448,18 +4298,14 @@ object StreamingQueries {
     */
   def streamFeatureHash(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir).select("user_id", "event_type", "ts")
-    val store = VersionedStore(freshDir(dir, "sfh_store"),
-      emptyOf(s, "user_id BIGINT, dim BIGINT, val BIGINT"))
-    val lastId = replay(dir, "sfh", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
+    sumMaintained(dir, "sfh", daySplits(ev, col("ts"), 3), "user_id", "dim") { batch =>
       val feats = batch.select(col("user_id"), explode(array(
         concat(lit("t:"), col("event_type")),
         concat(lit("h:"), hour(col("ts"))),
         concat(lit("d:"), dayofweek(col("ts"))))).as("f"))
-      val own = graft.operators.Curation.featureHash(feats, "user_id", "f", dim = 32)
+      graft.operators.Curation.featureHash(feats, "user_id", "f", dim = 32)
         .select(col("key").as("user_id"), col("dim"), col("val"))
-      store.write(batchId, store.sumMerge(batchId, own, "user_id", "dim"))
     }
-    store.version(lastId)
       .select(col("user_id"), col("dim"), col("val").cast("long").as("val"))
       .orderBy("user_id", "dim")
   }
@@ -4697,14 +4543,9 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir).select("doc_id", "text")
     val store = VersionedStore(freshDir(dir, "smg_store"), emptyOf(s, "item STRING, c BIGINT"))
     val lastId = replay(dir, "smg", modSplit(docs, "doc_id")) { (batch, batchId) =>
-      val prior = store.prior(batchId)
       val pfx = batch.select(explode(TextAnalysis.tokens(col("text"))).as("tok"))
         .select(substring(col("tok"), 1, 1).as("pfx"))
-      val own = Sketches.mgSummary(pfx, "pfx", K)
-      val summed = prior.select(col("item"), col("c").as("pc"))
-        .join(own.select(col("item"), col("c").as("oc")), Seq("item"), "full_outer")
-        .select(col("item"),
-          (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("c"))
+      val summed = store.sumMerge(batchId, Sketches.mgSummary(pfx, "pfx", K), "item")
       val wRank = org.apache.spark.sql.expressions.Window
         .orderBy(col("c").desc, col("item")) // ≤2k rows: bounded
       val ranked = summed.withColumn("rn", row_number().over(wRank)).localCheckpoint(eager = false)
@@ -4816,17 +4657,8 @@ object StreamingQueries {
     QueryableState.register(qname, store)
     val client = new QueryableState.Client
     val last = replay(dir, "sqst", daySplits(ev, col("ts"), 3)) { (batch, batchId) =>
-      val prior = store.prior(batchId)
-      val own = batch.groupBy("user_id")
-        .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
-      val merged = prior
-        .select(col("user_id"), col("cnt").as("pc"), col("total").as("pt"))
-        .join(own.select(col("user_id"), col("cnt").as("oc"), col("total").as("ot")),
-          Seq("user_id"), "full_outer")
-        .select(col("user_id"),
-          (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("cnt"),
-          (coalesce(col("pt"), lit(0.0)) + coalesce(col("ot"), lit(0.0))).as("total"))
-      store.write(batchId, merged)
+      store.write(batchId, store.sumMerge(batchId,
+        batch.groupBy("user_id").agg(count(lit(1)).as("cnt"), sum("value").as("total")), "user_id"))
       QueryableState.publish(qname, batchId)
       // external client's mid-stream view of the live state
       res.append(batchId, client.getKvStates(qname, "user_id", probes)
@@ -4878,16 +4710,8 @@ object StreamingQueries {
     val store = VersionedStore(freshDir(dir, "sboot_store"), splits.head.groupBy("user_id")
       .agg(count(lit(1)).as("cnt"), sum("value").as("total")))
     val lastId = replay(dir, "sboot", splits.tail) { (batch, batchId) =>
-      val prior = store.prior(batchId)
-      val own = batch.groupBy("user_id")
-        .agg(count(lit(1)).as("cnt"), sum("value").as("total"))
-      store.write(batchId, prior
-        .select(col("user_id"), col("cnt").as("pc"), col("total").as("pt"))
-        .join(own.select(col("user_id"), col("cnt").as("oc"), col("total").as("ot")),
-          Seq("user_id"), "full_outer")
-        .select(col("user_id"),
-          (coalesce(col("pc"), lit(0L)) + coalesce(col("oc"), lit(0L))).as("cnt"),
-          (coalesce(col("pt"), lit(0.0)) + coalesce(col("ot"), lit(0.0))).as("total")))
+      store.write(batchId, store.sumMerge(batchId,
+        batch.groupBy("user_id").agg(count(lit(1)).as("cnt"), sum("value").as("total")), "user_id"))
     }
     // Savepoint reader: offline read of the final state
     store.version(lastId)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -98,35 +98,51 @@ final case class DeltaStore(base: String, seed: DataFrame) {
   *
   * This is the storage posture the IVM retraction queries document:
   * compaction bounded to the keys present in ΔJ (at hash-bucket
-  * granularity), untouched partitions unwritten. Retry-idempotent like
-  * [[VersionedStore]]: version `v_<b>` is an overwrite derived from
-  * versions < b only. The touched-bucket set is collected to the
-  * driver — bounded by `numBuckets`, a constant.
+  * granularity), untouched partitions unwritten. The touched-bucket
+  * set is collected to the driver — bounded by `numBuckets`, a
+  * constant.
+  *
+  * The seed follows [[VersionedStore]]'s contract: it is version −1,
+  * the state before batch 0, and is never written. A bucket that no
+  * version ≤ b wrote serves the seed's own rows for that bucket, so a
+  * seed row stays visible until the first batch that touches its
+  * bucket folds it into that bucket's version. A state row is
+  * identified by the seed's columns other than `multCol`, which
+  * carries the signed multiplicity; rows hash to buckets by `keyCol`.
+  * The seed declares the one schema every version is read with (no
+  * footer-inference job), and an `applyDelta` whose columns differ
+  * from it fails, naming the store and both column lists.
+  *
+  * A touched bucket whose whole net state folds to zero writes no
+  * partition directory, so its version gets an EMPTY `__b=<i>`
+  * directory as a marker: under the declared schema it reads as zero
+  * rows without a job, and "the latest version that wrote the bucket"
+  * stays the truth instead of resurrecting the retracted rows from an
+  * older version or the seed.
+  *
+  * Retry-idempotent like [[VersionedStore]]: version `v_<b>` is an
+  * overwrite derived from the seed and versions < b only. The
+  * overwrite deletes the whole `v_<b>` directory, markers included,
+  * before it writes, so a retry rewrites the same buckets and markers
+  * from the same inputs and no file of the failed attempt survives.
   */
-final case class BucketStore(spark: SparkSession, base: String, numBuckets: Int) {
+final case class BucketStore(base: String, seed: DataFrame, keyCol: String, multCol: String,
+    numBuckets: Int) {
 
   require(!base.contains("://"),
     s"BucketStore probes the LOCAL filesystem; got remote base $base")
 
-  private def vPath(v: String): String = s"$base/v_$v"
-  private def schemaPath: String = s"$base/schema"
+  private val spark = seed.sparkSession
+  val schema: StructType = StoreSchema.of(seed)
+  private val groupCols = seed.columns.toSeq.filterNot(_ == multCol)
 
-  private def withBucket(df: DataFrame, keyCol: String): DataFrame =
-    df.withColumn("__b", pmod(hash(col(keyCol)), lit(numBuckets)))
-
-  /** Seed the store. The seed is also written unpartitioned to a schema
-    * directory so an all-empty store still reads with its schema.
-    */
-  def init(df: DataFrame, keyCol: String): Unit =
-    graft.BenchMeters.fixture {
-      bucketCache.remove("init") // re-init overwrites the version dir
-      df.limit(0).write.mode("overwrite").parquet(schemaPath)
-      withBucket(df, keyCol).write.partitionBy("__b")
-        .mode("overwrite").parquet(vPath("init"))
-    }
+  private def vPath(v: Long): String = s"$base/v_$v"
+  private def bPath(v: Long, b: Int): String = s"${vPath(v)}/__b=$b"
+  private def bucket: Column = pmod(hash(col(keyCol)), lit(numBuckets))
+  private def read(paths: Seq[String]): DataFrame = spark.read.schema(schema).parquet(paths: _*)
 
   /** Buckets present under a version — a directory listing, no data read. */
-  private def bucketsOf(v: String): Set[Int] = {
+  private def bucketsOf(v: Long): Set[Int] = {
     val d = new java.io.File(vPath(v))
     if (!d.exists()) Set.empty
     else d.listFiles().toSeq.filter(_.isDirectory).map(_.getName)
@@ -139,51 +155,47 @@ final case class BucketStore(spark: SparkSession, base: String, numBuckets: Int)
     * O(new versions), not O(batches × buckets) over the stream's
     * lifetime (r9 advice).
     */
-  private val bucketCache = scala.collection.mutable.Map.empty[String, Set[Int]]
-  private def bucketsCached(v: String): Set[Int] =
+  private val bucketCache = scala.collection.mutable.Map.empty[Long, Set[Int]]
+  private def bucketsCached(v: Long): Set[Int] =
     bucketCache.getOrElseUpdate(v, bucketsOf(v))
 
   /** Versions ≤ batchId, oldest first — ONE base-directory listing, not
     * a File.exists probe per batch id (r9 advice).
     */
-  private def versionsThrough(batchId: Long): Seq[String] = {
-    val present = Option(new java.io.File(base).listFiles())
-      .map(_.toSeq).getOrElse(Seq.empty)
+  private def versionsThrough(batchId: Long): Seq[Long] =
+    Option(new java.io.File(base).listFiles()).map(_.toSeq).getOrElse(Seq.empty)
       .filter(_.isDirectory).map(_.getName)
-      .filter(_.startsWith("v_")).map(_.stripPrefix("v_")).toSet
-    val nums = present.filter(v => v.nonEmpty && v.forall(_.isDigit))
-      .map(_.toLong).filter(_ <= batchId).toSeq.sorted
-    (if (present.contains("init")) Seq("init") else Seq.empty) ++
-      nums.map(_.toString)
-  }
+      .filter(_.startsWith("v_")).map(_.stripPrefix("v_"))
+      .filter(v => v.nonEmpty && v.forall(_.isDigit))
+      .map(_.toLong).filter(_ <= batchId).sorted
 
-  /** Per bucket, the newest version directory that wrote it. */
-  private def latestDirs(batchId: Long, only: Option[Set[Int]]): Seq[String] = {
-    val latest = scala.collection.mutable.Map.empty[Int, String]
-    versionsThrough(batchId).foreach(v => bucketsCached(v).foreach(b => latest(b) = v))
-    latest.toSeq.sortBy(_._1)
-      .filter { case (b, _) => only.forall(_.contains(b)) }
-      .map { case (b, v) => s"${vPath(v)}/__b=$b" }
+  /** The state of `buckets` as of `batchId`: per bucket, the newest
+    * version directory that wrote it, else the seed's rows.
+    */
+  private def state(batchId: Long, buckets: Set[Int]): DataFrame = {
+    val latest = versionsThrough(batchId).foldLeft(Map.empty[Int, Long]) { (m, v) =>
+      m ++ bucketsCached(v).filter(buckets).map(_ -> v)
+    }
+    val fromSeed = buckets -- latest.keySet
+    val seedRows = if (fromSeed.size == numBuckets) seed
+      else seed.filter(bucket.isin(fromSeed.toSeq: _*))
+    if (latest.isEmpty) seedRows
+    else seedRows.unionByName(read(latest.toSeq.sorted.map { case (b, v) => bPath(v, b) }))
   }
-
-  private def readOrEmpty(paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) spark.read.parquet(schemaPath)
-    else spark.read.parquet(paths: _*)
 
   /** The live net-multiplicity state as of `batchId`. */
-  def snapshot(batchId: Long): DataFrame = readOrEmpty(latestDirs(batchId, None))
+  def snapshot(batchId: Long): DataFrame = state(batchId, (0 until numBuckets).toSet)
 
   /** Fold a signed delta into the touched buckets' net state and write
-    * ONLY those buckets as version `batchId`. `groupCols` identify a
-    * state row; `multCol` carries the signed multiplicity; zero-net
-    * rows are dropped (the live set).
+    * ONLY those buckets as version `batchId`; zero-net rows are dropped
+    * (the live set).
     */
-  def applyDelta(batchId: Long, delta: DataFrame, keyCol: String,
-      groupCols: Seq[String], multCol: String): Unit = {
+  def applyDelta(batchId: Long, delta: DataFrame): Unit = {
+    StoreSchema.check(s"BucketStore $base", schema, delta)
     // a retry OVERWRITES this version directory: drop its cached bucket
     // set first so the cache's immutability premise holds (r10 review —
     // the cache must never serve a pre-retry bucket set)
-    bucketCache.remove(batchId.toString)
+    bucketCache.remove(batchId)
     // LAZY materialization boundary (r13 opt): the delta fans out to the
     // touched-bucket collect and the fold-write, so it must compute
     // once — but an EAGER localCheckpoint paid a third Spark job per
@@ -193,50 +205,20 @@ final case class BucketStore(spark: SparkSession, base: String, numBuckets: Int)
     // fewer job, and no SQL-cache columnar round-trip. The job-count
     // floor is what the r12 listener profile measured as this operator
     // family's entire local cost (~27 jobs/batch, ~185 ms/job).
-    val d = withBucket(delta, keyCol).localCheckpoint(eager = false)
+    val d = delta.withColumn("__b", bucket).localCheckpoint(eager = false)
     val touched = d.select("__b").distinct().collect().map(_.getInt(0)).toSet
-    val priorTouched = readOrEmpty(latestDirs(batchId - 1, Some(touched)))
-    withBucket(priorTouched, keyCol).unionByName(d)
+    state(batchId - 1, touched).withColumn("__b", bucket).unionByName(d)
       .groupBy(("__b" +: groupCols).map(col): _*)
       .agg(sum(multCol).as(multCol))
       .filter(col(multCol) =!= 0L)
-      .write.partitionBy("__b").mode("overwrite").parquet(vPath(batchId.toString))
-    // a touched bucket whose ENTIRE net state folded to zero writes no
-    // partition directory above — without an explicit marker the
-    // shadowing rule would keep serving the bucket's stale older
-    // version, resurrecting fully-retracted rows. Materialize an empty
-    // directory for every such bucket so "latest version that wrote the
-    // bucket" is the truth. The marker is a FILE COPY of the schema
-    // dir's (empty, schema-bearing) parquet part — byte-identical to
-    // what an empty Spark write would produce for readers, without
-    // paying a Spark job per emptied bucket (r13 opt).
-    val emptied = touched -- bucketsOf(batchId.toString)
-    emptied.foreach { b =>
-      val dst = new java.io.File(s"${vPath(batchId.toString)}/__b=$b")
-      // retry overwrite: clear the marker dir RECURSIVELY and verify each
-      // delete — a stale data part surviving beside the new empty marker
-      // would be read back, resurrecting the very rows the marker exists
-      // to bury (r13 advice)
-      def clear(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(clear))
-        if (f.exists() && !f.delete())
-          sys.error(s"BucketStore $base: cannot clear stale marker entry $f")
-      }
-      if (dst.exists()) Option(dst.listFiles()).foreach(_.foreach(clear))
-      dst.mkdirs()
-      val part = new java.io.File(schemaPath).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"BucketStore $base: schema dir has no parquet part"))
-      java.nio.file.Files.copy(part.toPath,
-        new java.io.File(dst, part.getName).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+      .write.partitionBy("__b").mode("overwrite").parquet(vPath(batchId))
+    // each touched bucket that folded to zero gets its empty marker
+    (touched -- bucketsOf(batchId)).foreach(b => new java.io.File(bPath(batchId, b)).mkdirs())
   }
 
   /** Buckets version `batchId` rewrote (the spec's untouched-buckets probe). */
-  def bucketsWritten(batchId: Long): Set[Int] = bucketsOf(batchId.toString)
+  def bucketsWritten(batchId: Long): Set[Int] = bucketsOf(batchId)
 
   /** Rows version `batchId` wrote. */
-  def rowsWritten(batchId: Long): Long =
-    spark.read.parquet(vPath(batchId.toString)).count()
+  def rowsWritten(batchId: Long): Long = read(Seq(vPath(batchId))).count()
 }

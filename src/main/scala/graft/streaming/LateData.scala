@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * is derived from batches < N (global max event time seen so far minus
   * the delay — monotonic), so a batch's own rows never mark each other
   * late, exactly like Spark's and the reference's watermark propagation.
-  * Rows at/above the cutoff flow to `main`, the rest to `late`. Use it
-  * as the `foreachBatch` of an update/append stream whose downstream
-  * state the main branch feeds.
+  * The handler gets the rows at/above the cutoff (on time), the rest
+  * (late) and the batch id, so one batch can write both to one
+  * batch-stamped store version. Use it as the `foreachBatch` of an
+  * update/append stream whose downstream state the on-time rows feed.
   *
   * The split itself is executor-parallel (two pushed-down filters over
   * the cached batch); only the scalar max-ts and the watermark variable
@@ -27,13 +28,13 @@ final class LateData(tsCol: String, delayMs: Long) extends Serializable {
   /** current watermark in event-time microseconds (MinValue before data) */
   def watermarkUs: Long = wmUs
 
-  def foreachBatch(main: DataFrame => Unit, late: DataFrame => Unit): (Dataset[Row], Long) => Unit =
-    (batch, _) => {
+  def foreachBatch(handler: (DataFrame, DataFrame, Long) => Unit): (Dataset[Row], Long) => Unit =
+    (batch, batchId) => {
       val b = batch.persist()
       try {
         val cutoff = wmUs
-        late(b.filter(unix_micros(col(tsCol)) < cutoff))
-        main(b.filter(unix_micros(col(tsCol)) >= cutoff))
+        val onTime = unix_micros(col(tsCol)) >= cutoff
+        handler(b.filter(onTime), b.filter(!onTime), batchId)
         val mx = b.agg(max(unix_micros(col(tsCol)))).head.get(0)
         if (mx != null)
           wmUs = math.max(wmUs, mx.asInstanceOf[Long] - delayMs * 1000L)

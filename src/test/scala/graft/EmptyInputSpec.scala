@@ -175,7 +175,10 @@ class EmptyInputSpec extends SparkSpec {
     "q_stream_tclose", // replay of 3 empty parts: sum + distinct merges into empty stores
     "q_stream_mg", // replay of 3 empty parts: MG merge with a null subtrahend, empty verify
     "q_stream_delta_minhash", // three seeded DeltaStores, snapshot(b-1) probe over empty stores
-    "q_stream_bootstrap" // the seed is the offline aggregate of an empty first split
+    "q_stream_bootstrap", // the seed is the offline aggregate of an empty first split
+    "q_stream_ivm_join_retract", // three seeded BucketStores fold empty deltas: no bucket touched
+    "q_stream_late_update", // ntile parts of an empty corpus: empty on-time and late partials
+    "q_stream_curate" // replay of 3 empty parts into the keeper DeltaStore
   )
 
   test("representative queries survive a fully empty corpus (no driver-side empty-input crash)") {

@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * maintainer that hand-writes the skeleton again fails this spec; it
   * belongs on `replay`. Likewise `write.mode("append")` into a shared
   * directory is not retry-idempotent; per-batch output belongs on a
-  * [[graft.streaming.DeltaStore]].
+  * [[graft.streaming.DeltaStore]]. And a replay whose one store
+  * sum-merges each batch belongs on `sumMaintained`.
   */
 class ReplayGuardSpec extends AnyFunSuite {
 
@@ -24,20 +25,24 @@ class ReplayGuardSpec extends AnyFunSuite {
     "streamFileSink" -> "parquet file sink with its own checkpoint",
     "streamAggOfAgg" -> "upsert sink over a range-partitioned source",
     "streamTimeTravel" -> "upsert sink, read back as of each batch",
-    "streamCurate" -> "stages its own range-partitioned source files",
-    "streamLateUpdate" -> "stages its own ntile-split source files",
     "streamSqlDedup" -> "runs through RankSql, not foreachBatch",
     "streamSqlTopn" -> "runs through RankSql, not foreachBatch",
     "streamRules" -> "goes through BroadcastState.withBatchRules")
 
-  private val appendExempt = Map(
-    "streamLateUpdate" -> "two appends per batch into one directory; left for the failure-injection work")
+  private val appendExempt = Map.empty[String, String]
+
+  private val sumMergeExempt = Map(
+    "sumMaintained" -> "the one home of the single-store sum-merge replay",
+    "streamBoilerplate" -> "the merge overlaps a second store's append in each batch",
+    "streamQueryable" -> "each batch also publishes its version and appends the client's probes",
+    "streamBootstrap" -> "its seed is the offline aggregate of the first split, not an empty part")
 
   /** Each token with the members allowed to spell it. */
   private val tokens = Seq(
     """option("maxFilesPerTrigger", "1")""" -> skeletonExempt,
     "Trigger.AvailableNow()" -> skeletonExempt,
-    """write.mode("append")""" -> appendExempt)
+    """write.mode("append")""" -> appendExempt,
+    "store.write(batchId, store.sumMerge(batchId" -> sumMergeExempt)
   private val Member = """^  (?:private(?:\[\w+\])? )?(?:lazy )?(?:def|val) (\w+).*""".r
 
   /** Lines carrying a token outside a top-level member exempt from it. */
@@ -60,7 +65,8 @@ class ReplayGuardSpec extends AnyFunSuite {
     assert(lines.exists(_.contains("def replay(")), "replay not found: wrong file?")
     val found = offenders(lines)
     assert(found.isEmpty,
-      s"hand-written replay skeleton or append; use replay / DeltaStore:\n  ${found.mkString("\n  ")}")
+      s"hand-written replay skeleton, append or sum-merge replay; use replay / DeltaStore / " +
+        s"sumMaintained:\n  ${found.mkString("\n  ")}")
   }
 
   test("the guard flags a hand-written copy in a non-exempt maintainer") {
@@ -70,7 +76,8 @@ class ReplayGuardSpec extends AnyFunSuite {
       "      .option(\"maxFilesPerTrigger\", \"1\").parquet(srcDir)",
       "      .trigger(Trigger.AvailableNow())",
       "    out.coalesce(1).write.mode(\"append\").parquet(resDir)",
+      "    store.write(batchId, store.sumMerge(batchId, own, \"k\"))",
       "  }")
-    assert(offenders(copy).size === 3)
+    assert(offenders(copy).size === 4)
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   * increment (never the view size), compaction folds without changing
   * the snapshot, retries are idempotent, the seed is the state before
   * batch 0 and declares the schema (reads run no job, a mismatched
-  * append fails); BucketStore rewrites only the buckets a delta touches
-  * and keeps net-multiplicity live state.
+  * append fails); BucketStore rewrites only the buckets a delta touches,
+  * keeps net-multiplicity live state and follows the same seed contract.
   */
 class DeltaStoreSpec extends SparkSpec {
 
@@ -80,29 +80,36 @@ class DeltaStoreSpec extends SparkSpec {
     assert(!new java.io.File(s"${store.base}/d_0").exists(), "a rejected append wrote nothing")
   }
 
+  private def kMult(rows: (Long, Long)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("k", "mult")
+  }
+
+  private def bucketStore(name: String, numBuckets: Int, seed: DataFrame): BucketStore =
+    BucketStore(tmp(name), seed, "k", "mult", numBuckets)
+
   test("BucketStore: only touched buckets are rewritten; net state is the live set") {
     import spark.implicits._
     val nb = 8
-    val store = BucketStore(spark, tmp("bstore"), nb)
-    store.init(Seq.empty[(Long, Long)].toDF("k", "mult"), "k")
+    val store = bucketStore("bstore", nb, kMult())
     // batch 0: a spread of keys over all buckets
     val keys = (1L to 64L)
-    store.applyDelta(0L, keys.map(k => (k, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(0L, kMult(keys.map(k => (k, 1L)): _*))
     assert(store.snapshot(0L).count() === 64L)
     val allBuckets = store.bucketsWritten(0L)
     assert(allBuckets.size === nb, "64 keys over 8 buckets should hit all of them")
     // batch 1: touch ONE key — only its bucket may be rewritten
-    store.applyDelta(1L, Seq((7L, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(1L, kMult((7L, 1L)))
     assert(store.bucketsWritten(1L).size === 1, "untouched buckets must not be rewritten")
     assert(store.rowsWritten(1L) < 64L, "write cost must track the touched working set")
     val s1 = store.snapshot(1L).as[(Long, Long)].collect().toMap
     assert(s1(7L) === 2L && s1(8L) === 1L && s1.size === 64)
     // batch 2: retract key 7 down to zero — it leaves the live set
-    store.applyDelta(2L, Seq((7L, -2L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(2L, kMult((7L, -2L)))
     val s2 = store.snapshot(2L).as[(Long, Long)].collect().toMap
     assert(!s2.contains(7L) && s2.size === 63)
     // a retried applyDelta recomputes the same version from prior state
-    store.applyDelta(2L, Seq((7L, -2L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(2L, kMult((7L, -2L)))
     assert(store.snapshot(2L).as[(Long, Long)].collect().toMap === s2)
   }
 
@@ -111,31 +118,71 @@ class DeltaStoreSpec extends SparkSpec {
     // single bucket so the only key's full retraction empties the whole
     // bucket — the case where partitionBy writes no directory and a
     // stale older version would otherwise stay the bucket's latest
-    val store = BucketStore(spark, tmp("bempty"), 1)
-    store.init(Seq.empty[(Long, Long)].toDF("k", "mult"), "k")
-    store.applyDelta(0L, Seq((1L, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    val store = bucketStore("bempty", 1, kMult())
+    store.applyDelta(0L, kMult((1L, 1L)))
     assert(store.snapshot(0L).count() === 1L)
-    store.applyDelta(1L, Seq((1L, -1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(1L, kMult((1L, -1L)))
     assert(store.snapshot(1L).count() === 0L,
       "a fully-retracted bucket must read empty, not its stale prior version")
     // and a later insert starts from the emptied state
-    store.applyDelta(2L, Seq((2L, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(2L, kMult((2L, 1L)))
     val s2 = store.snapshot(2L).as[(Long, Long)].collect().toMap
     assert(s2 === Map(2L -> 1L), s"expected only the new row, got $s2")
   }
 
   test("BucketStore: snapshot shadows per bucket (older versions of a touched bucket are invisible)") {
     import spark.implicits._
-    val store = BucketStore(spark, tmp("bshadow"), 4)
-    store.init(Seq.empty[(Long, Long)].toDF("k", "mult"), "k")
-    store.applyDelta(0L, Seq((1L, 1L), (2L, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    val store = bucketStore("bshadow", 4, kMult())
+    store.applyDelta(0L, kMult((1L, 1L), (2L, 1L)))
     // key 1 and key 2 may share a bucket or not; touch key 1 twice more
-    store.applyDelta(1L, Seq((1L, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
-    store.applyDelta(2L, Seq((1L, 1L)).toDF("k", "mult"), "k", Seq("k"), "mult")
+    store.applyDelta(1L, kMult((1L, 1L)))
+    store.applyDelta(2L, kMult((1L, 1L)))
     val s = store.snapshot(2L).as[(Long, Long)].collect().toMap
     assert(s(1L) === 3L && s(2L) === 1L, s"shadowing broke net state: $s")
     // reading an OLDER snapshot sees the state as of that batch
     val s0 = store.snapshot(0L).as[(Long, Long)].collect().toMap
     assert(s0(1L) === 1L && s0(2L) === 1L)
+  }
+
+  test("BucketStore: reading a snapshot launches no Spark job, emptied buckets included") {
+    val store = bucketStore("bnojob", 4, kMult())
+    store.applyDelta(0L, kMult((1L, 1L), (2L, 1L), (3L, 1L)))
+    // retract every key: each touched bucket of version 1 is an empty marker
+    store.applyDelta(1L, kMult((1L, -1L), (2L, -1L), (3L, -1L)))
+    assert(jobsOf {
+      store.snapshot(-1L)
+      store.snapshot(0L)
+      store.snapshot(1L)
+    } === Nil)
+    assert(store.snapshot(0L).count() === 3L && store.snapshot(1L).count() === 0L)
+  }
+
+  test("BucketStore: seed rows serve the buckets no version wrote, and are shadowed once written") {
+    import spark.implicits._
+    val seed = kMult((1L to 16L).map(k => (k, 1L)): _*)
+    val store = bucketStore("bseed", 4, seed)
+    assert(store.snapshot(-1L).as[(Long, Long)].collect().toMap === (1L to 16L).map(_ -> 1L).toMap)
+    store.applyDelta(0L, kMult((1L, 1L)))
+    val touched = store.bucketsWritten(0L)
+    assert(touched.size === 1)
+    // key 1's bucket now reads from version 0, where the seed row folded
+    // in; every other seed row still reads from the seed, each once
+    val s0 = store.snapshot(0L).as[(Long, Long)].collect().toSeq
+    assert(s0.size === 16 && s0.toMap === (1L to 16L).map(_ -> 1L).toMap.updated(1L, 2L))
+    // retracting key 1 fully: the seed's (1, 1) must not come back
+    store.applyDelta(1L, kMult((1L, -2L)))
+    val s1 = store.snapshot(1L).as[(Long, Long)].collect().toMap
+    assert(s1 === (2L to 16L).map(_ -> 1L).toMap, s"seed row resurrected or lost: $s1")
+  }
+
+  test("BucketStore: a delta whose columns or types differ from the seed throws and names them") {
+    import spark.implicits._
+    val store = bucketStore("bcheck", 4, kMult())
+    val e = intercept[IllegalArgumentException](
+      store.applyDelta(0L, Seq((1L, "x")).toDF("k", "mult")))
+    assert(e.getMessage.contains("BucketStore") && e.getMessage.contains(store.base))
+    assert(e.getMessage.contains("(k: BIGINT, mult: STRING)") &&
+      e.getMessage.contains("(k: BIGINT, mult: BIGINT)"))
+    assert(!new java.io.File(s"${store.base}/v_0").exists(), "a rejected delta wrote nothing")
   }
 }

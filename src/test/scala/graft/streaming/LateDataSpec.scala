@@ -24,7 +24,10 @@ class LateDataSpec extends SparkSpec {
 
     val splitter = new LateData("ts", delayMs = 5000)
     val q = input.toDF().writeStream
-      .foreachBatch(splitter.foreachBatch(drain(mainIds), drain(lateIds)))
+      .foreachBatch(splitter.foreachBatch { (onTime, late, _) =>
+        drain(mainIds)(onTime)
+        drain(lateIds)(late)
+      })
       .start()
     try {
       input.addData(ev(1, 10000), ev(2, 60000))
