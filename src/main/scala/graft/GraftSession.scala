@@ -6,9 +6,40 @@ import org.apache.spark.sql.SparkSession
   * handling on (runtime re-planning replaces the reference's cost-based
   * batch optimizer choices), UTC session time, shuffle parallelism from
   * the environment. On a real cluster the same settings hold — only
-  * master/memory change.
+  * master/memory change. The only `SparkSession.builder()` in the
+  * project (`SessionBuilderGuardSpec`): every entry point and every test
+  * runs with the settings below.
+  *
+  * Three settings remove fixed costs below Spark that every pass paid
+  * again (measured with `perfbench/run.py`, seed 1, 4-vCPU host):
+  *  - `spark.sql.codegen.cache.maxEntries` = `CodegenCacheEntries`.
+  *    Spark's default keeps 100 generated classes, LRU. One pass of the
+  *    `stream_replay` workload compiles about 175 distinct classes
+  *    (`olap_sql` 61; the largest single query of the sf0.01 sweep,
+  *    `q_emb_compression_recall`, 165), so at 100 each repeated pass
+  *    recompiled about 160 of them with Janino and ran them in the
+  *    interpreter again; at 2000 a measured pass compiles 7–17. The cache
+  *    is split into segments that each evict on their own, so the bound
+  *    keeps an order of magnitude of headroom over one pass. A static
+  *    conf: the first session of a JVM fixes it.
+  *  - `fs.file.impl` = [[GraftLocalFileSystem]], which sets permissions
+  *    and reads link status in-process. Stock Hadoop without its native
+  *    library starts a `chmod` child process per created file and
+  *    directory and a `readlink` per link-status call: about 1,160
+  *    child processes per `stream_replay` run, 20 with it.
+  *  - `spark.sql.streaming.checkpointFileManagerClass` =
+  *    `FileSystemBasedCheckpointFileManager`, so streaming checkpoint
+  *    logs go through that filesystem; the default `FileContext` manager
+  *    builds its own stock local filesystem and runs `readlink` on every
+  *    rename. The trade-off: it moves a finished log into place with an
+  *    `exists` check and a plain rename, which is not atomic on every
+  *    store (an object store copies), so a checkpoint directory must
+  *    have a single writer. Each streaming query here owns its own.
   */
 object GraftSession {
+
+  /** Generated classes Spark keeps compiled (see the class comment). */
+  private val CodegenCacheEntries = 2000
 
   def builder(appName: String = "graft",
       master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
@@ -29,6 +60,10 @@ object GraftSession {
       // (dedup/similarity verify phases) carry an explicit broadcast()
       // hint at the join site instead, where the size reasoning lives.
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
 
   def get(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

@@ -23,11 +23,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // the config form is STATIC and ignored when the builder reuses an
       // already-running SparkContext (as in a shared test JVM); the
       // programmatic hook exercises the identical injection logic
-      val s = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-ext-test")
+      val s = GraftSession.builder("graft-ext-test", master = "local[2]")
         .withExtensions(new GraftExtensions)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       val r = s.sql(
         "SELECT hash_code('abc') h, cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) c").head()

@@ -9,7 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
-/** Shared local SparkSession for operator specs. */
+/** Shared local SparkSession for operator specs, built by
+  * [[GraftSession.builder]] like every engine entry point, so the whole
+  * test JVM runs with its filesystem and code-cache settings.
+  */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -47,13 +50,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("graft-test", master = "local[4]", shufflePartitions = 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
