@@ -26,20 +26,11 @@ object Bench {
     // BenchMeters; stamping the split keeps the headline `queries`
     // timings comparable while making the measured maintenance work
     // visible (r7: ~50 s of the 406 s sweep was staging).
-    // SPARK_GRAFT_STAGE_TIMINGS=1 (local diagnosis only): print each
-    // query's Funnel.stage materialization breakdown to stderr, naming
-    // which stage a composite pipeline's time went to
-    val stageTimings = sys.env.get("SPARK_GRAFT_STAGE_TIMINGS").contains("1")
-    def time(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+    def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       BenchMeters.reset()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val r = ((System.nanoTime() - t0) / 1e9, BenchMeters.fixtureSeconds)
-      if (stageTimings && BenchMeters.stageReport.nonEmpty)
-        System.err.println(f"[stages] $name total=${r._1}%.3f " +
-          BenchMeters.stageReport.map { case (l, s) => f"$l=$s%.3f" }.mkString(" "))
-      r
+      ((System.nanoTime() - t0) / 1e9, BenchMeters.fixtureSeconds)
     }
     // Untimed warmup before the loop: JIT the SQL machinery, codegen
     // compiler, and parquet reader paths once, so the one-time cost is
@@ -71,7 +62,7 @@ object Bench {
     val firstPass: Seq[(String, (Double, Double))] =
       selected.toSeq.sortBy(_._1).map { case (name, fn) =>
         isolate(spark)
-        name -> time(name, fn)
+        name -> time(fn)
       }
     // STATED POLICY (since r6, widened r7) — slowest-15 tail: median of
     // three isolated runs (the first-pass timing + two isolated
@@ -92,7 +83,7 @@ object Bench {
         firstPass.filter(p => forcedIsolated(p._1))).distinct.map { case (name, s0) =>
       val samples = Seq(s0) ++ (1 to 2).map { _ =>
         isolate(spark)
-        time(name, SparkEntry.queries(name))
+        time(SparkEntry.queries(name))
       }
       name -> samples.sortBy(_._1).apply(1) // median of 3 by total time
     }.toMap

@@ -22,38 +22,8 @@ package graft
 object BenchMeters {
   private val nanos = new java.util.concurrent.atomic.AtomicLong(0L)
   private val depth = new ThreadLocal[Integer] { override def initialValue: Integer = 0 }
-  private val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]
 
-  def reset(): Unit = { nanos.set(0L); stageLog.clear() }
-
-  /** Book `body`'s wall time against a named pipeline stage (the
-    * [[graft.operators.Funnel.stage]] materialization boundaries) —
-    * the per-stage breakdown that names WHICH stage a drift-prone
-    * composite (q_doc_pipeline_full) spends its time in. The log is
-    * capped: only [[Bench]] drains it (via [[reset]] per query), so a
-    * long-lived library session calling staged operators forever must
-    * not accumulate entries without bound.
-    */
-  private val StageLogCap = 4096
-
-  def stageTimed[T](label: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    try body
-    finally {
-      stageLog.add((label, (System.nanoTime() - t0) / 1e9))
-      while (stageLog.size > StageLogCap) stageLog.poll()
-    }
-  }
-
-  /** (label, seconds) per stage boundary since the last [[reset]], in
-    * execution order.
-    */
-  def stageReport: Seq[(String, Double)] = {
-    val it = stageLog.iterator()
-    val out = Seq.newBuilder[(String, Double)]
-    while (it.hasNext) out += it.next()
-    out.result()
-  }
+  def reset(): Unit = nanos.set(0L)
 
   /** Seconds of fixture staging accumulated since the last [[reset]]. */
   def fixtureSeconds: Double = nanos.get / 1e9

@@ -57,10 +57,8 @@ object CEP {
       emit: (K, PatternMatch[T]) => IterableOnce[O],
       tieFn: T => Long = (_: T) => 0L
   ): Dataset[O] =
-    ds.groupByKey(keyFn)(implicitly[Encoder[K]]).flatMapGroups { (key, it) =>
-      val events = it.toIndexedSeq.sortBy(e => (tsFn(e), tieFn(e)))
-      NFA.findMatchesMulti(events, tsFn, patterns, tsPerMs = 1000L)
-        .iterator.flatMap(m => emit(key, m))
+    perKey(ds, keyFn, tsFn, tieFn) { (key, events) =>
+      NFA.findMatchesMulti(events, tsFn, patterns, tsPerMs = 1000L).iterator.flatMap(emit(key, _))
     }
 
   /** Batch timed-out partial matches (ref: flink-cep
@@ -79,10 +77,8 @@ object CEP {
       emit: (K, PatternMatch[T]) => O,
       tieFn: T => Long = (_: T) => 0L
   ): Dataset[O] =
-    ds.groupByKey(keyFn)(implicitly[Encoder[K]]).flatMapGroups { (key, it) =>
-      val events = it.toIndexedSeq.sortBy(e => (tsFn(e), tieFn(e)))
-      NFA.findWithTimeouts(events, tsFn, pattern, tsPerMs = 1000L)._2
-        .iterator.map(m => emit(key, m))
+    perKey(ds, keyFn, tsFn, tieFn) { (key, events) =>
+      NFA.findWithTimeouts(events, tsFn, pattern, tsPerMs = 1000L)._2.iterator.map(emit(key, _))
     }
 
   /** Batch ENUMERATING pattern matching (ref: Pattern.followedByAny /
@@ -99,10 +95,17 @@ object CEP {
       maxPerStart: Int = 10000,
       tieFn: T => Long = (_: T) => 0L
   ): Dataset[O] =
+    perKey(ds, keyFn, tsFn, tieFn) { (key, events) =>
+      NFA.findAllMatches(events, tsFn, pattern, tsPerMs = 1000L, maxPerStart).iterator.map(emit(key, _))
+    }
+
+  /** The per-key batch step: one shuffle on the key, each group sorted
+    * by (ts, tie) and handed to `run`.
+    */
+  private def perKey[T, K: Encoder, O: Encoder](ds: Dataset[T], keyFn: T => K, tsFn: T => Long,
+      tieFn: T => Long)(run: (K, IndexedSeq[T]) => Iterator[O]): Dataset[O] =
     ds.groupByKey(keyFn)(implicitly[Encoder[K]]).flatMapGroups { (key, it) =>
-      val events = it.toIndexedSeq.sortBy(e => (tsFn(e), tieFn(e)))
-      NFA.findAllMatches(events, tsFn, pattern, tsPerMs = 1000L, maxPerStart)
-        .iterator.map(m => emit(key, m))
+      run(key, it.toIndexedSeq.sortBy(e => (tsFn(e), tieFn(e))))
     }
 
   /** Per-key streaming state: events not yet consumed by an emitted
@@ -122,8 +125,8 @@ object CEP {
       emit: (K, PatternMatch[T]) => O,
       tieFn: T => Long = (_: T) => 0L
   )(implicit stateEnc: Encoder[CepState[T]]): Dataset[O] =
-    streamingWith(ds, keyFn, tsFn, pattern, emit,
-      (evs: IndexedSeq[T], p: Pattern[T]) => NFA.findMatches(evs, tsFn, p, tsPerMs = 1000L), tieFn)
+    streamingWith(ds, keyFn, tsFn, tieFn, pattern, emit, emit)((evs, _) =>
+      (NFA.findMatches(evs, tsFn, pattern, tsPerMs = 1000L), Nil))
 
   /** Streaming ENUMERATING pattern matching (followedByAny /
     * allowCombinations): every viable assignment emits exactly once,
@@ -143,8 +146,8 @@ object CEP {
   )(implicit stateEnc: Encoder[CepState[T]]): Dataset[O] = {
     require(pattern.afterMatch == AfterMatch.NoSkip,
       "enumerating CEP is NoSkip by construction")
-    streamingWith(ds, keyFn, tsFn, pattern, emit,
-      (evs: IndexedSeq[T], p: Pattern[T]) => NFA.findAllMatches(evs, tsFn, p, tsPerMs = 1000L, maxPerStart), tieFn)
+    streamingWith(ds, keyFn, tsFn, tieFn, pattern, emit, emit)((evs, _) =>
+      (NFA.findAllMatches(evs, tsFn, pattern, tsPerMs = 1000L, maxPerStart), Nil))
   }
 
   /** Streaming matching WITH the timeout side output (ref: flink-cep
@@ -165,48 +168,26 @@ object CEP {
       emitMatch: (K, PatternMatch[T]) => O,
       emitTimeout: (K, PatternMatch[T]) => O,
       tieFn: T => Long = (_: T) => 0L
-  )(implicit stateEnc: Encoder[CepState[T]]): Dataset[O] = {
-    val withinUs = 1000L * pattern.withinMs.getOrElse(
-      throw new IllegalArgumentException("streaming CEP requires pattern.within()"))
+  )(implicit stateEnc: Encoder[CepState[T]]): Dataset[O] =
+    streamingWith(ds, keyFn, tsFn, tieFn, pattern, emitMatch, emitTimeout)((evs, wmUs) =>
+      NFA.findWithTimeouts(evs, tsFn, pattern, tsPerMs = 1000L, horizonTs = wmUs))
 
-    def fn(key: K, rows: Iterator[T], state: GroupState[CepState[T]]): Iterator[O] = {
-      val old = if (state.exists) state.get.buffer else Seq.empty[T]
-      val all = (old ++ rows).sortBy(e => (tsFn(e), tieFn(e))).toIndexedSeq
-      val wmUs = state.getCurrentWatermarkMs() * 1000L
-      // one walk: full matches + runs whose window the watermark closed
-      val (rawMatches, partials) =
-        NFA.findWithTimeouts(all, tsFn, pattern, tsPerMs = 1000L, horizonTs = wmUs)
-      val matches = rawMatches.filter(m => tsFn(all(m.startIdx)) + withinUs <= wmUs)
-      val consumed: Set[Int] = pattern.afterMatch match {
-        case AfterMatch.SkipPastLast =>
-          matches.flatMap(m => m.startIdx to m.endIdx).toSet
-        case _ => Set.empty
-      }
-      val keep = all.zipWithIndex.collect {
-        case (e, i) if !consumed.contains(i) && tsFn(e) + withinUs > wmUs => e
-      }
-      if (keep.isEmpty) state.remove()
-      else {
-        state.update(CepState(keep))
-        state.setTimeoutTimestamp(keep.map(tsFn).min / 1000L + pattern.withinMs.get + 1)
-      }
-      matches.iterator.map(m => emitMatch(key, m)) ++
-        partials.iterator.map(m => emitTimeout(key, m))
-    }
-
-    ds.groupByKey(keyFn)(implicitly[Encoder[K]])
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(fn)
-  }
-
+  /** The streaming runner: per key, the state buffer plus the batch's
+    * rows are sorted and replayed through `matcher(events, watermarkUs)`,
+    * which returns (matches, timed-out partials). Matches emit once their
+    * start is decidable; partials emit as returned (the matcher only
+    * times out runs whose window the watermark closed).
+    */
   private def streamingWith[T, K: Encoder, O: Encoder](
       ds: Dataset[T],
       keyFn: T => K,
       tsFn: T => Long,
+      tieFn: T => Long,
       pattern: Pattern[T],
-      emit: (K, PatternMatch[T]) => O,
-      matcher: (IndexedSeq[T], Pattern[T]) => Seq[PatternMatch[T]],
-      tieFn: T => Long = (_: T) => 0L
-  )(implicit stateEnc: Encoder[CepState[T]]): Dataset[O] = {
+      emitMatch: (K, PatternMatch[T]) => O,
+      emitTimeout: (K, PatternMatch[T]) => O
+  )(matcher: (IndexedSeq[T], Long) => (Seq[PatternMatch[T]], Seq[PatternMatch[T]]))(
+      implicit stateEnc: Encoder[CepState[T]]): Dataset[O] = {
     // tsFn is in MICROseconds (matching parquet timestamp precision so
     // same-millisecond events keep a stable order); GroupState watermarks
     // and timeouts are in milliseconds.
@@ -217,10 +198,10 @@ object CEP {
       val old = if (state.exists) state.get.buffer else Seq.empty[T]
       val all = (old ++ rows).sortBy(e => (tsFn(e), tieFn(e))).toIndexedSeq
       val wmUs = state.getCurrentWatermarkMs() * 1000L
+      val (rawMatches, partials) = matcher(all, wmUs)
       // decidable starts: t0 + within <= watermark — every event that
       // could belong to such a match has arrived
-      val matches = matcher(all, pattern)
-        .filter(m => tsFn(all(m.startIdx)) + withinUs <= wmUs)
+      val matches = rawMatches.filter(m => tsFn(all(m.startIdx)) + withinUs <= wmUs)
       val consumed: Set[Int] = pattern.afterMatch match {
         case AfterMatch.SkipPastLast =>
           matches.flatMap(m => m.startIdx to m.endIdx).toSet
@@ -240,7 +221,7 @@ object CEP {
         state.update(CepState(keep))
         state.setTimeoutTimestamp(keep.map(tsFn).min / 1000L + pattern.withinMs.get + 1)
       }
-      matches.iterator.map(m => emit(key, m))
+      matches.iterator.map(emitMatch(key, _)) ++ partials.iterator.map(emitTimeout(key, _))
     }
 
     ds.groupByKey(keyFn)(implicitly[Encoder[K]])

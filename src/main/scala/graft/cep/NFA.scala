@@ -16,8 +16,15 @@ import scala.collection.mutable
   * forward over non-matching events; `next` requires the immediate
   * successor; negated guards invalidate a match if the guard predicate
   * fires in the gap they cover; `within` bounds last−first event time.
-  * Per start index at most one (greedy-first) match is produced —
-  * followedByAny/allowCombinations enumeration is out of scope.
+  *
+  * One walker ([[walk]]) yields, per start index and lazily, every
+  * viable assignment in preference order. The enumerating entry point
+  * [[findAllMatches]] emits all of them — followedByAny/allowCombinations
+  * stages branch, the others keep the first viable assignment. The
+  * first-match entry points ([[findMatches]], [[findMatchesMulti]],
+  * [[findWithTimeouts]]) take the walk's first assignment over the
+  * pattern with those two flags cleared: at most one greedy-first match
+  * per start, the after-match strategy picking the next start.
   */
 object NFA {
 
@@ -56,6 +63,9 @@ object NFA {
     }
   }
 
+  /** Per-stage event indices of a partial match, in stage order. */
+  private type Acc = List[(String, Seq[Int])]
+
   /** @param tsPerMs scale of `ts` relative to milliseconds (1000 when ts
     *                is in microseconds, as with parquet event times) —
     *                `pattern.withinMs` is scaled by it.
@@ -79,35 +89,7 @@ object NFA {
       ts: T => Long,
       patterns: Seq[Pattern[T]],
       tsPerMs: Long = 1L
-  ): Seq[PatternMatch[T]] = {
-    require(patterns.nonEmpty, "no pattern alternatives")
-    patterns.foreach { p =>
-      require(p.stages.nonEmpty, "empty pattern")
-      require(!p.stages.head.negated, "pattern cannot begin with a negated stage")
-    }
-    val out = mutable.ArrayBuffer.empty[PatternMatch[T]]
-    var i = 0
-    while (i < events.length) {
-      patterns.iterator
-        .map(p => matchFrom(events, ts, p, i, tsPerMs).map((p, _)))
-        .collectFirst { case Some(r) => r } match {
-        case Some((pat, m)) =>
-          out += m
-          pat.afterMatch match {
-            case AfterMatch.SkipPastLast => i = m.endIdx + 1
-            case AfterMatch.NoSkip       => i += 1
-            // max(_, i + 1) guarantees progress when the skip target is
-            // the match start itself (Flink throws there; we advance)
-            case AfterMatch.SkipToFirst(v) =>
-              i = math.max(m.indices.getOrElse(v, Nil).headOption.getOrElse(m.endIdx + 1), i + 1)
-            case AfterMatch.SkipToLast(v) =>
-              i = math.max(m.indices.getOrElse(v, Nil).lastOption.getOrElse(m.endIdx + 1), i + 1)
-          }
-        case None => i += 1
-      }
-    }
-    out.toSeq
-  }
+  ): Seq[PatternMatch[T]] = firstMatches(events, ts, patterns, tsPerMs)(_ => ())
 
   /** Full matches AND timed-out partial runs in one walk (ref: flink-cep
     * `TimedOutPartialMatchHandler.java:40` / `PatternTimeoutFunction` —
@@ -135,10 +117,9 @@ object NFA {
     *    is the bounded-input case (every stalled run times out — what
     *    the reference's end-of-input watermark does).
     *
-    * This engine holds one greedy-first run per start index, so at most
-    * one partial emits per start — the enumerating matcher's
-    * alternative branches do not produce distinct timeouts (same
-    * scoping as [[findMatches]]).
+    * Like [[findMatches]] this takes one greedy-first run per start
+    * index, so at most one partial emits per start — the enumerating
+    * matcher's alternative branches do not produce distinct timeouts.
     */
   def findWithTimeouts[T](
       events: IndexedSeq[T],
@@ -147,218 +128,91 @@ object NFA {
       tsPerMs: Long = 1L,
       horizonTs: Long = Long.MaxValue
   ): (Seq[PatternMatch[T]], Seq[PatternMatch[T]]) = {
-    require(pattern.stages.nonEmpty, "empty pattern")
-    require(!pattern.stages.head.negated, "pattern cannot begin with a negated stage")
+    requireShape(pattern)
     val withinScaled = pattern.withinMs.map(_ * tsPerMs).getOrElse(
       throw new IllegalArgumentException("timed-out partial matches require pattern.within()"))
-    val matches = mutable.ArrayBuffer.empty[PatternMatch[T]]
+    val stages = pattern.stages
+    // prefix(k): first match of the pattern's first k stages
+    val prefix = (0 to stages.length).map(k =>
+      firstMatcher(events, ts, pattern.copy(stages = stages.take(k)), tsPerMs))
     val partials = mutable.ArrayBuffer.empty[PatternMatch[T]]
+    val matches = firstMatches(events, ts, Seq(pattern), tsPerMs) { i =>
+      // saturating add: an end-of-time horizon must expire everything
+      val deadline = ts(events(i)) + withinScaled
+      if (deadline >= ts(events(i)) && deadline <= horizonTs) {
+        // runs STOPPED by a negated guard are discarded, not timed out —
+        // flink-cep's stop condition kills the computation state without
+        // a timeout side output. Detection: the run reached some negated
+        // stage (the positive prefix before it matches) and the guard
+        // fired (the prefix INCLUDING it, as a trailing guard over the
+        // gap/window remainder, fails). The first match is
+        // greedy-deterministic, so prefix attempts replay the exact path
+        // the full run held when the guard fired.
+        val killedByGuard = stages.indices.exists(gi =>
+          stages(gi).negated && prefix(gi)(i).isDefined && prefix(gi + 1)(i).isEmpty)
+        if (!killedByGuard)
+          (stages.length - 1 to 1 by -1).iterator
+            .filter(k => !stages(k - 1).negated)
+            .flatMap(k => prefix(k)(i))
+            .nextOption()
+            .foreach(partials += _)
+      }
+    }
+    (matches, partials.toSeq)
+  }
+
+  /** The start-index loop of the first-match entry points: at each start
+    * the first alternative that matches wins and its after-match
+    * strategy picks the next start; `onMiss` sees every start no
+    * alternative matched.
+    */
+  private def firstMatches[T](
+      events: IndexedSeq[T],
+      ts: T => Long,
+      patterns: Seq[Pattern[T]],
+      tsPerMs: Long
+  )(onMiss: Int => Unit): Seq[PatternMatch[T]] = {
+    require(patterns.nonEmpty, "no pattern alternatives")
+    patterns.foreach(requireShape)
+    val alternatives = patterns.map(p => (p.afterMatch, firstMatcher(events, ts, p, tsPerMs)))
+    val out = mutable.ArrayBuffer.empty[PatternMatch[T]]
     var i = 0
     while (i < events.length) {
-      matchFrom(events, ts, pattern, i, tsPerMs) match {
-        case Some(m) =>
-          matches += m
-          pattern.afterMatch match {
-            case AfterMatch.SkipPastLast => i = m.endIdx + 1
-            case AfterMatch.NoSkip       => i += 1
+      alternatives.iterator.flatMap { case (skip, matcher) => matcher(i).map((skip, _)) }
+        .nextOption() match {
+        case Some((skip, m)) =>
+          out += m
+          i = skip match {
+            case AfterMatch.SkipPastLast => m.endIdx + 1
+            case AfterMatch.NoSkip       => i + 1
+            // max(_, i + 1) guarantees progress when the skip target is
+            // the match start itself (Flink throws there; we advance)
             case AfterMatch.SkipToFirst(v) =>
-              i = math.max(m.indices.getOrElse(v, Nil).headOption.getOrElse(m.endIdx + 1), i + 1)
+              math.max(m.indices.getOrElse(v, Nil).headOption.getOrElse(m.endIdx + 1), i + 1)
             case AfterMatch.SkipToLast(v) =>
-              i = math.max(m.indices.getOrElse(v, Nil).lastOption.getOrElse(m.endIdx + 1), i + 1)
+              math.max(m.indices.getOrElse(v, Nil).lastOption.getOrElse(m.endIdx + 1), i + 1)
           }
         case None =>
-          // saturating add: an end-of-time horizon must expire everything
-          val deadline = ts(events(i)) + withinScaled
-          if (deadline >= ts(events(i)) && deadline <= horizonTs) {
-            // runs STOPPED by a negated guard are discarded, not timed
-            // out — flink-cep's stop condition kills the computation
-            // state without a timeout side output. Detection: the run
-            // reached some negated stage (the positive prefix before it
-            // matches) and the guard fired (the prefix INCLUDING it, as
-            // a trailing guard over the gap/window remainder, fails).
-            // The matcher is greedy-deterministic, so prefix attempts
-            // replay the exact path the full run held when the guard
-            // fired.
-            val killedByGuard = pattern.stages.indices.exists { gi =>
-              pattern.stages(gi).negated &&
-                matchFrom(events, ts, pattern.copy(stages = pattern.stages.take(gi)), i, tsPerMs).isDefined &&
-                matchFrom(events, ts, pattern.copy(stages = pattern.stages.take(gi + 1)), i, tsPerMs).isEmpty
-            }
-            if (!killedByGuard) {
-              val best = (pattern.stages.length - 1 to 1 by -1).iterator
-                .filter(k => !pattern.stages(k - 1).negated)
-                .map(k => matchFrom(events, ts, pattern.copy(stages = pattern.stages.take(k)), i, tsPerMs))
-                .collectFirst { case Some(pm) => pm }
-              best.foreach(partials += _)
-            }
-          }
+          onMiss(i)
           i += 1
       }
     }
-    (matches.toSeq, partials.toSeq)
+    out.toSeq
   }
 
-  private def matchFrom[T](
-      events: IndexedSeq[T],
-      ts: T => Long,
-      pattern: Pattern[T],
-      start: Int,
-      tsPerMs: Long
-  ): Option[PatternMatch[T]] = {
-    val n = events.length
-    val startTs = ts(events(start))
-    val deadline = pattern.withinMs.map(w => startTs + w * tsPerMs).getOrElse(Long.MaxValue)
-    def inWindow(idx: Int): Boolean = ts(events(idx)) <= deadline
-    // context for iterative conditions: events bound so far (the acc at
-    // the call site, plus the in-progress loop's earlier takes)
-    def ctxAt(i: Int, bound: List[(String, Seq[Int])]): MatchContext[T] =
-      new MatchContext(events, i, bound)
+  /** Start index → the first (greedy-first) match from it: the walk's
+    * first assignment over `pattern` with followedByAny/allowCombinations
+    * cleared, so every stage keeps only its first viable assignment.
+    */
+  private def firstMatcher[T](events: IndexedSeq[T], ts: T => Long, pattern: Pattern[T],
+      tsPerMs: Long): Int => Option[PatternMatch[T]] = {
+    val single = pattern.copy(stages = pattern.stages.map(_.copy(anyMatch = false, combinations = false)))
+    start => walk(events, ts, single, start, tsPerMs).nextOption().map(buildMatch(events, single, start, _))
+  }
 
-    /** Maximal walk of a loop quantifier starting at `first`: all indices
-      * the loop could take, honoring inner contiguity, the window, and
-      * the `until` stop condition (checked BEFORE `where`, as in the
-      * reference: an event matching both stops the loop). `acc` feeds
-      * iterative conditions; the loop's earlier takes are visible to
-      * each continuation test (reference parity: accepted events only).
-      */
-    def loopWalk(st: Stage[T], first: Int, acc: List[(String, Seq[Int])]): Vector[Int] = {
-      def stop(c: Int): Boolean = st.until.exists(u => u(events(c)))
-      val taken = mutable.ArrayBuffer[Int](first)
-      def ok(c: Int): Boolean = st.test(events(c), ctxAt(c, acc :+ (st.name -> taken.toVector)))
-      var continue = taken.length < st.quantifier.max
-      while (continue) {
-        val next: Option[Int] = st.innerContiguity match {
-          case Contiguity.Strict =>
-            val c = taken.last + 1
-            if (c < n && inWindow(c) && !stop(c) && ok(c)) Some(c) else None
-          case Contiguity.Relaxed =>
-            var c = taken.last + 1
-            while (c < n && inWindow(c) && !stop(c) && !ok(c)) c += 1
-            if (c < n && inWindow(c) && !stop(c) && ok(c)) Some(c) else None
-        }
-        next match {
-          case Some(c) =>
-            taken += c
-            continue = taken.length < st.quantifier.max
-          case None => continue = false
-        }
-      }
-      taken.toVector
-    }
-
-    /** Match stages from `si` onward. `acc` carries EVENT INDICES per
-      * stage (events are attached at the end) so skip strategies and
-      * all-rows emission know each binding's position.
-      * @param from    first event index eligible for the next stage
-      * @param prevEnd index of the last matched positive event
-      * @param guard   pending negated stage covering the gap before the
-      *                next positive stage
-      */
-    def go(si: Int, from: Int, prevEnd: Int, guard: Option[Stage[T]],
-        acc: List[(String, Seq[Int])]): Option[(List[(String, Seq[Int])], Int)] = {
-      if (si == pattern.stages.length) {
-        // zero-width matches (every stage optional and skipped) are not
-        // produced — a match must consume at least one event.
-        if (prevEnd < start) None
-        // trailing guard: applies to the window remainder / immediate successor
-        else guard match {
-          case None => Some((acc, prevEnd))
-          case Some(g) =>
-            g.contiguity match {
-              case Contiguity.Strict =>
-                val c = prevEnd + 1
-                if (c < n && inWindow(c) && g.test(events(c), ctxAt(c, acc))) None
-                else Some((acc, prevEnd))
-              case Contiguity.Relaxed =>
-                if (pattern.withinMs.isEmpty)
-                  throw new IllegalArgumentException("trailing notFollowedBy requires within()")
-                val bad = (prevEnd + 1 until n)
-                  .exists(j => inWindow(j) && g.test(events(j), ctxAt(j, acc)))
-                if (bad) None else Some((acc, prevEnd))
-            }
-        }
-      } else {
-        val st = pattern.stages(si)
-        if (st.negated) {
-          require(guard.isEmpty, "consecutive negated stages are not supported")
-          go(si + 1, from, prevEnd, Some(st), acc)
-        } else matchPositive(si, st, from, prevEnd, guard, acc)
-      }
-    }
-
-    def matchPositive(si: Int, st: Stage[T], from: Int, prevEnd: Int,
-        guard: Option[Stage[T]],
-        acc: List[(String, Seq[Int])]): Option[(List[(String, Seq[Int])], Int)] = {
-      // "first" = no event consumed yet (covers optional skipped leading
-      // stages too): the first POSITIVE take must anchor at `start`, else
-      // the same match would also be found from a later start index.
-      val isFirst = prevEnd < start
-
-      def guardAllows(c: Int): Boolean = guard match {
-        case None => true
-        case Some(g) =>
-          g.contiguity match {
-            case Contiguity.Strict =>
-              !(prevEnd + 1 < c && g.test(events(prevEnd + 1), ctxAt(prevEnd + 1, acc)))
-            case Contiguity.Relaxed =>
-              !(prevEnd + 1 until c).exists(j => g.test(events(j), ctxAt(j, acc)))
-          }
-      }
-
-      def tryAt(c: Int): Option[(List[(String, Seq[Int])], Int)] = {
-        val walk = if (st.quantifier.max == 1) Vector(c) else loopWalk(st, c, acc)
-        val minTake = math.max(st.quantifier.min, 1)
-        // backtracking over the loop length: greedy = longest-first,
-        // reluctant = shortest-first
-        val lengths = minTake to walk.length
-        (if (st.greedy) lengths.reverseIterator else lengths.iterator)
-          .map { k =>
-            val lastIdx = walk(k - 1)
-            go(si + 1, lastIdx + 1, lastIdx, None, acc :+ (st.name -> walk.take(k)))
-          }
-          .collectFirst { case Some(r) => r }
-      }
-
-      def candOk(c: Int): Boolean = st.test(events(c), ctxAt(c, acc))
-
-      val attempt: Option[(List[(String, Seq[Int])], Int)] =
-        if (isFirst) {
-          if (candOk(start) && inWindow(start)) tryAt(start) else None
-        } else st.contiguity match {
-          case Contiguity.Strict =>
-            val c = prevEnd + 1
-            if (c < n && inWindow(c) && candOk(c) && guardAllows(c)) tryAt(c)
-            else None
-          case Contiguity.Relaxed =>
-            // scan candidates in order; a relaxed-guard violation at any
-            // gap event also poisons every later candidate → stop early.
-            var c = from
-            var res: Option[(List[(String, Seq[Int])], Int)] = None
-            var poisoned = false
-            while (res.isEmpty && !poisoned && c < n && inWindow(c)) {
-              if (guard.exists(g => g.contiguity == Contiguity.Relaxed && g.test(events(c), ctxAt(c, acc))))
-                poisoned = true
-              else if (candOk(c) && guardAllows(c))
-                res = tryAt(c) match {
-                  case some @ Some(_) => some
-                  case None           => { c += 1; None }
-                }
-              else c += 1
-            }
-            res
-        }
-
-      // min == 0 (optional): greedy — only if taking the stage failed.
-      // A skipped FIRST stage keeps isFirst true downstream, so 'A* B'
-      // still matches a bare B anchored at the start index.
-      attempt.orElse {
-        if (st.quantifier.min == 0)
-          go(si + 1, from, prevEnd, guard, acc :+ (st.name -> Seq.empty[Int]))
-        else None
-      }
-    }
-
-    go(0, start, start - 1, None, Nil).map(r => buildMatch(events, pattern, start, r))
+  private def requireShape[T](pattern: Pattern[T]): Unit = {
+    require(pattern.stages.nonEmpty, "empty pattern")
+    require(!pattern.stages.head.negated, "pattern cannot begin with a negated stage")
   }
 
   /** Attach events to the index accumulator and re-attribute alternation
@@ -368,7 +222,7 @@ object NFA {
     * zip to recover the Stage.
     */
   private def buildMatch[T](events: IndexedSeq[T], pattern: Pattern[T], start: Int,
-      result: (List[(String, Seq[Int])], Int)): PatternMatch[T] = {
+      result: (Acc, Int)): PatternMatch[T] = {
     val (acc, endIdx) = result
     val positives = pattern.stages.filterNot(_.negated)
     val expanded = acc.zip(positives).flatMap { case ((sname, is), st) =>
@@ -403,95 +257,94 @@ object NFA {
       tsPerMs: Long = 1L,
       maxPerStart: Int = 10000
   ): Seq[PatternMatch[T]] = {
-    require(pattern.stages.nonEmpty, "empty pattern")
-    require(!pattern.stages.head.negated, "pattern cannot begin with a negated stage")
+    requireShape(pattern)
     pattern.stages.filter(_.combinations).foreach(st =>
       require(st.innerContiguity == Contiguity.Relaxed,
         "allowCombinations and consecutive() are mutually exclusive"))
     (0 until events.length).flatMap { start =>
-      enumFrom(events, ts, pattern, start, tsPerMs)
+      walk(events, ts, pattern, start, tsPerMs)
         .take(maxPerStart)
         .map(r => buildMatch(events, pattern, start, r))
         .toSeq
     }
   }
 
-  private def enumFrom[T](
+  /** The first non-empty iterator of `its`, or empty — pulls each
+    * candidate only as far as its first element.
+    */
+  private def firstNonEmpty[A](its: Iterator[Iterator[A]]): Iterator[A] = {
+    while (its.hasNext) {
+      val it = its.next()
+      if (it.hasNext) return it
+    }
+    Iterator.empty
+  }
+
+  /** Every viable assignment anchored at `start`, lazily and in
+    * preference order, as (per-stage event indices, end index). Event
+    * INDICES, not events, are accumulated so skip strategies and
+    * all-rows emission know each binding's position. Candidates are
+    * generated lazily too, so a first-match caller tests a relaxed
+    * stage's predicate only up to the first candidate that completes,
+    * not over the whole window.
+    */
+  private def walk[T](
       events: IndexedSeq[T],
       ts: T => Long,
       pattern: Pattern[T],
       start: Int,
       tsPerMs: Long
-  ): Iterator[(List[(String, Seq[Int])], Int)] = {
+  ): Iterator[(Acc, Int)] = {
     val n = events.length
-    val startTs = ts(events(start))
-    val deadline = pattern.withinMs.map(w => startTs + w * tsPerMs).getOrElse(Long.MaxValue)
+    val deadline = pattern.withinMs.map(w => ts(events(start)) + w * tsPerMs).getOrElse(Long.MaxValue)
     def inWindow(idx: Int): Boolean = ts(events(idx)) <= deadline
-    def ctxAt(i: Int, bound: List[(String, Seq[Int])]): MatchContext[T] =
-      new MatchContext(events, i, bound)
+    // in-window indices from `from` on (events are sorted by ts)
+    def window(from: Int): Iterator[Int] = Iterator.range(from, n).takeWhile(inWindow)
+    // iterative conditions see the events bound so far (`bound`)
+    def test(st: Stage[T], c: Int, bound: Acc): Boolean =
+      st.test(events(c), new MatchContext(events, c, bound))
+    def stops(st: Stage[T], c: Int): Boolean = st.until.exists(u => u(events(c)))
 
-    // contiguous-run prefixes, greedy order — identical to the
-    // single-match loop walk (iterative conditions see the run's
-    // earlier takes via acc, like the single-match walk)
-    def loopRuns(st: Stage[T], first: Int,
-        acc: List[(String, Seq[Int])]): Seq[Vector[Int]] = {
-      def stop(c: Int): Boolean = st.until.exists(u => u(events(c)))
-      val taken = mutable.ArrayBuffer[Int](first)
-      def ok(c: Int): Boolean = st.test(events(c), ctxAt(c, acc :+ (st.name -> taken.toVector)))
-      var continue = taken.length < st.quantifier.max
-      while (continue) {
-        val next: Option[Int] = st.innerContiguity match {
-          case Contiguity.Strict =>
-            val c = taken.last + 1
-            if (c < n && inWindow(c) && !stop(c) && ok(c)) Some(c) else None
-          case Contiguity.Relaxed =>
-            var c = taken.last + 1
-            while (c < n && inWindow(c) && !stop(c) && !ok(c)) c += 1
-            if (c < n && inWindow(c) && !stop(c) && ok(c)) Some(c) else None
-        }
-        next match {
-          case Some(c) => taken += c; continue = taken.length < st.quantifier.max
-          case None    => continue = false
+    /** Contiguous-run prefixes of a loop anchored at `first`, in
+      * preference order (greedy = longest first, reluctant = shortest
+      * first). The maximal run honors inner contiguity, the window, and
+      * the `until` stop condition (checked BEFORE `where`, as in the
+      * reference: an event matching both stops the loop); each
+      * continuation test sees the loop's earlier takes (reference
+      * parity: accepted events only).
+      */
+    def loopRuns(st: Stage[T], first: Int, acc: Acc): Iterator[Vector[Int]] = {
+      var taken = Vector(first)
+      var more = true
+      while (more && taken.length < st.quantifier.max) {
+        val scan = window(taken.last + 1).takeWhile(c => !stops(st, c))
+        (if (st.innerContiguity == Contiguity.Strict) scan.take(1) else scan)
+          .find(c => test(st, c, acc :+ (st.name -> taken))) match {
+          case Some(c) => taken :+= c
+          case None    => more = false
         }
       }
-      val walk = taken.toVector
-      val minTake = math.max(st.quantifier.min, 1)
-      val lengths = minTake to walk.length
-      (if (st.greedy) lengths.reverse else lengths).map(k => walk.take(k))
+      val lengths = math.max(st.quantifier.min, 1) to taken.length
+      (if (st.greedy) lengths.reverseIterator else lengths.iterator).map(taken.take)
     }
 
     // any in-order subsequence anchored at `first` (gaps over MATCHING
     // events allowed — the combinations semantics), enumerated LAZILY in
     // preference order: longest first, then lexicographically earliest
     // indices. Laziness matters: the subsequence space is 2^|tail|, and
-    // the caller's maxPerStart cap can only short-circuit an iterator —
-    // materializing the power set up front (the old shape) cost up to
-    // 2^20 Vector allocations per candidate anchor before any cap
-    // applied. Tail capped at `combinationTailCap` choice events
-    // (within() is the real-world bound); the truncation is surfaced,
-    // not silent.
-    def loopCombos(st: Stage[T], first: Int,
-        acc: List[(String, Seq[Int])]): Iterator[Vector[Int]] = {
+    // the caller's maxPerStart cap can only short-circuit an iterator.
+    // Tail capped at the pattern's combination cap (within() is the
+    // real-world bound); the truncation is surfaced, not silent.
+    def loopCombos(st: Stage[T], first: Int, acc: Acc): Iterator[Vector[Int]] = {
       // iterative conditions under combinations see the PRIOR stages'
       // bindings plus the loop anchor only — the subsequence being
       // assembled is not yet determined when each tail event is tested
-      def ok(c: Int): Boolean = st.test(events(c), ctxAt(c, acc :+ (st.name -> Vector(first))))
       val cap = pattern.comboTailCap
-      val (tail, truncated) = {
-        val out = Vector.newBuilder[Int]
-        var c = first + 1
-        var stopped = false
-        var found = 0
-        while (!stopped && c < n && inWindow(c)) {
-          if (st.until.exists(u => u(events(c)))) stopped = true
-          else {
-            if (ok(c)) { if (found < cap) out += c; found += 1 }
-            c += 1
-          }
-        }
-        (out.result(), found > cap)
-      }
-      if (truncated) noteTailTruncated(cap)
+      val scanned = window(first + 1).takeWhile(c => !stops(st, c))
+        .filter(c => test(st, c, acc :+ (st.name -> Vector(first))))
+        .take(cap + 1).toVector
+      if (scanned.length > cap) noteTailTruncated(cap)
+      val tail = scanned.take(cap)
       // k = events taken from the tail (the anchor is always taken)
       val hiK = math.min(tail.length, st.quantifier.max - 1)
       val loK = math.max(math.max(st.quantifier.min, 1) - 1, 0)
@@ -502,102 +355,77 @@ object NFA {
       }
     }
 
-    def guardAllows(guard: Option[Stage[T]], prevEnd: Int, c: Int,
-        acc: List[(String, Seq[Int])]): Boolean = guard match {
-      case None => true
-      case Some(g) =>
-        g.contiguity match {
-          case Contiguity.Strict =>
-            !(prevEnd + 1 < c && g.test(events(prevEnd + 1), ctxAt(prevEnd + 1, acc)))
-          case Contiguity.Relaxed =>
-            !(prevEnd + 1 until c).exists(j => g.test(events(j), ctxAt(j, acc)))
-        }
-    }
-
-    def go(si: Int, from: Int, prevEnd: Int, guard: Option[Stage[T]],
-        acc: List[(String, Seq[Int])]): Iterator[(List[(String, Seq[Int])], Int)] = {
+    /** Match stages from `si` onward; the next positive event is at
+      * index > `prevEnd` (the last matched positive event), and `guard`
+      * is the pending negated stage covering the gap before it.
+      */
+    def go(si: Int, prevEnd: Int, guard: Option[Stage[T]], acc: Acc): Iterator[(Acc, Int)] = {
+      val from = prevEnd + 1
       if (si == pattern.stages.length) {
-        if (prevEnd < start) Iterator.empty
-        else guard match {
-          case None => Iterator.single((acc, prevEnd))
-          case Some(g) =>
-            g.contiguity match {
-              case Contiguity.Strict =>
-                val c = prevEnd + 1
-                if (c < n && inWindow(c) && g.test(events(c), ctxAt(c, acc))) Iterator.empty
-                else Iterator.single((acc, prevEnd))
-              case Contiguity.Relaxed =>
-                if (pattern.withinMs.isEmpty)
-                  throw new IllegalArgumentException("trailing notFollowedBy requires within()")
-                val bad = (prevEnd + 1 until n)
-                  .exists(j => inWindow(j) && g.test(events(j), ctxAt(j, acc)))
-                if (bad) Iterator.empty else Iterator.single((acc, prevEnd))
-            }
+        // zero-width matches (every stage optional and skipped) are not
+        // produced — a match must consume at least one event. A trailing
+        // guard covers the immediate successor (notNext) or the window
+        // remainder (notFollowedBy).
+        val killed = prevEnd < start || guard.exists { g =>
+          if (g.contiguity == Contiguity.Strict) from < n && inWindow(from) && test(g, from, acc)
+          else if (pattern.withinMs.isEmpty)
+            throw new IllegalArgumentException("trailing notFollowedBy requires within()")
+          else window(from).exists(test(g, _, acc))
         }
+        if (killed) Iterator.empty else Iterator.single((acc, prevEnd))
       } else {
         val st = pattern.stages(si)
         if (st.negated) {
           require(guard.isEmpty, "consecutive negated stages are not supported")
-          go(si + 1, from, prevEnd, Some(st), acc)
+          go(si + 1, prevEnd, Some(st), acc)
         } else {
-          val isFirst = prevEnd < start
-          def takes(c: Int): Iterator[Vector[Int]] =
-            if (st.quantifier.max == 1) Iterator.single(Vector(c))
-            else if (st.combinations) loopCombos(st, c, acc)
-            else loopRuns(st, c, acc).iterator
-          def after(tk: Vector[Int]): Iterator[(List[(String, Seq[Int])], Int)] =
-            go(si + 1, tk.last + 1, tk.last, None, acc :+ (st.name -> tk))
-          // combinations enumerates every take; otherwise single-match
-          // semantics keep only the FIRST take with a completion
-          def expand(c: Int): Iterator[(List[(String, Seq[Int])], Int)] =
-            if (st.combinations) takes(c).flatMap(after)
-            else takes(c).map(tk => after(tk).toSeq)
-              .find(_.nonEmpty).map(_.iterator).getOrElse(Iterator.empty)
-          def candOk(c: Int): Boolean = st.test(events(c), ctxAt(c, acc))
-          val candidates: Seq[Int] =
-            if (isFirst) {
-              if (candOk(start) && inWindow(start)) Seq(start) else Nil
-            } else st.contiguity match {
-              case Contiguity.Strict =>
-                val c = prevEnd + 1
-                if (c < n && inWindow(c) && candOk(c) && guardAllows(guard, prevEnd, c, acc))
-                  Seq(c)
-                else Nil
-              case Contiguity.Relaxed =>
-                // a relaxed-guard hit poisons every later candidate
-                val buf = Vector.newBuilder[Int]
-                var c = from
-                var poisoned = false
-                while (!poisoned && c < n && inWindow(c)) {
-                  if (guard.exists(g => g.contiguity == Contiguity.Relaxed && g.test(events(c), ctxAt(c, acc))))
-                    poisoned = true
-                  else {
-                    if (candOk(c) && guardAllows(guard, prevEnd, c, acc)) buf += c
-                    c += 1
-                  }
-                }
-                buf.result()
+          // `c` as the stage's only candidate, if it exists and passes
+          def at(c: Int): Iterator[Int] =
+            if (c < n && inWindow(c) && test(st, c, acc)) Iterator.single(c) else Iterator.empty
+          val candidates: Iterator[Int] =
+            // no event consumed yet (covers optional skipped leading
+            // stages too): the first POSITIVE take must anchor at
+            // `start`, else the same match would also be found from a
+            // later start index
+            if (prevEnd < start) at(start)
+            else if (st.contiguity == Contiguity.Strict) at(from)
+            else guard match {
+              // a relaxed guard firing at a gap event poisons every later
+              // candidate
+              case Some(g) if g.contiguity == Contiguity.Relaxed =>
+                window(from).takeWhile(c => !test(g, c, acc)).filter(test(st, _, acc))
+              // a strict guard firing at `from` admits only `from`
+              case Some(g) if from < n && test(g, from, acc) => at(from)
+              case _ => window(from).filter(test(st, _, acc))
             }
-          val expansions: Iterator[(List[(String, Seq[Int])], Int)] =
-            if (st.anyMatch) candidates.iterator.flatMap(expand)
-            else {
-              // single-match stage: first candidate with ANY completion
-              // wins; all of ITS completions continue downstream
-              candidates.iterator.map(c => expand(c).toSeq)
-                .find(_.nonEmpty).map(_.iterator).getOrElse(Iterator.empty)
-            }
-          if (st.quantifier.min == 0) {
+          def after(tk: Vector[Int]): Iterator[(Acc, Int)] =
+            go(si + 1, tk.last, None, acc :+ (st.name -> tk))
+          // combinations enumerates every take; otherwise the FIRST take
+          // with a completion wins
+          def expand(c: Int): Iterator[(Acc, Int)] =
+            if (st.quantifier.max == 1) after(Vector(c))
+            else if (st.combinations) loopCombos(st, c, acc).flatMap(after)
+            else firstNonEmpty(loopRuns(st, c, acc).map(after))
+          // followedByAny branches on every candidate; otherwise the first
+          // candidate with ANY completion wins, and all of ITS completions
+          // continue downstream
+          val expansions =
+            if (st.anyMatch) candidates.flatMap(expand) else firstNonEmpty(candidates.map(expand))
+          if (st.quantifier.min > 0) expansions
+          else {
             // optional: branch into the skip too when enumerating this
-            // stage; otherwise mimic single-match (skip only on failure)
-            lazy val skip = go(si + 1, from, prevEnd, guard, acc :+ (st.name -> Seq.empty[Int]))
+            // stage; otherwise skip only if taking the stage failed. A
+            // skipped FIRST stage keeps the anchor rule downstream, so
+            // 'A* B' still matches a bare B anchored at the start index.
+            lazy val skip = go(si + 1, prevEnd, guard, acc :+ (st.name -> Seq.empty[Int]))
             if (st.anyMatch || st.combinations) expansions ++ skip
             else if (expansions.hasNext) expansions
             else skip
-          } else expansions
+          }
         }
       }
     }
 
-    go(0, start, start - 1, None, Nil)
+    go(0, start - 1, None, Nil)
   }
 }

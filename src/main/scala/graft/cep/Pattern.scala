@@ -7,15 +7,19 @@ import scala.concurrent.duration.Duration
   * optional/consecutive/within builder surface, and aftermatch/ skip
   * strategies).
   *
-  * Supported subset (documented gaps, SURVEY.md §2.11):
-  *  - quantifiers: once, optional, oneOrMore, times(n), times(from,to)
-  *    — greedy, first-viable-assignment (allowCombinations /
-  *    followedByAny enumeration is not supported);
+  * Supported subset (SURVEY.md §2.11):
+  *  - quantifiers: once, optional, oneOrMore, times(n), times(from,to),
+  *    timesOrMore(n), greedy or reluctant, with `until` stop conditions;
   *  - contiguity: strict (`next`), relaxed (`followedBy`), plus
-  *    `consecutive()` internal contiguity for loops;
+  *    `consecutive()` internal contiguity for loops; `followedByAny`
+  *    and `allowCombinations` branch under the enumerating entry point
+  *    [[NFA.findAllMatches]], while the first-match entry points
+  *    ([[NFA.findMatches]] and friends) keep one greedy-first match per
+  *    start;
   *  - negation: `notNext`, `notFollowedBy` (guard between positive
   *    stages; trailing notFollowedBy requires `within`);
-  *  - `within` windowing and NO_SKIP / SKIP_PAST_LAST after-match.
+  *  - `within` windowing and NO_SKIP / SKIP_PAST_LAST / SKIP_TO_FIRST /
+  *    SKIP_TO_LAST after-match.
   */
 object Quantifier {
   sealed trait Q { def min: Int; def max: Int }
@@ -95,9 +99,9 @@ final case class Stage[T](
     /** loop STOP condition (ref: Pattern.java:220 until()): once an event
       * matching it is reached, the loop accepts no further events. */
     until: Option[T => Boolean] = None,
-    /** greedy loops backtrack longest-first, reluctant ones shortest-first
-      * (this engine yields ONE match per start, so the flag picks WHICH —
-      * the reference enumerates alternatives instead; SURVEY §2.11). */
+    /** greedy loops backtrack longest-first, reluctant ones shortest-first:
+      * the flag orders the loop lengths the NFA walker tries, so it picks
+      * WHICH match a first-match entry point returns per start. */
     greedy: Boolean = true,
     /** alternation group `(A|B)` (ref: NFACompiler GroupPattern; SQL row
       * pattern alternation): the stage accepts an event iff SOME
@@ -108,12 +112,12 @@ final case class Stage[T](
     /** followedByAny (ref: Pattern.followedByAny / the kept "ignore"
       * edge on matching events): under [[NFA.findAllMatches]] EVERY
       * matching candidate branches, not just the first — one match per
-      * alternative binding. No effect under the single-match matcher. */
+      * alternative binding. Cleared by the first-match entry points. */
     anyMatch: Boolean = false,
     /** allowCombinations (ref: Quantifier.ALLOW_COMBINATIONS): under
       * [[NFA.findAllMatches]] a loop may take any in-order SUBSEQUENCE
       * of its matching events (gaps over matching events allowed), not
-      * only contiguous runs. No effect under the single-match matcher. */
+      * only contiguous runs. Cleared by the first-match entry points. */
     combinations: Boolean = false,
     /** ITERATIVE condition (ref: IterativeCondition.java:65-85): a
       * predicate over (event, [[MatchContext]]) — the context exposes

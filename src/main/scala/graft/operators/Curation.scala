@@ -470,7 +470,7 @@ object Curation {
     * bucketing as [[Sampling.dsirWeights]]).
     *
     * Scale shape — the SQL-native twin of MLlib's treeAggregate loop:
-    * the feature table is built once and staged ([[Funnel.stage]] —
+    * the feature table is built once and staged ([[Funnel.stageLazy]] —
     * every round reads it twice); per round the B-row model BROADCASTS
     * to a feature-table scan (z: one doc-keyed aggregate), the
     * gradient is one bucket-keyed aggregate with map-side partials,
@@ -675,7 +675,7 @@ object Curation {
     * original order.
     *
     * Scale shape: the line explode is linear in the corpus and the
-    * exploded table is a [[Funnel.stage]] boundary — THREE consumers
+    * exploded table is a [[Funnel.stageLazy]] boundary — THREE consumers
     * (the df aggregate, the strip anti-join, the per-doc roll-up) read
     * it, and without the boundary each would replay the full corpus
     * scan+explode. The frequent-line key set is sparse by construction
@@ -990,8 +990,7 @@ object Curation {
       .select(col(domainCol).as("domain"), col(lossCol).cast("double").as("loss"))
       .crossJoin(broadcast(losses.agg(min(col(lossCol)).cast("double").as("lmin"))))
       .select(col("domain"), col("loss"),
-        round(greatest(col("loss") - col("lmin"), lit(0.0)), 9).as("excess")),
-      "doremi_base")
+        round(greatest(col("loss") - col("lmin"), lit(0.0)), 9).as("excess")))
     // max(n,1): on an empty losses table the constant 1/n would be
     // folded to an ANSI divide-by-zero at planning time; with 1 the
     // result is still empty (every later step joins against base)
@@ -1008,10 +1007,9 @@ object Curation {
             .cast("long").as("un"))
       alpha = Funnel.stageLazy(up
         .crossJoin(broadcast(up.agg(sum("un").as("z"))))
-        .select(col("domain"), round(col("un").cast("double") / col("z"), 9).as("a")),
-        s"doremi_r$t")
+        .select(col("domain"), round(col("un").cast("double") / col("z"), 9).as("a")))
       acc = Funnel.stageLazy(acc.join(alpha, "domain")
-        .select(col("domain"), round(col("s") + col("a"), 9).as("s")), s"doremi_acc$t")
+        .select(col("domain"), round(col("s") + col("a"), 9).as("s")))
     }
     base.join(acc, "domain")
       .select(col("domain"), round(col("loss"), 6).as("loss"),

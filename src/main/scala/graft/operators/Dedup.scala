@@ -196,7 +196,7 @@ object Dedup {
     *
     * Each input crosses the scanner EXACTLY ONCE: the staged prep
     * frames below ARE the "fingerprint table + token index" the
-    * contract persists — without the [[Funnel.stage]] boundaries every
+    * contract persists — without the [[Funnel.stageLazy]] boundaries every
     * downstream reference (exact probe, df census, index probe, set
     * sizes, final classify) re-spliced the corpus scan and the physical
     * plan read the base parquet 11 times (round-7 Explain; PlanSpec now

@@ -17,12 +17,12 @@ import org.apache.spark.sql.DataFrame
   * once; DataSet plans share sources); in Spark, sharing across an
   * action-free composition must be DECLARED.
   *
-  * [[stage]] is that declaration: an eager materialization boundary.
+  * [[stageLazy]] is that declaration: a materialization boundary.
   * Downstream consumers — however many — read the materialized blocks,
   * so each stage's work runs exactly once. With a configured checkpoint
-  * directory the boundary is a reliable `checkpoint()` (at 100 TB a
-  * lost executor mid-funnel must not recompute three upstream stages);
-  * locally it is `localCheckpoint()` (executor block storage, no
+  * directory the boundary is a reliable checkpoint (at 100 TB a lost
+  * executor mid-funnel must not recompute three upstream stages);
+  * locally it is a local checkpoint (executor block storage, no
   * filesystem round-trip). Both truncate lineage, which also keeps
   * loop-shaped callers' plans from growing without bound — the same
   * discipline [[Components.minLabel]] and [[Iterations]] apply inside
@@ -36,42 +36,26 @@ import org.apache.spark.sql.DataFrame
   */
 object Funnel {
 
-  /** Materialize `df` as a pipeline-stage boundary; every downstream
-    * reference computes the stage exactly once. Reliable `checkpoint()`
-    * when the session has a checkpoint dir (cluster posture), eager
-    * `localCheckpoint()` otherwise. The materialization's wall time is
-    * booked per-label in [[graft.BenchMeters.stageTimed]] so composite
-    * pipelines can name which stage their time went to.
-    */
-  def stage(df: DataFrame, label: String = "stage"): DataFrame =
-    graft.BenchMeters.stageTimed(label) {
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    }
-
-  /** [[stage]] with LAZY materialization (r13 opt): the logical plan is
-    * truncated immediately (same lineage discipline), but on the
-    * localCheckpoint (local-posture) branch the blocks populate inside
+  /** Materialize `df` as a pipeline-stage boundary with LAZY
+    * materialization: the logical plan is truncated immediately, so
+    * every downstream reference computes the stage exactly once. With a
+    * checkpoint directory (cluster posture) the boundary is a reliable
+    * `checkpoint(eager = false)`, which still recomputes the full lineage
+    * in its own job after the first action (Spark's reliable checkpoint
+    * writes from lineage, not from cached blocks); locally it is
+    * `localCheckpoint(eager = false)`, whose blocks populate inside
     * whichever action consumes the stage first instead of a dedicated
-    * eager job. On the reliable-checkpoint branch the laziness only
-    * defers WHEN the checkpoint job runs: `checkpoint(eager = false)`
-    * still recomputes the full lineage in its own job after the first
-    * action (Spark's reliable checkpoint writes from lineage, not from
-    * cached blocks) — the job-count saving applies to the local branch
-    * only. The right boundary for LOOP-internal
-    * stages whose every consumer is a full-scan action (iterative graph
-    * rounds: each round's aggregate feeds the next round's join or a
-    * terminal count) — there the eager job is pure job-count floor,
-    * rounds × one scheduling round-trip of it. Keep the EAGER [[stage]]
-    * wherever a partial action (head/take/isEmpty/limit) may touch the
-    * stage first: a lazy boundary would then checkpoint only the
-    * computed partitions and re-derive the rest from the un-truncated
-    * RDD lineage on the next consumer.
+    * eager job. The right boundary for LOOP-internal stages whose every
+    * consumer is a full-scan action (iterative graph rounds: each
+    * round's aggregate feeds the next round's join or a terminal count)
+    * — there an eager job is pure job-count floor, rounds × one
+    * scheduling round-trip of it. Where a partial action
+    * (head/take/isEmpty/limit) may touch the stage first, materialize
+    * eagerly instead (`localCheckpoint()`): a lazy boundary would then
+    * checkpoint only the computed partitions and re-derive the rest
+    * from the un-truncated RDD lineage on the next consumer.
     */
-  def stageLazy(df: DataFrame, label: String = "stage"): DataFrame =
-    graft.BenchMeters.stageTimed(label) {
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
-    }
+  def stageLazy(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = false)
+    else df.localCheckpoint(eager = false)
 }

@@ -289,10 +289,10 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     val dir = Funnel.stageLazy(edges.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(edges.select(col("b").as("src"), col("a").as("dst")))
-      .distinct(), "ppr_edges")
+      .distinct())
     val degd = Funnel.stageLazy(
-      dir.join(dir.groupBy("src").agg(count(lit(1)).as("deg")), "src"), "ppr_deg")
-    val sd = Funnel.stageLazy(seeds.select(col("node"), lit(1L).as("sflag")), "ppr_seeds")
+      dir.join(dir.groupBy("src").agg(count(lit(1)).as("deg")), "src"))
+    val sd = Funnel.stageLazy(seeds.select(col("node"), lit(1L).as("sflag")))
     val ns = sd.agg(count(lit(1)).as("ns"))
     val init = sd.crossJoin(broadcast(ns))
       .select(col("node"), expr("1000000000L DIV ns").as("r9"))

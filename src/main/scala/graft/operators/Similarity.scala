@@ -266,8 +266,7 @@ object Similarity {
   def ivfSelfTopKAuto(corpus: DataFrame, k: Int, iters: Int = 2,
       nprobe: Int = 3): DataFrame = {
     val nlist = autoNlist(corpus.count(), k)
-    ivfSelfTopK(corpus, Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters),
-      "ivf_auto_centroids"), k, nprobe)
+    ivfSelfTopK(corpus, Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters)), k, nprobe)
   }
 
   /** Distributed k-means (Lloyd) over an embedding column — the
@@ -667,7 +666,7 @@ object Similarity {
     */
   def knnLabelProbe(corpus: DataFrame, k: Int, nlist: Int = 8,
       iters: Int = 2, nprobe: Int = 3): DataFrame = {
-    val cent = Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters), "knn_probe_centroids")
+    val cent = Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters))
     val knn = ivfSelfTopK(corpus, cent, k, nprobe)
     val votes = knn
       .join(corpus.select(col("vec_id").as("nid"), col("label").as("nlabel")), "nid")
@@ -711,20 +710,19 @@ object Similarity {
     */
   def knnLabelModularity(corpus: DataFrame, k: Int, nlist: Int = 8,
       iters: Int = 2, nprobe: Int = 3): DataFrame = {
-    val cent = Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters), "knn_mod_centroids")
+    val cent = Funnel.stageLazy(kmeansCentroids(corpus, nlist, iters))
     val knn = ivfSelfTopK(corpus, cent, k, nprobe)
     // undirected unique edges: symmetrize then keep a < b once
     val edges = Funnel.stageLazy(knn
       .select(least(col("qid"), col("nid")).as("a"), greatest(col("qid"), col("nid")).as("b"))
-      .distinct(), "knn_edges")
+      .distinct())
     val lbl = corpus.select(col("vec_id"), col("label"))
     // staged: referenced by the count, the within rollup, and both
     // degree legs — without the stage the label joins re-execute per
     // reference (r10 review)
     val el = Funnel.stageLazy(edges
       .join(lbl.select(col("vec_id").as("a"), col("label").as("la")), "a")
-      .join(lbl.select(col("vec_id").as("b"), col("label").as("lb")), "b"),
-      "knn_labeled_edges")
+      .join(lbl.select(col("vec_id").as("b"), col("label").as("lb")), "b"))
     val m = el.count() // bounded scalar: |E| of the kNN graph
     val within = el.filter(col("la") === col("lb"))
       .groupBy(col("la").as("label")).agg(count(lit(1)).as("e_within"))
@@ -1017,8 +1015,7 @@ object Similarity {
     def l2sq(a: Column, b: Column): Column =
       dot_double(a, a) - lit(2.0) * dot_double(a, b) + dot_double(b, b)
     var resid = Funnel.stageLazy(
-      corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("r")),
-      "rq_resid")
+      corpus.select(col("vec_id"), col("embedding").cast("array<double>").as("r")))
     var recon: DataFrame = null // (vec_id, rec)
     // one ordered-id collect covers every stage's seed block (ids never
     // change across stages — only the residual values do)
@@ -1044,7 +1041,7 @@ object Similarity {
           round(l2sq(col("r"), col("cv")), 6).as("d"))
         .groupBy("vec_id")
         .agg(min_by(col("cv"), struct(col("d"), col("cid"))).as("cv"),
-          first(col("r")).as("r")), s"rq_code$st")
+          first(col("r")).as("r")))
       resid = coded.select(col("vec_id"),
         zip_with(col("r"), col("cv"), (a, b) => a - b).as("r"))
       val stageRec = coded.select(col("vec_id"), col("cv"))
@@ -1194,7 +1191,7 @@ object Similarity {
       tau: Double
   ): DataFrame = {
     val cent = kmeansCentroids(corpus, k, iters)
-    val assigned = Funnel.stageLazy(semDeDupAssign(corpus, cent), "semdedup_assigned")
+    val assigned = Funnel.stageLazy(semDeDupAssign(corpus, cent))
     semDeDupSolve(assigned, tau)
   }
 

@@ -758,7 +758,7 @@ object AnalyticsQueries {
     * broadcast into a semi-join AHEAD of the tokenize+count work (the
     * per-(doc, word) aggregate is pair-volume-sized, never
     * corpus-sized), and the corpus itself never self-joins. Pairs and
-    * member docs are [[graft.operators.Funnel.stage]] boundaries —
+    * member docs are [[graft.operators.Funnel.stageLazy]] boundaries —
     * each is referenced twice downstream.
     */
   def docRouge(s: SparkSession, dir: String): DataFrame = {
@@ -4616,7 +4616,7 @@ object AnalyticsQueries {
   private[graft] def moodFromBins(bins: DataFrame): DataFrame = {
     val bt = bins.groupBy("b").agg(sum("c").as("ct"))
     val wp = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, 0)
-    val wi = Funnel.stageLazy(bt.withColumn("cum", sum("ct").over(wp)), "mood_bins")
+    val wi = Funnel.stageLazy(bt.withColumn("cum", sum("ct").over(wp)))
     val tot = wi.agg(sum("ct").cast("long").as("n"))
     val med = wi.crossJoin(broadcast(tot))
       .filter(col("cum") * 2 >= col("n") + 1)
@@ -4705,7 +4705,7 @@ object AnalyticsQueries {
     // staged: referenced by the per-group join AND the totals readout
     // (also keeps the bounded-domain global window inside the boundary)
     val wi = Funnel.stageLazy(
-      bt.withColumn("cumb", coalesce(sum("ct").over(wb), lit(0L))), "kw_bins")
+      bt.withColumn("cumb", coalesce(sum("ct").over(wb), lit(0L))))
     val grp = bins.join(wi, "b")
       .groupBy("event_type")
       .agg(sum("c").cast("long").as("nj"),
@@ -4795,7 +4795,7 @@ object AnalyticsQueries {
       .rowsBetween(Window.unboundedPreceding, -1)
     // staged: the pair self-join reads it twice, the group totals once
     val g = Funnel.stageLazy(
-      grid.withColumn("cum", coalesce(sum("c0").over(wg), lit(0L))), "jt_grid")
+      grid.withColumn("cum", coalesce(sum("c0").over(wg), lit(0L))))
     // 2·U_ij = Σ_b c_j(b)·(2·cum_i(<b) + c_i(b)): each later-group
     // observation at bin b pairs with the EARLIER group's mass strictly
     // below (concordant) plus half the same-bin ties

@@ -582,7 +582,7 @@ object PipelineQueries {
     * token totals.
     *
     * Each stage whose frame is referenced more than once downstream is
-    * a [[graft.operators.Funnel.stage]] boundary — without them, every
+    * a [[graft.operators.Funnel.stageLazy]] boundary — without them, every
     * re-reference duplicates the whole upstream lineage and the plan
     * scanned the corpus parquet 24 TIMES (the round-6 judge-verified
     * blow-up; ReuseExchange does not rescue cross-stage sharing). With
@@ -609,7 +609,7 @@ object PipelineQueries {
     val deduped = Funnel.stageLazy(docs
       .groupBy(md5(TextAnalysis.dedupFold(col("text"))).as("ffp"))
       .agg(min_by(struct(col("doc_id"), col("text")), col("doc_id")).as("r"))
-      .select(col("r.doc_id").as("doc_id"), col("r.text").as("text")), "dedup")
+      .select(col("r.doc_id").as("doc_id"), col("r.text").as("text")))
     val train = deduped.filter(col("doc_id") % 10 =!= 0)
     val eval = docs.filter(col("doc_id") % 10 === 0)
     val contaminated = Decontamination
@@ -617,10 +617,10 @@ object PipelineQueries {
       .select(col("train_id").as("doc_id")).distinct()
     // Stage 2 — decontaminated training slice (corpusBudget references
     // its input twice: bucket-offsets aggregate + join-back).
-    val clean = Funnel.stageLazy(train.join(contaminated, Seq("doc_id"), "left_anti"), "decontaminate")
+    val clean = Funnel.stageLazy(train.join(contaminated, Seq("doc_id"), "left_anti"))
     // Stage 3 — budget snapshot (referenced by the split AND the final
     // aggregate's n_tokens).
-    val kept = Funnel.stageLazy(Curation.corpusBudget(clean, budget = 20000L), "budget")
+    val kept = Funnel.stageLazy(Curation.corpusBudget(clean, budget = 20000L))
     // CORRELATED-HASH PITFALL: corpusBudget keeps the md5(doc_id)-
     // ascending prefix, so splitting on the SAME md5 draw would send
     // every kept doc to 'train' (u is small by construction). Chained
@@ -3534,7 +3534,7 @@ object PipelineQueries {
     * not comparable across languages.
     *
     * Scale shape: scoring is the LM explode + token-keyed join; the
-    * scored table is a [[graft.operators.Funnel.stage]] boundary
+    * scored table is a [[graft.operators.Funnel.stageLazy]] boundary
     * because BOTH the tertile aggregate and the bucket join reference
     * it (without the boundary the whole explode+join subtree runs
     * twice — the funnel blow-up class); the per-language threshold
@@ -4669,7 +4669,7 @@ object PipelineQueries {
     * source's budget AS DATA (never a driver round-trip) →
     * [[graft.operators.Curation.corpusBudgetByStratum]] prefix-sum cut
     * → per-source kept totals against the allocation. The allocation
-    * table is a [[graft.operators.Funnel.stage]] boundary: it feeds
+    * table is a [[graft.operators.Funnel.stageLazy]] boundary: it feeds
     * the budget join and the final report join.
     */
   def docMixture(s: SparkSession, dir: String): DataFrame = {
@@ -5661,7 +5661,7 @@ object PipelineQueries {
   /** Apply the [[docQualityTrain]] model back over the corpus — the
     * full train→score→keep loop in one declared pipeline (CCNet's
     * "train the LM filter on the target slice, score everything"):
-    * the trained 64-row model is a [[graft.operators.Funnel.stage]]
+    * the trained 64-row model is a [[graft.operators.Funnel.stageLazy]]
     * boundary and BROADCASTS onto a fresh corpus feature scan; the
     * apply side is one doc-keyed aggregate. The oracle extends the
     * training CTE chain with the scoring pass.

@@ -19,7 +19,5 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class Q(
     name: String,
     run: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** true if this entry should be timed by graft.Bench */
-    bench: Boolean = true
+    oracle: Option[String]
 )

@@ -1,8 +1,8 @@
 package graft.queries
 
 /** Central inventory of every verifiable operator query. SparkEntry
-  * derives `queries` / `oracleSql` from this list; graft.Bench times the
-  * `bench = true` subset.
+  * derives `queries` / `oracleSql` from this list; graft.Bench times
+  * every entry.
   */
 object Registry {
   def all: Seq[Q] =

@@ -48,34 +48,31 @@ object SourceQueries {
   /** The same connector as a MICRO-BATCH stream: offsets advance 4000
     * ids per trigger (the rate-limited replay shape), AvailableNow
     * drains the 10k range in three deterministic batches whose
-    * boundaries the oracle recomputes as id div 4000.
+    * boundaries the oracle recomputes as id div 4000. Each batch's
+    * aggregate lands in a [[graft.streaming.DeltaStore]] under its batch
+    * id, so a retried batch overwrites its own row instead of booking it
+    * twice, and the result is read back under the store's declared
+    * schema.
     */
   def customSourceStream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val resDir = sinkDir(dir, "custom_src_stream")
-    // append-mode result sink: clear any prior run's files first
-    val p = java.nio.file.Paths.get(resDir)
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
+    val store = graft.streaming.DeltaStore(sinkDir(dir, "custom_src_stream"),
+      s.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
+        StructType.fromDDL("batch BIGINT, cnt BIGINT, sum_id BIGINT")))
+    var last = -1L
     val q = s.readStream.format(classOf[graft.sources.SeqSource].getName)
       .option("rows", 10000).option("partitions", 8)
       .option("rowsPerBatch", 4000).load()
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        batch.agg(count(lit(1)).as("cnt"), sum("id").as("sum_id"))
-          .select(lit(batchId).as("batch"), col("cnt"), col("sum_id"))
-          .coalesce(1).write.mode("append").parquet(resDir)
-        ()
+        store.append(batchId, batch.agg(count(lit(1)).as("cnt"), sum("id").as("sum_id"))
+          .select(lit(batchId).as("batch"), col("cnt"), col("sum_id")).coalesce(1))
+        last = math.max(last, batchId)
       }
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    s.read.parquet(resDir)
-      .select(col("batch"), col("cnt").cast("long").as("cnt"),
-        col("sum_id").cast("long").as("sum_id"))
-      .orderBy("batch")
+    store.snapshot(last).orderBy("batch")
   }
 
   val customSourceStreamSql: String =

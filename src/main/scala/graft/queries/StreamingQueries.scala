@@ -2339,7 +2339,7 @@ object StreamingQueries {
       .withColumn("vec_id", row_number().over(
         org.apache.spark.sql.expressions.Window.orderBy("vec_id")).cast("long") - 1)
     val cent = graft.operators.Funnel.stageLazy(
-      Sim.kmeansCentroids(base, k = 8, iters = 2), "sknn_centroids")
+      Sim.kmeansCentroids(base, k = 8, iters = 2))
     def withCell(df: DataFrame): DataFrame =
       df.select(col("vec_id"), col("label"), col("embedding"),
           col("embedding").cast("array<double>").as("ed"))

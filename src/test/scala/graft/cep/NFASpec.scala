@@ -255,20 +255,98 @@ class NFASpec extends AnyFunSuite {
     intercept[IllegalArgumentException](full.combinationTailCap(0))
   }
 
+  /** A random flag-free pattern over labels A/B/C: 2–4 stages joined by
+    * next/followedBy/notNext/notFollowedBy, each positive stage with a
+    * random quantifier (once, optional, oneOrMore, times, times range),
+    * loops sometimes consecutive, reluctant or bounded by until, and a
+    * within() window on most patterns (always with a notFollowedBy,
+    * which requires one once it trails the match).
+    */
+  private def randomFlagFreePattern(rnd: scala.util.Random): Pattern[E] = {
+    def label(): String = Vector("A", "B", "C")(rnd.nextInt(3))
+    def quantify(p: Pattern[E]): Pattern[E] = {
+      val q = rnd.nextInt(6) match {
+        case 0 => p.optional
+        case 1 => p.oneOrMore
+        case 2 => p.times(1 + rnd.nextInt(2))
+        case 3 => p.times(rnd.nextInt(2), 1 + rnd.nextInt(3))
+        case _ => p
+      }
+      if (q.stages.last.quantifier.max == 1) q
+      else Seq[Pattern[E] => Pattern[E]](_.consecutive, _.reluctant, _.until(is(label())))
+        .foldLeft(q)((acc, f) => if (rnd.nextInt(4) == 0) f(acc) else acc)
+    }
+    var p = quantify(Pattern.begin[E]("s0").where(is(label())))
+    for (i <- 1 to 1 + rnd.nextInt(3)) {
+      val name = s"s$i"
+      // a guard only after a mandatory positive stage: skipping an
+      // optional one between two guards would chain them, which the
+      // matcher rejects
+      val guardable = !p.stages.last.negated && p.stages.last.quantifier.min > 0
+      rnd.nextInt(if (guardable) 4 else 2) match {
+        case 0 => p = quantify(p.next(name).where(is(label())))
+        case 1 => p = quantify(p.followedBy(name).where(is(label())))
+        case 2 => p = p.notNext(name).where(is(label()))
+        case _ => p = p.notFollowedBy(name).where(is(label()))
+      }
+    }
+    // skipped optional stages can leave any notFollowedBy trailing
+    val notFollowedBy = p.stages.exists(st => st.negated && st.contiguity == Contiguity.Relaxed)
+    if (notFollowedBy || rnd.nextInt(4) != 0) p.within((20 + 10 * rnd.nextInt(6)).millis)
+    else p
+  }
+
   test("enumerating matcher equals single matcher on flag-free patterns (randomized)") {
     val rnd = new scala.util.Random(11)
-    val alphabet = Vector("A", "B", "C")
-    for (_ <- 1 to 100) {
-      val events = seq(Vector.fill(8)(alphabet(rnd.nextInt(3))): _*)
-      val p = Pattern.begin[E]("a").where(is("A")).oneOrMore
-        .followedBy("b").where(is("B"))
-        .followedBy("c").where(is("C")).optional
+    var matched = 0
+    for (_ <- 1 to 400) {
+      val p = randomFlagFreePattern(rnd)
+      val events = seq(Vector.fill(4 + rnd.nextInt(9))(Vector("A", "B", "C")(rnd.nextInt(3))): _*)
       val single = NFA.findMatches(events, ts, p) // NoSkip default
       val all = NFA.findAllMatches(events, ts, p)
+      val shape = p.stages.map(st => (st.name, st.quantifier, st.contiguity, st.negated))
+      assert(all.groupBy(_.startIdx).values.forall(_.size <= 1),
+        s"several matches per start on ${events.map(_._2).mkString} for $shape")
       assert(all.map(m => (m.startIdx, m.endIdx, m.indices)) ===
         single.map(m => (m.startIdx, m.endIdx, m.indices)),
-        s"divergence on ${events.map(_._2).mkString}")
+        s"divergence on ${events.map(_._2).mkString} for $shape")
+      matched += all.size
     }
+    // the generator must exercise matching shapes, not only misses
+    // (seed 11: 605 matches)
+    assert(matched > 300)
+  }
+
+  test("relaxed candidates are generated lazily: a next-event B is tested O(1) times per start") {
+    // A B A B …: from each A the first B candidate is the very next
+    // event; an eager candidate list would test B over the whole wide
+    // window from every start (~n²/4 calls)
+    val n = 2000
+    val events = seq(Vector.tabulate(n)(i => if (i % 2 == 0) "A" else "B"): _*)
+    val bCalls = new java.util.concurrent.atomic.AtomicInteger
+    val p = Pattern.begin[E]("a").where(is("A"))
+      .followedBy("b").where { e => bCalls.incrementAndGet(); e._2 == "B" }
+      .within(1.hour)
+    def callsPerStart(run: => Seq[PatternMatch[E]]): Double = {
+      bCalls.set(0)
+      assert(run.length === n / 2)
+      bCalls.get.toDouble / n
+    }
+    assert(callsPerStart(NFA.findMatches(events, ts, p)) <= 2.0)
+    assert(callsPerStart(NFA.findAllMatches(events, ts, p)) <= 2.0)
+    assert(callsPerStart(NFA.findWithTimeouts(events, ts, p)._1) <= 2.0)
+  }
+
+  test("a trailing notFollowedBy scans the window, not the rest of the sequence") {
+    // events 10 ms apart, a 30 ms window: each A's trailing guard covers
+    // the next 3 events whatever the sequence length
+    val n = 4000
+    val events = seq(Vector.tabulate(n)(i => if (i % 4 == 0) "A" else "B"): _*)
+    val tsCalls = new java.util.concurrent.atomic.AtomicInteger
+    val countedTs: E => Long = e => { tsCalls.incrementAndGet(); e._1 }
+    val p = Pattern.begin[E]("a").where(is("A")).notFollowedBy("x").where(is("X")).within(30.millis)
+    assert(NFA.findMatches(events, countedTs, p).length === n / 4)
+    assert(tsCalls.get.toDouble / n <= 4.0)
   }
 
   test("three-stage funnel with tsPerMs scaling") {

@@ -123,8 +123,7 @@ class AutoNlistSpec extends SparkSpec {
       // base split = first 20 vectors in id ORDER (order-preserved under
       // any monotone remap, unlike a vec_id % k predicate)
       val base = all.orderBy("vec_id").limit(20)
-      val cent = Funnel.stage(
-        Similarity.kmeansCentroids(base, k = 4, iters = 2), "auto_sknn_cent")
+      val cent = Similarity.kmeansCentroids(base, k = 4, iters = 2).localCheckpoint()
       def withCell(d: DataFrame): DataFrame =
         d.withColumn("ed", col("embedding").cast("array<double>"))
           .join(broadcast(cent))
