@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * project (`SessionBuilderGuardSpec`): every entry point and every test
   * runs with the settings below.
   *
-  * Three settings remove fixed costs below Spark that every pass paid
+  * Four settings remove fixed costs below Spark that every pass paid
   * again (measured with `perfbench/run.py`, seed 1, 4-vCPU host):
   *  - `spark.sql.codegen.cache.maxEntries` = `CodegenCacheEntries`.
   *    Spark's default keeps 100 generated classes, LRU. One pass of the
@@ -35,6 +35,18 @@ import org.apache.spark.sql.SparkSession
   *    `exists` check and a plain rename, which is not atomic on every
   *    store (an object store copies), so a checkpoint directory must
   *    have a single writer. Each streaming query here owns its own.
+  *  - `spark.sql.artifact.isolation.enabled` = false. Spark's code cache
+  *    is keyed by (context class loader, code), and with isolation on
+  *    every session gets its own artifact state, for which the executor
+  *    builds a new `ExecutorClassLoader`. A streaming query runs its
+  *    batches on a clone of the session, a new session per run, so each
+  *    run of `q_stream_kmv` compiled the same 7 classes again under a
+  *    new loader. With isolation off every task runs under the
+  *    executor's one default loader: over sf0.001 passes of
+  *    `q_stream_kmv` and `q_stream_tclose`, byte-identical recompiles
+  *    per pass after the first went 7 / 7 / 7 → 0 / 0 / 0. The
+  *    trade-off: jars or files added to one session are visible to the
+  *    others. The engine adds none. Also a creation-time setting.
   */
 object GraftSession {
 
@@ -64,6 +76,7 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   def get(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

@@ -45,7 +45,13 @@ object Funnel {
     * writes from lineage, not from cached blocks); locally it is
     * `localCheckpoint(eager = false)`, whose blocks populate inside
     * whichever action consumes the stage first instead of a dedicated
-    * eager job. The right boundary for LOOP-internal stages whose every
+    * eager job. Only the plan's last stage waits, though: the call
+    * builds the stage's RDD, and under AQE that runs every map stage
+    * below the plan's exchanges at the call, one job each. A stage
+    * with an exchange therefore starts jobs before any action
+    * (`q_stream_kmv`'s ranking window over the final store version
+    * runs its single-partition shuffle at this call, not in the
+    * collect). The right boundary for LOOP-internal stages whose every
     * consumer is a full-scan action (iterative graph rounds: each
     * round's aggregate feeds the next round's join or a terminal count)
     * — there an eager job is pure job-count floor, rounds × one

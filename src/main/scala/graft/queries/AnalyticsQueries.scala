@@ -2524,10 +2524,11 @@ object AnalyticsQueries {
     * (activity decile-bucket, active-day bucket, favorite event type —
     * mode with count-desc/type-asc tie-break), and every equivalence
     * class smaller than k = 5 is flagged for suppression, since its
-    * members are re-identifiable by QI intersection. Shapes: one
-    * user-keyed aggregate + one per-(user, type) aggregate with a
-    * user-keyed row_number — two exchanges — then the class rollup is
-    * a bounded-domain aggregate (the QI grid). Output: one row per
+    * members are re-identifiable by QI intersection. Shapes: the
+    * per-(user, type) and per-(user, day) state aggregates, then ONE
+    * user-keyed aggregate over both (counts and the `min_by` favorite
+    * in one pass, one exchange), then the class rollup — a
+    * bounded-domain aggregate (the QI grid). Output: one row per
     * observed class, its size, and the suppression flag.
     */
   def evtKanon(s: SparkSession, dir: String): DataFrame = {
@@ -2540,22 +2541,25 @@ object AnalyticsQueries {
 
   /** The per-user (QI buckets, favorite type) frame over the two
     * ADDITIVE state tables — (user, type, cnt) sums and (user, day)
-    * presence — shared by the k-anonymity and l-diversity audits,
-    * batch and streaming alike.
+    * presence — shared by the k-anonymity, l-diversity and t-closeness
+    * audits, batch and streaming alike. ONE user-keyed aggregate over
+    * the union of both tables, so the user key is shuffled once: the
+    * event total, the day count, and the favorite type as `min_by` over
+    * `rank` = (−cnt, type), i.e. count-desc/type-asc (a day row has no
+    * rank, and `min_by` skips it). `tc` must hold one row per (user,
+    * type), so ranks never tie. A user must appear in both tables, as
+    * under an inner join of the two per-user aggregates.
     */
-  private[queries] def kanonProfiles(tc: DataFrame, days: DataFrame): DataFrame = {
-    val prof = tc.groupBy("user_id").agg(sum("cnt").as("n_events"))
-      .join(days.groupBy("user_id").agg(count(lit(1)).as("n_days")), "user_id")
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("cnt").desc, col("event_type").asc)
-    val fav = tc.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type").as("fav"))
-    prof.join(fav, "user_id")
+  private[queries] def kanonProfiles(tc: DataFrame, days: DataFrame): DataFrame =
+    tc.withColumn("rank", struct(-col("cnt"), col("event_type")))
+      .unionByName(days.select(col("user_id"), lit(1L).as("day")), allowMissingColumns = true)
+      .groupBy("user_id")
+      .agg(sum("cnt").as("n_events"), count("day").as("n_days"),
+        min_by(col("event_type"), col("rank")).as("fav"), count("rank").as("n_types"))
+      .filter(col("n_days") > 0 && col("n_types") > 0)
       .select(col("user_id"),
         least(floor(col("n_events") / 10), lit(9L)).as("activity_bucket"),
         floor(col("n_days") / 5).as("days_bucket"), col("fav"))
-  }
 
   /** The QI/class tail over the two ADDITIVE k-anonymity state tables
     * — shared by the batch query and the streaming maintainer's final
@@ -5129,8 +5133,8 @@ object AnalyticsQueries {
     * t = ½·Σ¦p−q¦, computed exactly as Σ¦c·N − C·n¦ in DECIMAL(38,0)
     * over the SAME two additive state tables as k-anonymity, with one
     * double division at emission. Missing classes matter (a group
-    * missing a globally-common class is skewed): the group×class frame
-    * is the cross of the two bounded dimension sets, zero-filled.
+    * missing a globally-common class is skewed): [[tcloseSolve]] adds
+    * their terms in closed form rather than zero-filling a frame.
     */
   def evtTclose(s: SparkSession, dir: String): DataFrame = {
     val base = Funnel.stageLazy(Tables.events(s, dir)
@@ -5140,24 +5144,30 @@ object AnalyticsQueries {
       base.select("user_id", "d").distinct())
   }
 
+  /** The t-closeness tail over the shared QI state tables. The QI ×
+    * class aggregate (`c` users per present (group, class) cell) is
+    * bounded by the QI grid times the class domain, so it runs in one
+    * partition, where the group size n, the class total cg and the
+    * grand total nt are window sums over it. The absent cells (c = 0)
+    * each add cg·n, and Σ over every class of cg·n is n·nt, so
+    * dev = Σ¦c·nt − cg·n¦ over all classes
+    *     = Σ over present cells of (¦c·nt − cg·n¦ − cg·n) + n·nt,
+    * exactly, in DECIMAL(38,0) — no group × class frame is built.
+    */
   private[queries] def tcloseSolve(tc: DataFrame, days: DataFrame): DataFrame = {
-    val d = "decimal(38,0)"
-    val prof = kanonProfiles(tc, days) // (user_id, activity_bucket, days_bucket, fav)
-    val grpCls = prof.groupBy("activity_bucket", "days_bucket", "fav")
-      .agg(count(lit(1)).as("c"))
-    val grp = grpCls.groupBy("activity_bucket", "days_bucket")
-      .agg(sum("c").cast("long").as("n"))
-    val cls = grpCls.groupBy("fav").agg(sum("c").cast("long").as("cg"))
-    val tot = cls.agg(sum("cg").cast("long").as("nt"))
-    val frame = grp.crossJoin(broadcast(cls)).crossJoin(broadcast(tot))
-      .join(grpCls, Seq("activity_bucket", "days_bucket", "fav"), "left")
-      .withColumn("c0", coalesce(col("c"), lit(0L)))
-    frame.groupBy("activity_bucket", "days_bucket", "n", "nt")
-      .agg(sum(abs(col("c0").cast(d) * col("nt") - col("cg").cast(d) * col("n"))).as("dev"))
+    def dec(c: String) = col(c).cast("decimal(38,0)")
+    kanonProfiles(tc, days)
+      .groupBy("activity_bucket", "days_bucket", "fav").agg(count(lit(1)).as("c"))
+      .coalesce(1)
+      .withColumn("n", sum("c").over(Window.partitionBy("activity_bucket", "days_bucket")))
+      .withColumn("cg", sum("c").over(Window.partitionBy("fav")))
+      .withColumn("nt", sum("c").over())
+      .groupBy("activity_bucket", "days_bucket", "n", "nt")
+      .agg(sum(abs(dec("c") * dec("nt") - dec("cg") * dec("n")) - dec("cg") * dec("n")).as("dev"))
       .select(col("activity_bucket").cast("long").as("activity_bucket"),
         col("days_bucket").cast("long").as("days_bucket"),
         col("n").as("n_users"),
-        (col("dev").cast("double")
+        ((col("dev") + dec("n") * dec("nt")).cast("double")
           / (col("n").cast("double") * col("nt").cast("double") * 2)).as("t_dist"))
       .withColumn("violates", col("t_dist") > 0.25)
       .orderBy("activity_bucket", "days_bucket")

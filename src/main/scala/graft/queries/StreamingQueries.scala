@@ -2253,32 +2253,40 @@ object StreamingQueries {
   /** k-anonymity audit maintained on a stream
     * ([[AnalyticsQueries.evtKanon]] as a continuous privacy gate —
     * the QI classes shift as profiles accrue, so the release gate
-    * must re-audit per increment): two ADDITIVE state tables — per
-    * (user, type) counts (key-sum merge) and per (user, day) presence
-    * (distinct-union merge) — and the end-of-stream audit runs the
-    * shared QI/class tail. Both stores are dimension-bounded
-    * (|users|·|types| and |users|·|days| rows); equality with the
-    * batch oracle is by construction.
+    * must re-audit per increment): the end-of-stream audit runs the
+    * shared QI/class tail over [[privacyAuditMaintained]]'s two
+    * additive state tables; equality with the batch oracle is by
+    * construction.
     */
-  def streamKanon(s: SparkSession, dir: String): DataFrame = {
-    import graft.queries.{AnalyticsQueries => AQ}
+  def streamKanon(s: SparkSession, dir: String): DataFrame =
+    privacyAuditMaintained(s, dir, "skanon")(graft.queries.AnalyticsQueries.kanonSolve)
+
+  /** The privacy-audit family's state, maintained on a stream: two
+    * ADDITIVE tables — per (user, type) counts (key-sum merge) and per
+    * (user, day) presence (distinct-union merge) — handed at end of
+    * stream to `tail`. Each batch feeds its raw rows to both merges
+    * (`cnt` = 1 per event, one (user, day) row per event), so each
+    * merge is one aggregate over prior ∪ batch: one shuffle per store
+    * per batch. Both stores are dimension-bounded (|users|·|types| and
+    * |users|·|days| rows).
+    */
+  private def privacyAuditMaintained(s: SparkSession, dir: String, tag: String)(
+      tail: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     val ev = Tables.events(s, dir)
     def tcOf(df: DataFrame): DataFrame =
-      df.select(col("user_id"), col("event_type"))
-        .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
+      df.select(col("user_id"), col("event_type"), lit(1L).as("cnt"))
     def daysOf(df: DataFrame): DataFrame =
-      df.select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val tcStore = VersionedStore(freshDir(dir, "skanon_tc"), tcOf(ev.limit(0)))
-    val dayStore = VersionedStore(freshDir(dir, "skanon_days"), daysOf(ev.limit(0)))
-    val lastId = replay(dir, "skanon", modSplit(ev, "event_id")) { (batch, batchId) =>
+      df.select(col("user_id"), to_date(col("ts")).as("d"))
+    val tcStore = VersionedStore(freshDir(dir, s"${tag}_tc"), tcOf(ev.limit(0)))
+    val dayStore = VersionedStore(freshDir(dir, s"${tag}_days"), daysOf(ev.limit(0)))
+    val lastId = replay(dir, tag, modSplit(ev, "event_id")) { (batch, batchId) =>
       overlap(
         () => tcStore.write(batchId,
           tcStore.sumMerge(batchId, tcOf(batch), "user_id", "event_type")),
         () => dayStore.write(batchId,
           dayStore.prior(batchId).unionByName(daysOf(batch)).distinct()))
     }
-    AQ.kanonSolve(tcStore.version(lastId),
-      dayStore.version(lastId))
+    tail(tcStore.version(lastId), dayStore.version(lastId))
   }
 
   /** Seasonal decomposition maintained on a stream
@@ -3106,30 +3114,12 @@ object StreamingQueries {
       graft.queries.AnalyticsQueries.pageHinkleyFromDaily)
 
   /** Streaming t-closeness audit: the two additive k-anonymity state
-    * tables ([[streamKanon]] — per-user type counts + day presence)
-    * maintained identically, with the t-closeness tail over the final
-    * state. One state posture serves the whole privacy-audit family.
+    * tables ([[privacyAuditMaintained]], shared with [[streamKanon]]),
+    * with the t-closeness tail over the final state. One state posture
+    * serves the whole privacy-audit family.
     */
-  def streamTclose(s: SparkSession, dir: String): DataFrame = {
-    import graft.queries.{AnalyticsQueries => AQ}
-    val ev = Tables.events(s, dir)
-    def tcOf(df: DataFrame): DataFrame =
-      df.select(col("user_id"), col("event_type"))
-        .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
-    def daysOf(df: DataFrame): DataFrame =
-      df.select(col("user_id"), to_date(col("ts")).as("d")).distinct()
-    val tcStore = VersionedStore(freshDir(dir, "stcl_tc"), tcOf(ev.limit(0)))
-    val dayStore = VersionedStore(freshDir(dir, "stcl_days"), daysOf(ev.limit(0)))
-    val lastId = replay(dir, "stcl", modSplit(ev, "event_id")) { (batch, batchId) =>
-      overlap(
-        () => tcStore.write(batchId,
-          tcStore.sumMerge(batchId, tcOf(batch), "user_id", "event_type")),
-        () => dayStore.write(batchId,
-          dayStore.prior(batchId).unionByName(daysOf(batch)).distinct()))
-    }
-    AQ.tcloseSolve(tcStore.version(lastId),
-      dayStore.version(lastId))
-  }
+  def streamTclose(s: SparkSession, dir: String): DataFrame =
+    privacyAuditMaintained(s, dir, "stcl")(graft.queries.AnalyticsQueries.tcloseSolve)
 
   /** Streaming isotonic-calibration maintainer: the (score, n,
     * positives) block table is additive (the deci-milli score domain is

@@ -51,7 +51,6 @@ class RegistryPlanAuditSpec extends SparkSpec {
     "q_evt_conformal", // 1-row fold quantile bounds + 1-row q-hat broadcast
     "q_evt_cms_change", // 1-row min-day scalar + 2-row window-id probe cross
     "q_evt_benford", // 1-row digit-total scalar broadcast
-    "q_evt_tclose", // bounded QI-group x class frame: |classes|-row + 1-row totals broadcast
     "q_evt_kruskal", // 1-row bin totals + 1-row H summary broadcast
     "q_evt_mood", // 1-row median/total/margin scalars broadcast
     "q_evt_jt", // 1-row JT statistic x 1-row moment table broadcast
